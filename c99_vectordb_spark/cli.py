@@ -31,6 +31,7 @@ from .functions.embed import build_embeddings
 from .model import DEFAULT_K, DEFAULT_LIMIT, DEFAULT_OFFSET, DIM, STATS_TOP_N
 from .operators import analyze as A, filters as Flt, mutate as M, recall as R
 from .sources import yaml_io
+from .sources.store import _swap_write
 
 
 def _log(verbose: bool, msg: str) -> None:
@@ -39,7 +40,7 @@ def _log(verbose: bool, msg: str) -> None:
 
 
 def _hint_native_migration(verbose: bool, yaml_path: str) -> None:
-    """-v hint once the YAML passes the distributed-parse threshold:
+    """-v hint once the YAML reaches DISTRIBUTED_PARSE_BYTES:
     the adapter path tracks the reference within ~1.6x (HEADTOHEAD.md)
     because it pays the YAML parse + JVM round-trips; the native
     parquet store measured 2.5-8x FASTER than the reference. Surfaced
@@ -419,21 +420,16 @@ def cmd_save(spark, base, save_path, verbose) -> int:
         records.unpersist()
 
 
-def _write_embeddings(records, emb_path: str, yaml_path: str | None = None) -> None:
-    emb = build_embeddings(records, dim=DIM)
-    tmp = f"{emb_path}.tmp"
-    emb.write.mode("overwrite").parquet(tmp)
-    if yaml_path is not None:
-        # record which YAML this index derives from (underscore-prefixed
-        # files are invisible to Spark's parquet reader); recall only
-        # trusts the index while the fingerprint still matches
-        sha = _yaml_sha256(yaml_path)
-        if sha:
-            with open(os.path.join(tmp, "_SOURCE_SHA256"), "w") as f:
-                f.write(sha)
-    if os.path.exists(emb_path):
-        shutil.rmtree(emb_path)
-    os.rename(tmp, emb_path)
+def _write_embeddings(records, emb_path: str, yaml_path: str) -> None:
+    # the index records which YAML it derives from (an underscore-
+    # prefixed sidecar, invisible to Spark's parquet reader, committed
+    # by the same rename as the table); recall only trusts the index
+    # while the fingerprint still matches
+    _swap_write(
+        build_embeddings(records, dim=DIM),
+        emb_path,
+        marker=("_SOURCE_SHA256", _yaml_sha256(yaml_path)),
+    )
 
 
 def cmd_reindex(spark, base, verbose) -> int:
@@ -442,21 +438,22 @@ def cmd_reindex(spark, base, verbose) -> int:
     records, rc = _load_records_or_error(spark, yaml_path)
     if rc:
         return rc
-    # parse the YAML once: without the cache every downstream action
-    # (count, compact, dump, embed) re-runs the distributed parse job
+    # scan the parsed rows once: without the cache every downstream
+    # action (count, compact, dump, embed) rebuilds them
     records = records.cache()
     try:
         n_before = records.count()
         compacted = M.compact(records).cache()
-        n_after = compacted.count()
+        # the try starts right after .cache(), so a failed count or
+        # write cannot leak the cached blocks
+        try:
+            n_after = compacted.count()
+            yaml_io.save_records_yaml(compacted.orderBy("id"), yaml_path)
+            _write_embeddings(compacted, emb_path, yaml_path)
+        finally:
+            compacted.unpersist()
     finally:
         records.unpersist()
-    try:
-        yaml_io.save_records_yaml(compacted.orderBy("id"), yaml_path)
-        _write_embeddings(compacted, emb_path, yaml_path)
-    finally:
-        # a failed write must not leak the cached blocks (r12 advice #2)
-        compacted.unpersist()
     print(f"Rebuilt index from {os.path.basename(yaml_path)}")
     print(f"Wrote index: {os.path.basename(emb_path)}")
     if n_before - n_after > 0:

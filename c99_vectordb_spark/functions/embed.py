@@ -106,7 +106,6 @@ def build_embeddings(
     id_col: str = "id",
     body_col: str = "body",
     dim: int = DIM,
-    use_udf: bool = True,
 ) -> DataFrame:
     """V5 — batch embedding/index build (memo_cli.py:272-285).
 
@@ -115,7 +114,7 @@ def build_embeddings(
     are co-partitioned with their source split, so a downstream
     write preserves partitioning with no exchange.
     """
-    emb = embed_pandas_udf(dim)(F.col(body_col)) if use_udf else embed_expr(F.col(body_col), dim)
+    emb = embed_pandas_udf(dim)(F.col(body_col))
     return (
         records.filter(~Ft.is_blank(F.col(body_col)))
         .select(F.col(id_col).alias("id"), emb.alias("vec"))

@@ -66,15 +66,6 @@ def token_hash(token: str) -> int:
     return h
 
 
-def token_bucket(token: str, dim: int = DIM) -> int:
-    return token_hash(token) % dim
-
-
-def token_sign(token: str) -> int:
-    """+1 for odd hash, -1 for even (reference: memo_cli.py:161-166)."""
-    return 1 if token_hash(token) & 1 else -1
-
-
 def embed_text_int(text: str, dim: int = DIM) -> list[int]:
     """Signed hashing-trick bag-of-words as exact integer counts.
 

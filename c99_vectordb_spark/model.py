@@ -88,16 +88,3 @@ EMBEDDINGS_SCHEMA = T.StructType(
         T.StructField("vec", T.ArrayType(T.LongType()), False),
     ]
 )
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)

@@ -74,26 +74,6 @@ def fingerprint_wide(c: Column) -> Column:
     return Ft.string_hash_wide(normalized_body(c))
 
 
-def fingerprint_udf():
-    """Arrow-batched fingerprint of the normalized text — identical
-    integers to :func:`fingerprint`, ~30x faster on long documents
-    (the expression form folds char-by-char through Catalyst).
-
-    Round-5 parity fix: the normalization is ASCII-\\s
-    (normalize_ws_ascii) because the expression/oracle twins use Java
-    regex / RE2 whose \\s never matches NBSP etc.; NULL ≡ '' -> fp 0
-    on every path (the DuckDB fold naturally yields 0)."""
-    from ..hashing import normalize_ws_ascii, token_hash
-
-    @F.pandas_udf("long")
-    def _fp(bodies: pd.Series) -> pd.Series:
-        return bodies.map(
-            lambda b: token_hash(normalize_ws_ascii(b or "").lower())
-        )
-
-    return _fp
-
-
 def fingerprint_wide_udf():
     """Arrow-batched ~60-bit fingerprint (hashing.fingerprint_wide):
     two independent folds packed into one BIGINT. This is the DEDUP

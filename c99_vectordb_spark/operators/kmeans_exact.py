@@ -416,17 +416,6 @@ def assign_cells_expr(q_col, cent: dict, k: int, dim: int):
     return F.array_min(F.array(*entries))["i"]
 
 
-def assign_cells(qdf: DataFrame, cent: dict, k: int, dim: int) -> DataFrame:
-    """(id, cell): nearest-centroid assignment under a single-space
-    model (ties -> smallest index, the kmeans_exact rule). r12: the
-    model is now a literal inside one map-only projection — the old
-    k-row broadcast crossJoin + argmin groupBy paid a full shuffle of
-    k rows per vector for what is a row-local computation."""
-    return qdf.select(
-        "id", assign_cells_expr(F.col("q"), cent, k, dim).alias("cell")
-    )
-
-
 def standing_semdedup_cells(
     emb: DataFrame,
     cent: dict,

@@ -1,4 +1,4 @@
-"""V1-V5, F11/F12, O1/O2 — vector search (the "join" of this engine).
+"""V1-V5, F12, O1/O2 — vector search (the "join" of this engine).
 
 Reference semantics (/root/reference/memo_cli.py:288-298,453-524 and
 SURVEY.md §2.4/§3.1): embed the query, rank ALL records by squared L2
@@ -155,10 +155,10 @@ def recall(
 
     Embeds ``query_text`` driver-side (one string), embeds records
     in-flight unless a prebuilt ``embeddings`` DataFrame (id, vec) is
-    given, applies the compiled metadata filter, the blank-body skip
-    (F12) and the reference's score floor (F11 — dead under L2, kept
-    for fidelity), and returns top-k (id, body, score) by normalized
-    squared-L2 ascending.
+    given, applies the compiled metadata filter and the blank-body skip
+    (F12), and returns top-k (id, body, score) by normalized squared-L2
+    ascending. The reference's score floor (F11, ``score < -0.9``) is
+    omitted: the score lies in [0, 4], so it never removes a row.
     """
     import math
 
@@ -191,7 +191,6 @@ def recall(
         base.select(F.col(id_col).alias("id"), F.col(body_col).alias("body"))
         .join(emb, "id")
         .withColumn("score", score)
-        .filter(F.col("score") >= -0.9)  # F11 (memo_cli.py:494-495; dead under L2)
         .select("id", "body", "score")
     )
     return scored.orderBy(F.asc("score"), F.asc("id")).limit(k)

@@ -9093,10 +9093,10 @@ def q_migrate_yaml_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 TB the collect died before the format did). Chunked dump_all
     concatenation is byte-compatible: explicit_start makes every
     document open with its own '---' marker, so N chunks emit the
-    same byte stream as one call. Everything after the file — parse
-    (distributed past 4 MB), store write, embedding build, and both
-    verification scans — is distributed. The single collected row is
-    the report."""
+    same byte stream as one call. The parse runs driver-side, as the
+    reference's does; everything after it — store write, embedding
+    build, and both verification scans — is distributed. The single
+    collected row is the report."""
     import shutil
     import tempfile
 

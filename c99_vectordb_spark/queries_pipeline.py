@@ -642,9 +642,7 @@ def q_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed query, exact integer-L2 re-rank to top-10. Every number is
     an exact int64, so the DuckDB twin (which RETRAINS the codebooks
     from scratch through the same spec in chained CTEs) hash-matches
-    bit-for-bit. The MLlib-trained float path stays in operators/pq.py
-    for production use; this query pins the trained-PQ SEMANTICS as a
-    specification. Scale: the model is a 1024-int broadcast; each
+    bit-for-bit. Scale: the model is a 1024-int broadcast; each
     Lloyd round is one scan + model-sized collect (the BPE-trainer
     contract); encode and ADC are map-only joins."""
     from .operators.kmeans_exact import (
@@ -725,8 +723,7 @@ ORDER BY exact_dist, vec_id LIMIT 10
 # ORDER is identical in Spark and DuckDB (left-associated sums of
 # (v-c)^2 over float->double-widened elements), so every score is
 # bit-identical across engines and the full top-k hash-matches.
-# Production keeps the trained path (operators/pq.py: map-only Arrow
-# encode); this query exists to pin the ADC semantics end to end.
+# This query exists to pin the ADC semantics end to end.
 
 _PQF_M, _PQF_DSUB, _PQF_KSUB = 8, 8, 16  # dim 64 = 8 subspaces x 8 dims
 

@@ -43,10 +43,3 @@ def get_spark(
     )
     return builder.getOrCreate()
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names=None):
-    """Load driver testdata parquet tables as a dict of DataFrames."""
-    from .model import TESTDATA_TABLES
-
-    names = names or TESTDATA_TABLES
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -114,12 +114,12 @@ def migrate_yaml_to_parquet(
     spark: SparkSession, yaml_path: str, base: str, dim: int | None = None
 ) -> "ParquetStore":
     """One-call migration of a reference-format YAML database into the
-    native parquet store: adapter-parse the YAML (distributed past the
-    4 MB threshold), persist records as the source of truth, and build
-    + persist the derived embedding index — after which every query a
-    reference user runs works against the native store at native
-    speed (HEADTOHEAD.md: 4.7-7.3x the reference; the YAML file
-    remains untouched as a rollback artifact).
+    native parquet store: adapter-parse the YAML, persist records as
+    the source of truth, and build + persist the derived embedding
+    index — after which every query a reference user runs works
+    against the native store at native speed (HEADTOHEAD.md: 4.7-7.3x
+    the reference; the YAML file remains untouched as a rollback
+    artifact).
 
     Parity is the caller's to verify and the registry's
     ``migrate_yaml_store`` query makes it an oracled artifact: record

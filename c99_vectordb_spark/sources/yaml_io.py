@@ -15,12 +15,9 @@ and get identical semantics:
 - save-batch parsing with the reference's validations
   (memo_cli.py:369-400)
 
-The parse is scale-adaptive: human-scale files (the reference loads
-them wholesale per command) parse driver-side with byte-identical
-error behavior; above DISTRIBUTED_PARSE_BYTES the per-document parse
-and validation distribute as a mapInPandas pass (duplicate-id check =
-one groupBy probe, densification = a range left-join) — property-
-tested equal to the driver path. A 100 TB corpus lives in Parquet.
+The parse runs driver-side, as the reference's does: the reference
+loads its YAML store wholesale per command, and error behavior stays
+byte-identical to it. Scale lives in the Parquet store (store.py).
 """
 
 from __future__ import annotations
@@ -172,8 +169,7 @@ def _parse_docs(text: str) -> list[dict]:
 
 
 def _validate_record_doc(doc) -> tuple[int, str, dict | None]:
-    """Single-record validation shared by the driver-side and
-    distributed parse paths (identical error messages)."""
+    """Single-record validation (the reference's error messages)."""
     if not isinstance(doc, dict):
         raise YamlValidationError("record must be a mapping")
     if "id" not in doc or "body" not in doc:
@@ -207,161 +203,17 @@ def parse_records_yaml(text: str) -> list[tuple]:
     return rows
 
 
-#: above this file size the YAML parse distributes across executors;
-#: below it the driver-side path keeps byte-identical error behavior
-#: for the CLI goldens at zero job overhead
+#: YAML stores at or above this size get the ``-v`` hint to migrate to
+#: the native parquet store (cli._hint_native_migration)
 DISTRIBUTED_PARSE_BYTES = 4 << 20
 
 
-def _split_is_canonical(text: str) -> bool:
-    """True iff the stream uses only the canonical separator forms the
-    textual splitter understands: bare ``---`` (trailing whitespace ok)
-    at column 0. A ``---`` with inline content (``--- {id: 1}``), a
-    ``...`` document-end marker, or a ``%YAML``/``%TAG`` directive are
-    all valid YAML that the line splitter would silently mis-split —
-    those streams fall back to the driver-side ``safe_load_all`` path
-    instead of diverging from it."""
-    for line in text.splitlines():
-        stripped = line.rstrip()
-        if stripped.startswith("---") and stripped != "---":
-            return False
-        if stripped == "..." or stripped.startswith("... "):
-            return False
-        if stripped.startswith("%"):
-            return False
-    return True
-
-
-def _split_yaml_docs(text: str) -> list[str]:
-    """Split a canonical multi-doc stream on explicit ``---`` separators
-    at column 0 (what both this adapter and the reference write; bodies
-    are literal block scalars, so an unindented ``---`` only occurs as
-    a document separator). Callers gate on :func:`_split_is_canonical`
-    first — non-canonical streams take the driver parse."""
-    docs, cur = [], []
-    for line in text.splitlines():
-        if line.rstrip() == "---":
-            if cur and any(s.strip() for s in cur):
-                docs.append("\n".join(cur))
-            cur = []
-        else:
-            cur.append(line)
-    if cur and any(s.strip() for s in cur):
-        docs.append("\n".join(cur))
-    return docs
-
-
-def _parse_records_distributed(spark: SparkSession, text: str) -> DataFrame:
-    """Distributed S1: per-document YAML parse + validation runs as a
-    mapInPandas pass over the split document stream; the two GLOBAL
-    validations (duplicate ids) and densification (gap ids -> blank
-    records) are a groupBy probe and a range left-join. Exactly
-    parse_records_yaml's semantics (property-tested equal), minus the
-    driver bottleneck."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql import functions as F, types as T
-
-    docs = _split_yaml_docs(text)
-    raw = spark.createDataFrame(
-        [(i, d) for i, d in enumerate(docs)],
-        T.StructType(
-            [
-                T.StructField("doc_idx", T.LongType()),
-                T.StructField("doc", T.StringType()),
-            ]
-        ),
-    ).repartition(max(2, spark.sparkContext.defaultParallelism))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_idx", T.LongType()),
-            T.StructField("err", T.StringType(), True),
-            *YAML_RECORDS_SCHEMA.fields,
-        ]
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_idx, doc_text in zip(pdf["doc_idx"], pdf["doc"]):
-                try:
-                    doc = fast_safe_load(doc_text)
-                    if doc is None:
-                        continue
-                    rid, body, metadata = _validate_record_doc(doc)
-                    yrepr, keys = _yaml_extras(metadata)
-                    rows.append(
-                        (
-                            int(doc_idx),
-                            None,
-                            *record_row(rid, body, metadata),
-                            yrepr,
-                            keys,
-                        )
-                    )
-                except (YamlValidationError, yaml.YAMLError) as e:
-                    rows.append(
-                        (int(doc_idx), str(e), -1, None, None, None, None, None, None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_idx",
-                    "err",
-                    *[f.name for f in YAML_RECORDS_SCHEMA.fields],
-                ],
-            )
-
-    parsed = (
-        raw.mapInPandas(parse, schema=out_schema)
-        .localCheckpoint(eager=True)
-    )
-    # first error in DOCUMENT order — matching the driver path, which
-    # raises on the earliest bad doc, not whichever partition won a race
-    bad = (
-        parsed.filter(F.col("err").isNotNull())
-        .orderBy("doc_idx")
-        .select("err")
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        raise YamlValidationError(bad[0]["err"])
-    parsed = parsed.drop("doc_idx")
-    dup = (
-        parsed.groupBy("id")
-        .count()
-        .filter(F.col("count") > 1)
-        .orderBy("id")
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise YamlValidationError(f"duplicate id {dup[0]['id']}")
-    n = parsed.agg(F.coalesce(F.max("id") + 1, F.lit(0))).collect()[0][0]
-    dense = (
-        spark.range(n)
-        .join(parsed.drop("err"), "id", "left")
-        .withColumn("body", F.coalesce("body", F.lit("")))
-        .select(*[f.name for f in YAML_RECORDS_SCHEMA.fields])
-    )
-    return dense
-
-
-def load_records_yaml(
-    spark: SparkSession,
-    path: str,
-    distributed_bytes: int = DISTRIBUTED_PARSE_BYTES,
-) -> DataFrame:
+def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
     try:
         with open(path, encoding="utf-8") as f:
             text = f.read()
     except FileNotFoundError:
         return spark.createDataFrame([], YAML_RECORDS_SCHEMA)
-    if len(text) >= distributed_bytes and _split_is_canonical(text):
-        return _parse_records_distributed(spark, text)
     return spark.createDataFrame(parse_records_yaml(text), YAML_RECORDS_SCHEMA)
 
 
@@ -467,8 +319,3 @@ def parse_save_batch_yaml(text: str) -> list[tuple]:
         rows.append((rid, body, scalars, tags, lists, yrepr, keys))
     return rows
 
-
-def load_save_batch_yaml(spark: SparkSession, path: str) -> DataFrame:
-    with open(path, encoding="utf-8") as f:
-        rows = parse_save_batch_yaml(f.read())
-    return spark.createDataFrame(rows, YAML_BATCH_SCHEMA)

@@ -242,6 +242,48 @@ def test_reindex_compacts_and_is_idempotent(spark, db_base, tmp_path):
     assert "Compacted" not in out2  # idempotent
 
 
+def test_reindex_swaps_in_fingerprinted_index(spark, db_base):
+    """reindex writes <base>.emb through the store's atomic swap: the
+    sidecar fingerprint is the SHA-256 of the YAML it rewrote, and no
+    temp or retired directory stays behind, also when an index is
+    replaced."""
+    import hashlib
+
+    for _ in range(2):  # the second run replaces an existing index
+        _, rc = _mine(spark, db_base, ["reindex"])
+        assert rc == 0
+        with open(db_base + ".yaml", "rb") as f:
+            want = hashlib.sha256(f.read()).hexdigest()
+        with open(os.path.join(db_base + ".emb", "_SOURCE_SHA256")) as f:
+            assert f.read() == want
+        parent, name = os.path.split(db_base)
+        assert sorted(os.listdir(parent)) == [f"{name}.emb", f"{name}.yaml"]
+
+
+def test_reindex_failed_count_releases_caches(spark, db_base, monkeypatch):
+    """A failure while counting the compacted frame must not leave
+    either cached frame behind. A cache whose first build fails has
+    persisted no RDD yet, but it stays registered with the session's
+    cache manager, and the next query over that plan would build it."""
+    from pyspark.sql import functions as F
+
+    compact = cli.M.compact
+
+    def failing_compact(records):
+        return compact(records).withColumn(
+            "body", F.raise_error(F.lit("boom from compact"))
+        )
+
+    monkeypatch.setattr(cli.M, "compact", failing_compact)
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()  # RDDs other tests persisted directly
+    with pytest.raises(Exception, match="boom from compact"):
+        cli.main(["-f", db_base, "reindex"])
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert persistent().size() == before
+
+
 def _capture_both(fn, *args) -> tuple[str, str, int]:
     out, err = io.StringIO(), io.StringIO()
     with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
@@ -307,7 +349,7 @@ def test_clean_messages(spark, db_base):
 
 
 def test_verbose_hints_native_migration_above_threshold(tmp_path, capsys):
-    """-v on a YAML at/above the distributed-parse threshold must emit
+    """-v on a YAML at/above yaml_io.DISTRIBUTED_PARSE_BYTES must emit
     the measured adapter-cost hint on stderr; small stores stay quiet."""
     from c99_vectordb_spark import cli
 

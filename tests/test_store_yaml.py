@@ -68,53 +68,9 @@ def test_yaml_gap_densification():
     assert rows[3][1] == "d"
 
 
-def _canon_rows(df):
-    return sorted(
-        (
-            r.id,
-            r.body,
-            tuple(sorted((r.metadata or {}).items())),
-            tuple(sorted((r.metadata_types or {}).items())),
-            tuple(sorted((k, tuple(v)) for k, v in (r.metadata_lists or {}).items())),
-            tuple(r.metadata_keys) if r.metadata_keys else None,
-        )
-        for r in df.collect()
-    )
-
-
-def test_distributed_yaml_parse_matches_driver(spark, tmp_path):
-    """The distributed S1 path (mapInPandas parse + groupBy dup probe +
-    range densify) must produce exactly the driver-side rows on a
-    corpus with gaps, unicode, blanks, and mixed metadata."""
-    import yaml as _y
-
-    from c99_vectordb_spark.fmt import LiteralStr
-
-    docs = []
-    for i in [0, 1, 2, 5, 6, 9, 12]:  # gaps at 3,4,7,8,10,11
-        md = None
-        if i % 3 == 0:
-            md = {"source": f"src{i}", "priority": i, "tags": ["a", "b"]}
-        elif i % 3 == 1:
-            md = {"note": "ünïcode välue", "score": i / 2.0}
-        body = "  " if i == 6 else f"bödy {i}\nsecond line {i}"
-        docs.append({"id": i, "metadata": md or {}, "body": LiteralStr(body)})
-    path = str(tmp_path / "db.yaml")
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(
-            _y.safe_dump_all(
-                docs, explicit_start=True, sort_keys=False, allow_unicode=True
-            )
-        )
-    driver = yaml_io.load_records_yaml(spark, path)
-    dist = yaml_io.load_records_yaml(spark, path, distributed_bytes=0)
-    assert _canon_rows(dist) == _canon_rows(driver)
-    assert dist.count() == 13  # densified through the gaps
-
-
 def test_distributed_yaml_parse_error_parity(spark, tmp_path):
-    """Duplicate-id and invalid-record errors must match the driver
-    path's messages on the distributed path too."""
+    """Duplicate-id and invalid-record errors from a YAML file on disk
+    carry the reference's messages through load_records_yaml."""
     import yaml as _y
 
     base = str(tmp_path / "dup.yaml")
@@ -131,7 +87,7 @@ def test_distributed_yaml_parse_error_parity(spark, tmp_path):
             )
         )
     with pytest.raises(yaml_io.YamlValidationError, match="duplicate id 1"):
-        yaml_io.load_records_yaml(spark, base, distributed_bytes=0)
+        yaml_io.load_records_yaml(spark, base)
 
     bad = str(tmp_path / "bad.yaml")
     with open(bad, "w", encoding="utf-8") as f:
@@ -143,39 +99,29 @@ def test_distributed_yaml_parse_error_parity(spark, tmp_path):
             )
         )
     with pytest.raises(yaml_io.YamlValidationError, match="non-negative int: -3"):
-        yaml_io.load_records_yaml(spark, bad, distributed_bytes=0)
+        yaml_io.load_records_yaml(spark, bad)
 
 
 def test_noncanonical_stream_falls_back_to_driver_parse(spark, tmp_path):
-    """Valid-YAML forms the line splitter can't segment ('---' with
-    inline content, '...' end markers, %YAML directives) must take the
-    driver safe_load_all path even above the distributed threshold —
-    same rows, no silent mis-split."""
+    """Valid-YAML stream forms beyond the canonical bare-'---' layout
+    ('---' with inline content, '...' end markers, %YAML directives)
+    load as the same records as their canonical spelling."""
     text = (
         "%YAML 1.1\n"
         "--- {id: 0, metadata: {}, body: flow style}\n"
         "...\n"
         "---\nid: 1\nmetadata: {}\nbody: block style\n"
     )
-    assert not yaml_io._split_is_canonical(text)
     path = str(tmp_path / "odd.yaml")
     with open(path, "w", encoding="utf-8") as f:
         f.write(text)
-    # distributed_bytes=0 would normally force the distributed path;
-    # the canonicality gate must reroute to the driver parse
-    dist = yaml_io.load_records_yaml(spark, path, distributed_bytes=0)
-    driver = yaml_io.load_records_yaml(spark, path)
-    assert _canon_rows(dist) == _canon_rows(driver)
-    assert dist.count() == 2
-
-    # trailing whitespace after '---' IS canonical (plain separator)
-    assert yaml_io._split_is_canonical("--- \nid: 0\nbody: a\n")
+    got = yaml_io.load_records_yaml(spark, path).orderBy("id").collect()
+    assert [(r.id, r.body) for r in got] == [(0, "flow style"), (1, "block style")]
 
 
 def test_distributed_error_is_first_in_document_order(spark, tmp_path):
-    """With several invalid docs the distributed path must raise the
-    FIRST one in document order (driver-path parity), not whichever
-    partition finished first."""
+    """With several invalid docs the load raises the FIRST one in
+    document order, as the reference does."""
     import yaml as _y
 
     docs = [{"id": 0, "metadata": {}, "body": "ok"}]
@@ -186,11 +132,8 @@ def test_distributed_error_is_first_in_document_order(spark, tmp_path):
     path = str(tmp_path / "manybad.yaml")
     with open(path, "w", encoding="utf-8") as f:
         f.write(_y.safe_dump_all(docs, explicit_start=True, sort_keys=False))
-    for _ in range(3):  # would be flaky if partition-order-dependent
-        with pytest.raises(
-            yaml_io.YamlValidationError, match="non-negative int: -7"
-        ):
-            yaml_io.load_records_yaml(spark, path, distributed_bytes=0)
+    with pytest.raises(yaml_io.YamlValidationError, match="non-negative int: -7"):
+        yaml_io.load_records_yaml(spark, path)
 
 
 def test_c_emitter_parity():
