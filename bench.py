@@ -633,6 +633,81 @@ def _chained_incremental(spark, sf_dir):
     return t_build, t_probe, t_verdicts
 
 
+def _min_each(names, runs):
+    """Per tuple slot, the min over runs, keyed by ``names``."""
+    timings = {n: round(min(r[i] for r in runs), 3) for i, n in enumerate(names)}
+    return timings, {}
+
+
+def _incremental_split(names, runs):
+    """The registry row is build + probe (its self-contained definition);
+    the per-batch costs from the prebuilt standing index go to
+    "amortized", not "queries", so the total and the gate's per-query
+    bests keep their standalone meaning (judge r10 ask #4)."""
+    amortized, _ = _min_each(
+        ("decontaminate_incremental_build",
+         "decontaminate_incremental_probe",
+         "decontaminate_incremental_verdicts"),
+        runs,
+    )
+    return {names[0]: round(min(r[0] + r[1] for r in runs), 3)}, amortized
+
+
+#: Families that share a stage, benched chained (computed once) the way
+#: pipelines run them: (chain fn, registry names, combine, max runs).
+#: ``combine(names, runs)`` returns (timings, amortized). Every chain
+#: runs twice (min-of-2); a family allowed more runs keeps sampling
+#: while its latest run is still >20% faster than the best before it —
+#: the graph chain's iterative-join kernels take 2-3 runs to finish
+#: codegen/JIT warmup (r6 recorded 4.67 s for a query whose warm time
+#: is 1.9 s — both samples were cold). A failure is recorded under the
+#: family's first name.
+CHAINED = (
+    (_chained_dedup,
+     ("dedup_components", "dedup_survivors", "dedup_cluster_sizes",
+      "dedup_cross_source"),
+     _min_each, 2),
+    (_chained_bpe,
+     ("corpus_bpe_merges", "corpus_bpe_encode", "corpus_fertility",
+      "corpus_vocab_sweep"),
+     _min_each, 2),
+    (_chained_graph, ("graph_pagerank", "graph_communities"), _min_each, 4),
+    (_chained_suffix,
+     ("dedup_suffix_array", "decontaminate_exact_overlap",
+      "decontaminate_span_scrub"),
+     _min_each, 2),
+    (_chained_kmeans, ("sim_ivf", "dedup_semdedup_pairs", "sim_ivfpq"),
+     _min_each, 2),
+    (_chained_incremental, ("decontaminate_incremental",),
+     _incremental_split, 2),
+)
+
+
+def run_chained(spark, sf_dir, families=CHAINED):
+    """Bench every chained family, fault-isolated per family: returns
+    (timings, amortized, errors)."""
+    timings: dict[str, float] = {}
+    amortized: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for fn, names, combine, max_runs in families:
+        try:
+            runs = [fn(spark, sf_dir) for _ in range(2)]
+            while len(runs) < max_runs and sum(runs[-1]) < 0.8 * min(
+                sum(r) for r in runs[:-1]
+            ):
+                runs.append(fn(spark, sf_dir))
+            t, a = combine(names, runs)
+            timings.update(t)
+            amortized.update(a)
+        except Exception as exc:  # noqa: BLE001 — keep benching the rest
+            errors[names[0]] = f"{type(exc).__name__}: {exc}"[:500]
+            print(
+                f"bench: {fn.__name__} FAILED: {errors[names[0]]}",
+                file=sys.stderr,
+            )
+    return timings, amortized, errors
+
+
 def main() -> None:
     from c99_vectordb_spark import queries_registry as QR
     from c99_vectordb_spark.session import get_spark
@@ -646,121 +721,7 @@ def main() -> None:
     # Fault-isolated per query: one broken query must not abort the run
     # or lose the other timings — errors are recorded per name and the
     # JSON line is always emitted (errored queries excluded from total).
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-
-    # the dedup report family shares its pairs/components stage — bench
-    # it chained (computed once, persisted) like the pipeline users
-    # run, min-of-2 like everything else
-    try:
-        runs = [_chained_dedup(spark, SF_DIR) for _ in range(2)]
-        for i, name in enumerate(
-            ("dedup_components", "dedup_survivors", "dedup_cluster_sizes",
-             "dedup_cross_source")
-        ):
-            timings[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["dedup_components"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            f"bench: chained dedup FAILED: {errors['dedup_components']}",
-            file=sys.stderr,
-        )
-
-    # the BPE family shares its training loop — same chained treatment
-    try:
-        runs = [_chained_bpe(spark, SF_DIR) for _ in range(2)]
-        for i, name in enumerate(
-            ("corpus_bpe_merges", "corpus_bpe_encode", "corpus_fertility",
-             "corpus_vocab_sweep")
-        ):
-            timings[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["corpus_bpe_merges"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            f"bench: chained BPE FAILED: {errors['corpus_bpe_merges']}",
-            file=sys.stderr,
-        )
-
-    # the graph family shares the edge-build join — same chained
-    # treatment (pagerank standalone meaning, communities incremental).
-    # The iterative-join kernels take 2-3 runs to finish codegen/JIT
-    # warmup (r6 recorded 4.67s for a query whose warm time is 1.9s —
-    # both samples were cold), so the disagreement rule below also
-    # applies here: keep sampling while the chain is still speeding
-    # up, max 4 runs.
-    try:
-        runs = [_chained_graph(spark, SF_DIR) for _ in range(2)]
-        while len(runs) < 4 and min(
-            r[0] + r[1] for r in runs[-1:]
-        ) < 0.8 * min(r[0] + r[1] for r in runs[:-1]):
-            runs.append(_chained_graph(spark, SF_DIR))
-        for i, name in enumerate(("graph_pagerank", "graph_communities")):
-            timings[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["graph_pagerank"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            f"bench: chained graph FAILED: {errors['graph_pagerank']}",
-            file=sys.stderr,
-        )
-
-    # the suffix-array tier shares its prefix-doubling level build —
-    # same chained treatment (dedup_suffix_array standalone meaning,
-    # exact_overlap / span_scrub incremental). The doubling kernels need
-    # the same JIT warmup as the graph chain, so min-of-2.
-    try:
-        runs = [_chained_suffix(spark, SF_DIR) for _ in range(2)]
-        for i, name in enumerate(
-            ("dedup_suffix_array", "decontaminate_exact_overlap",
-             "decontaminate_span_scrub")
-        ):
-            timings[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["dedup_suffix_array"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            f"bench: chained suffix FAILED: {errors['dedup_suffix_array']}",
-            file=sys.stderr,
-        )
-
-    # the trained-quantizer pair shares its k-means fit — chained like
-    # the dedup/BPE/graph/suffix families (sim_ivf standalone meaning,
-    # semdedup the pairing increment)
-    try:
-        runs = [_chained_kmeans(spark, SF_DIR) for _ in range(2)]
-        for i, name in enumerate(
-            ("sim_ivf", "dedup_semdedup_pairs", "sim_ivfpq")
-        ):
-            timings[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["sim_ivf"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            f"bench: chained kmeans FAILED: {errors['sim_ivf']}",
-            file=sys.stderr,
-        )
-
-    # the incremental tier amortizes its standing-index build across
-    # daily batches — price the registry row (build + probe, its
-    # self-contained definition) AND the amortized per-batch costs; the
-    # latter go in the "amortized" field, not "queries", so the total
-    # and the gate's per-query bests keep their standalone meaning
-    amortized: dict[str, float] = {}
-    try:
-        runs = [_chained_incremental(spark, SF_DIR) for _ in range(2)]
-        timings["decontaminate_incremental"] = round(
-            min(r[0] + r[1] for r in runs), 3
-        )
-        for i, name in enumerate(
-            ("decontaminate_incremental_build",
-             "decontaminate_incremental_probe",
-             "decontaminate_incremental_verdicts")
-        ):
-            amortized[name] = round(min(r[i] for r in runs), 3)
-    except Exception as exc:  # noqa: BLE001 — keep benching the rest
-        errors["decontaminate_incremental"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(
-            "bench: chained incremental FAILED: "
-            f"{errors['decontaminate_incremental']}",
-            file=sys.stderr,
-        )
+    timings, amortized, errors = run_chained(spark, SF_DIR)
 
     for name in HEADLINE:
         if name in timings:
@@ -802,10 +763,6 @@ def main() -> None:
         "__calib__": calibrate(),
     }
     if amortized:
-        # the incremental tier's per-batch costs from the prebuilt
-        # standing index — the path production runs daily (judge r10
-        # ask #4); excluded from "queries"/"value" so the registry
-        # row's all-in meaning and the gate's bests are unchanged
         out["amortized"] = amortized
     if errors:
         out["errors"] = errors

@@ -28,7 +28,14 @@ from pyspark.sql import SparkSession, functions as F
 
 from . import fmt
 from .functions.embed import build_embeddings
-from .model import DEFAULT_K, DEFAULT_LIMIT, DEFAULT_OFFSET, DIM, STATS_TOP_N
+from .model import (
+    DEFAULT_K,
+    DEFAULT_LIMIT,
+    DEFAULT_OFFSET,
+    DIM,
+    EMBEDDINGS_SCHEMA,
+    STATS_TOP_N,
+)
 from .operators import analyze as A, filters as Flt, mutate as M, recall as R
 from .sources import yaml_io
 from .sources.store import _swap_write
@@ -100,8 +107,6 @@ def _yaml_sha256(yaml_path: str) -> str | None:
 def _get_spark() -> SparkSession:
     from .session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
     return get_spark("memo-spark-cli")
 
 
@@ -133,23 +138,7 @@ def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     records, rc = _load_records_or_error(spark, yaml_path)
     if rc:
         return rc
-    # Use the prebuilt index when present AND still derived from this
-    # exact YAML (fingerprint check) — the reference's recall reads its
-    # .memo index rather than re-embedding the corpus per query
-    # (memo_cli.py:470-479). A missing/corrupt/stale dir self-heals to
-    # in-flight embedding (S3 semantics, memo_cli.py:251-262), which is
-    # how the M6 desync quirk stays impossible here. recall() joins
-    # embeddings back to the filtered record set, so results are
-    # identical either way.
-    embeddings = None
-    if os.path.isdir(emb_path):
-        try:
-            with open(os.path.join(emb_path, "_SOURCE_SHA256")) as f:
-                recorded = f.read().strip()
-            if recorded and recorded == _yaml_sha256(yaml_path):
-                embeddings = spark.read.parquet(emb_path)
-        except Exception:
-            embeddings = None
+    embeddings = _read_index(spark, emb_path, yaml_path)
     # R4: diagnostics to stderr only — stdout is the result contract
     # (memo_cli.py:38-40). The count is a full Spark job, so it only
     # runs when -v is actually on.
@@ -372,7 +361,7 @@ def cmd_save(spark, base, save_path, verbose) -> int:
     except (OSError, yaml_io.YamlValidationError) as e:
         print(f"Error: {e}", file=sys.stderr)
         return 1
-    batch = spark.createDataFrame(rows, yaml_io.YAML_BATCH_SCHEMA)
+    batch = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_BATCH_SCHEMA)
     records, rc = _load_records_or_error(spark, yaml_path)
     if rc:
         return rc
@@ -418,6 +407,26 @@ def cmd_save(spark, base, save_path, verbose) -> int:
         return 0
     finally:
         records.unpersist()
+
+
+def _read_index(spark, emb_path: str, yaml_path: str):
+    """The prebuilt index when present AND still derived from this exact
+    YAML (fingerprint check), else None — the reference's recall reads
+    its .memo index rather than re-embedding the corpus per query
+    (memo_cli.py:470-479). A missing or stale index self-heals to
+    in-flight embedding (S3 semantics, memo_cli.py:251-262), which is
+    how the M6 desync quirk stays impossible here. recall() joins
+    embeddings back to the filtered record set, so results are
+    identical either way. The read carries its schema: inferring it
+    would cost a Spark job."""
+    try:
+        with open(os.path.join(emb_path, "_SOURCE_SHA256")) as f:
+            recorded = f.read().strip()
+    except OSError:
+        return None
+    if not recorded or recorded != _yaml_sha256(yaml_path):
+        return None
+    return spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
 
 
 def _write_embeddings(records, emb_path: str, yaml_path: str) -> None:

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import text as Ft
 from ..model import HASH_MOD
+from ..session import spread
 
 #: affine MinHash parameters (deterministic, shared with the oracle SQL)
 MINHASH_K = 16
@@ -592,9 +593,7 @@ def minhash_lsh_pairs(
     # AQE's byte-sized coalescing cannot see the per-doc UDF cost;
     # measured at sf0.1: dedup_minhash_pairs 3.1 -> 2.0 s,
     # corpus_pipeline 6.5 -> 4.2 s warm)
-    df = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    )
+    df = spread(df, id_col)
     bands = minhash_bands(df, id_col, body_col, n)
     a = bands.alias("a")
     b = bands.alias("b")
@@ -1145,9 +1144,12 @@ def cosine_top_pairs(
     # runs the whole O(n^2) scan in 1-2 tasks (sf1 soak: the stage sat
     # on one straggler task for an hour; hash-spreading it uses every
     # core — the baseline stays quadratic by contract, but honestly so)
-    a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm(F.col(vec_col)).alias("na")
-    ).repartition(emb.sparkSession.sparkContext.defaultParallelism, F.col("id_a"))
+    a = spread(
+        emb.select(
+            F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), norm(F.col(vec_col)).alias("na")
+        ),
+        "id_a",
+    )
     b = emb.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), norm(F.col(vec_col)).alias("nb")
     )
@@ -1208,12 +1210,15 @@ def cosine_top_pairs_staged(
     from .similarity import _dot, _norm, vec_exact_collapse
 
     uniq, mem = vec_exact_collapse(emb, id_col=id_col, vec_col=vec_col)
-    a = uniq.select(
-        F.col("id").alias("ra"),
-        F.col("vec").alias("va"),
-        _norm(F.col("vec")).alias("na"),
-        F.col("kdup").alias("ka"),
-    ).repartition(uniq.sparkSession.sparkContext.defaultParallelism, F.col("ra"))
+    a = spread(
+        uniq.select(
+            F.col("id").alias("ra"),
+            F.col("vec").alias("va"),
+            _norm(F.col("vec")).alias("na"),
+            F.col("kdup").alias("ka"),
+        ),
+        "ra",
+    )
     b = uniq.select(
         F.col("id").alias("rb"),
         F.col("vec").alias("vb"),

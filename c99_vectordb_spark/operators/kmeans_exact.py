@@ -51,6 +51,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import spread
+
 P1, B1 = 1_000_000_007, 31
 P2, B2 = 998_244_353, 37
 
@@ -223,10 +225,7 @@ def kmeans_exact(
         # coarse training LOSES ~0.4 s to the extra checkpoint job —
         # hence opt-in, not default. At cluster scale this frame is
         # the training sample (docstring above), not the corpus.
-        spark_ctx = arr.sparkSession.sparkContext
-        reshaped = arr.repartition(
-            spark_ctx.defaultParallelism, F.col("id"), F.col("j")
-        ).localCheckpoint(eager=True)
+        reshaped = spread(arr, "id", "j").localCheckpoint(eager=True)
         arr = reshaped
     spark = arr.sparkSession
     h1 = _hash_over(F.col("vals"), B1, P1, dsub).alias("h1")
@@ -367,19 +366,23 @@ def duckdb_kmeans_cte(
     return ",\n".join(parts), f"{p}_c{iters}", f"{p}_codes"
 
 
+def quantize(vec_col):
+    """The ``quantized_dims`` integer quantization of one float-array
+    column, kept as an array for zip_with distance math."""
+    return F.transform(
+        vec_col,
+        lambda x: F.floor((x.cast("double") + F.lit(1.0)) * 127.5 + 0.5).cast(
+            "long"
+        ),
+    )
+
+
 def quantized_arr(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """(id, q array<long>): the same integer quantization as
-    ``quantized_dims``, kept as an array for zip_with distance math."""
+    """(id, q array<long>): :func:`quantize` over the embedding column."""
     return emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(
-                (x.cast("double") + F.lit(1.0)) * 127.5 + 0.5
-            ).cast("long"),
-        ).alias("q"),
+        F.col(id_col).alias("id"), quantize(F.col(vec_col)).alias("q")
     )
 
 
@@ -398,22 +401,39 @@ def _dist2(a, b):
     )
 
 
+def _cell_entries(q_col, cent: dict, k: int, dim: int):
+    """array<struct<dist, i>> of the row's distance to every literal
+    centroid; struct order is (dist, i), the spec's tie rule."""
+    return F.array(
+        *[
+            F.struct(
+                _dist2(
+                    q_col, F.array(*[F.lit(int(v)) for v in cv])
+                ).alias("dist"),
+                F.lit(int(i)).cast("long").alias("i"),
+            )
+            for i, cv in _cent_arrays(cent, k, dim)
+        ]
+    )
+
+
 def assign_cells_expr(q_col, cent: dict, k: int, dim: int):
     """Nearest-centroid cell id as a PURE ROW-LOCAL EXPRESSION — the
     single-space model rides as literals, so assignment is map-only
     (no crossJoin, no groupBy shuffle; whole-stage codegen). Exact
     integer L2, ties to the smallest index — bit-identical to the
     kmeans_exact assign rule."""
-    entries = [
-        F.struct(
-            _dist2(
-                q_col, F.array(*[F.lit(int(v)) for v in cv])
-            ).alias("dist"),
-            F.lit(int(i)).cast("long").alias("i"),
-        )
-        for i, cv in _cent_arrays(cent, k, dim)
-    ]
-    return F.array_min(F.array(*entries))["i"]
+    return F.array_min(_cell_entries(q_col, cent, k, dim))["i"]
+
+
+def probe_cells_expr(q_col, cent: dict, k: int, dim: int, nprobe: int):
+    """The ``nprobe`` nearest cell ids, nearest first, row-locally:
+    array_sort's struct order == the (dist, i) row_number order of a
+    crossJoin + window probe table, with zero shuffles."""
+    return F.transform(
+        F.slice(F.array_sort(_cell_entries(q_col, cent, k, dim)), 1, nprobe),
+        lambda s: s["i"],
+    )
 
 
 def standing_semdedup_cells(
@@ -493,28 +513,11 @@ def ivf_batch_topk(
     qd = quantized_arr(queries, id_col, vec_col).select(
         F.col("id").alias("qid"), "q"
     )
-    # nprobe nearest cells row-locally: sort the k (cdist, i) literal-
-    # centroid entries and slice — array_sort's struct order == the
-    # (cdist, i) row_number order, so the probe set is identical to the
-    # old crossJoin+window form with zero shuffles (r12)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist2(
-                    F.col("q"), F.array(*[F.lit(int(v)) for v in cv])
-                ).alias("cdist"),
-                F.lit(int(i)).cast("long").alias("i"),
-            )
-            for i, cv in _cent_arrays(cent, k, dim)
-        ]
-    )
     probed = qd.select(
         "qid",
-        F.explode(
-            F.transform(
-                F.slice(F.array_sort(entries), 1, nprobe), lambda s: s["i"]
-            )
-        ).alias("cell"),
+        F.explode(probe_cells_expr(F.col("q"), cent, k, dim, nprobe)).alias(
+            "cell"
+        ),
     )
     st = standing_cells.select(
         F.col("id").alias("sid"), "cell", F.col("q").alias("sq")

@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from ..session import spread
+
 #: multimodal record: payload + mime + per-modality metadata
 MEDIA_SCHEMA = T.StructType(
     [
@@ -861,21 +863,6 @@ def media_content_sum(media: DataFrame) -> DataFrame:
     return media.mapInPandas(gen, schema=CONTENT_SUM_SCHEMA)
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition to the cluster's parallelism before a HEAVY codec
-    stage (PNG deflate, JPEG DCT+Huffman).
-
-    Those stages are CPU-bound Python (ms per row); the shuffle moves
-    only document rows (KBs), which is noise next to the per-row codec
-    cost, and it also levels out payload-size skew. At toy scale this
-    matters even more: a single small parquet file arrives as ONE
-    split, which would serialize the whole Arrow stage (measured:
-    jpeg_pixel 10s -> ~2s at sf0.1). Cheap generators (BMP/WAV struct
-    packing) deliberately skip it — there the shuffle costs more than
-    the serial encode."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Synthesize a media table from the documents corpus (UTF-8 bytes
     as 'application/raw' payloads) — deterministic test/demo input
@@ -946,7 +933,11 @@ def media_from_documents_png(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
+    # CPU-bound Python codec (ms per row): spread the document rows
+    # first (measured: jpeg_pixel 10 s -> ~2 s at sf0.1). Cheap
+    # generators (BMP/WAV struct packing) skip it — there the shuffle
+    # costs more than the serial encode.
+    return spread(docs.select("doc_id", "text", "lang")).mapInPandas(
         gen, schema=MEDIA_SCHEMA
     )
 
@@ -974,7 +965,7 @@ def media_from_documents_gif(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
+    return spread(docs.select("doc_id", "text", "lang")).mapInPandas(
         gen, schema=MEDIA_SCHEMA
     )
 
@@ -1004,7 +995,7 @@ def media_from_documents_jpeg(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
+    return spread(docs.select("doc_id", "text", "lang")).mapInPandas(
         gen, schema=MEDIA_SCHEMA
     )
 
@@ -1043,7 +1034,7 @@ def media_from_documents_jpeg_real(docs: DataFrame) -> DataFrame:
                 rows, columns=["id", "modality", "mime", "payload", "meta"]
             )
 
-    return _fan_out(docs.select("doc_id", "text", "lang")).mapInPandas(
+    return spread(docs.select("doc_id", "text", "lang")).mapInPandas(
         gen, schema=MEDIA_SCHEMA
     )
 

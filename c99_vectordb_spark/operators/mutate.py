@@ -31,6 +31,7 @@ import yaml
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import text as Ft
+from .scalable_window import global_rank
 
 
 # ---------------------------------------------------------------------------
@@ -124,36 +125,16 @@ def assign_dense_ids(
 ) -> DataFrame:
     """Assign dense ids 0..n-1 (plus ``start``) in ``order_col`` order.
 
-    ``scalable=True`` uses the two-pass partition-offset scheme:
-    repartitionByRange on the order column (so partition i holds a
-    contiguous ordered slice), count rows per partition, broadcast the
-    cumulative offsets, then add a per-partition local row_number.
-    No single-task global window anywhere.
+    ``scalable=True`` uses :func:`scalable_window.global_rank`, the
+    two-pass range-partition scheme (per-partition counts -> broadcast
+    offsets -> local row_number), so no single-task global window
+    runs anywhere.
     """
     if not scalable:
         w = Window.orderBy(order_col)
         return df.withColumn(out_col, F.row_number().over(w) - 1 + start)
-    ranged = df.repartitionByRange(F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    counts = (
-        ranged.groupBy("_pid").count().orderBy("_pid").collect()
-    )  # tiny: one row per partition
-    offsets = {}
-    acc = start
-    for r in counts:
-        offsets[r._pid] = acc
-        acc += r["count"]
-    offmap = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    wlocal = Window.partitionBy("_pid").orderBy(order_col)
-    return (
-        ranged.withColumn(
-            out_col, offmap[F.col("_pid")] + F.row_number().over(wlocal) - 1
-        )
-        .drop("_pid")
-    )
+    ranked = global_rank(df, [F.col(order_col)], out_col)
+    return ranked.withColumn(out_col, F.col(out_col) - 1 + start)
 
 
 # ---------------------------------------------------------------------------

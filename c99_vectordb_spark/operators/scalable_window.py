@@ -17,7 +17,6 @@ scheme:
    executes with full parallelism.
 
 Same algebra as the global window, no single-task stage anywhere.
-The pattern generalizes ``mutate.assign_dense_ids(scalable=True)``.
 
 Checkpoint footprint: ``pre_range`` eagerly ``localCheckpoint``s the
 range-shuffled dataset to executor-local block storage. That is one

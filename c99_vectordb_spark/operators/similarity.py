@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..session import spread
+
 
 def hyperplane(p: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane p (shared with oracles —
@@ -54,18 +56,15 @@ def _norm(vec: Column) -> Column:
     return F.sqrt(_dot(vec, vec))
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Hash-spread a compute-dense corpus scan. A small single-file
-    parquet table arrives as ONE input split, and everything map-side
-    downstream (per-row 64-dim dot products against every broadcast
-    query) then runs single-threaded — measured: each exact-KNN ground
-    truth in sim_recall_report was a sequential 1-task 1.4 s stage.
-    The shuffle moves only corpus rows (KBs); the scoring gains the
-    full cluster. Explicit partition count, keyed on the id column:
-    byte-sized AQE coalescing cannot see compute density, and a keyed
-    spread avoids round-robin's sort-before-repartition."""
-    return df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(key)
+def sq_l2(vec: Column, qvec: Column) -> Column:
+    """Squared L2 between a float-array column and a double-array
+    column, folded left to right in double arithmetic."""
+    return F.aggregate(
+        F.zip_with(
+            vec, qvec, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
+        ),
+        F.lit(0.0),
+        lambda a, v: a + v,
     )
 
 
@@ -92,7 +91,7 @@ def topk_neighbors(
     # Same expression, same doubles, so scores (and oracle hashes) are
     # bit-identical; this is pure common-subexpression hoisting.
     q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("qvec"))
-    e = _spread(
+    e = spread(
         emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")), "id"
     )
     if metric == "cosine":
@@ -106,10 +105,7 @@ def topk_neighbors(
         )
         order = [F.desc("score"), F.asc("id")]
     elif metric == "sq_l2":
-        diff = F.zip_with(
-            F.col("vec"), F.col("qvec"), lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-        )
-        score = F.round(F.aggregate(diff, F.lit(0.0), lambda a, v: a + v), 4)
+        score = F.round(sq_l2(F.col("vec"), F.col("qvec")), 4)
         order = [F.asc("score"), F.asc("id")]
     else:
         raise ValueError(f"unknown metric {metric!r}")
@@ -172,7 +168,7 @@ def lsh_bucketed_neighbors(
     # bucket is dense on both sides and each corpus row is scored many
     # times, so the hoist wins. Same doubles either way — placement
     # only changes WHERE the fold runs, not its value.
-    e = _spread(emb, id_col).select(
+    e = spread(emb, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         bucket_id(F.col(vec_col), dim, n_planes).alias("bucket"),
@@ -396,7 +392,7 @@ def sq_topk_batch(
     Self-matches (id == qid) are excluded like the exact-KNN tiers.
     Output (qid, id, qdist), qdist ASC, ties by id ASC.
     """
-    coded = sq_quantize(_spread(df, id_col), id_col, vec_col)
+    coded = sq_quantize(spread(df, id_col), id_col, vec_col)
     qcoded = queries.selectExpr(
         f"{qid_col} AS qid", f"{sq_code_expr(qvec_col)} AS qcodes"
     )
@@ -448,7 +444,7 @@ def range_search_report(
     ).withColumn("qnorm", _norm(F.col("qvec"))).withColumn(
         "qbucket", bucket_id(F.col("qvec"), dim, n_planes)
     )
-    e = _spread(emb, id_col).select(
+    e = spread(emb, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         bucket_id(F.col(vec_col), dim, n_planes).alias("bucket"),

@@ -18,7 +18,8 @@ from .operators.dedup import (
     MINHASH_K,
     SIMHASH_BITS,
 )
-from .operators.similarity import hyperplane
+from .operators.similarity import hyperplane, sq_l2
+from .session import spread
 
 def _norm_expr(col_sql: str = "text") -> str:
     """Whitespace-collapse + lowercase normalization over an arbitrary
@@ -1186,12 +1187,9 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cd = "array(" + ", ".join(_sqs.format(a="_e", b=_dl(c)) for c in coarse) + ")"
     # spread the single-split scan first: the per-row 8x64-dim coarse
-    # distances below are compute-dense (similarity._spread rationale)
+    # distances below are compute-dense (session.spread rationale)
     easn = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .repartition(
-            spark.sparkContext.defaultParallelism, F.col("vec_id")
-        )
+        spread(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), "vec_id")
         .selectExpr(
             "vec_id AS id",
             "embedding",
@@ -2657,6 +2655,9 @@ LEFT JOIN kn k ON k.doc_id = d.doc_id
 
 
 _IVF_K, _IVF_NPROBE, _IVF_ITERS = 8, 3, 4
+#: sim_ivf_batch probes every cell, so its answer is the same for any
+#: centroids: it uses the seeding alone, as each Lloyd round costs a job
+_IVF_BATCH_ITERS = 0
 
 
 def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2669,9 +2670,8 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest cells, scoring candidates by exact integer squared L2 on
     the quantized vectors — top-5 per query by (score, id), self
     excluded. All int64, so the DuckDB twin retrains the quantizer
-    from scratch through the same spec and hash-matches. The MLlib
-    float path stays in operators/ivf.py for production; probe
-    recall vs exact and batch==loop parity remain in tests/test_ivf.py.
+    from scratch through the same spec and hash-matches. Its full-probe
+    sibling sim_ivf_batch serves float KNN through the same cells.
     Scale: posting lists are the cell equi-join (cluster-pruned scan —
     the IVF point); the model is a 512-int broadcast. r12: training
     runs on the map-only array form (space_arrays — every Lloyd round
@@ -2703,33 +2703,17 @@ def _ivf_probe(spark, qarr, cent) -> DataFrame:
     arrays."""
     from pyspark.sql import Window
 
-    from .operators.kmeans_exact import _cent_arrays, _dist2, assign_cells_expr
+    from .operators.kmeans_exact import _dist2, assign_cells_expr, probe_cells_expr
 
     cell_expr = assign_cells_expr(F.col("q"), cent, _IVF_K, 64)
     qd = qarr.filter(F.col("id") < 3).select(
         F.col("id").alias("qid"), F.col("q").alias("qv")
     )
-    # nprobe nearest cells per query, row-locally (sorted literal
-    # entries == the (cdist, i) row_number order of the old window)
-    entries = F.array(
-        *[
-            F.struct(
-                _dist2(
-                    F.col("qv"), F.array(*[F.lit(int(v)) for v in cv])
-                ).alias("cdist"),
-                F.lit(int(i)).cast("long").alias("i"),
-            )
-            for i, cv in _cent_arrays(cent, _IVF_K, 64)
-        ]
-    )
     probed = qd.select(
         "qid",
         "qv",
         F.explode(
-            F.transform(
-                F.slice(F.array_sort(entries), 1, _IVF_NPROBE),
-                lambda s: s["i"],
-            )
+            probe_cells_expr(F.col("qv"), cent, _IVF_K, 64, _IVF_NPROBE)
         ).alias("cell"),
     )
     cells = qarr.select("id", cell_expr.alias("cell"), "q")
@@ -3002,12 +2986,14 @@ def _semdedup_pairs_from(emb: DataFrame, cent: dict) -> DataFrame:
     # the cluster BEFORE the join — cells are broadcast, so pairs of
     # ONE hot cell also spread over every task (the SemDeDup hot-cell
     # failure mode): compute parallelism is bounded by rows, not cells.
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    a = cells.select(
-        "cell",
-        F.col("id").alias("id_a"),
-        *[F.col(f"s{j}").alias(f"sa{j}") for j in range(8)],
-    ).repartition(par, F.col("id_a"))
+    a = spread(
+        cells.select(
+            "cell",
+            F.col("id").alias("id_a"),
+            *[F.col(f"s{j}").alias(f"sa{j}") for j in range(8)],
+        ),
+        "id_a",
+    )
     b = cells.select(
         "cell",
         F.col("id").alias("id_b"),
@@ -3110,20 +3096,51 @@ SELECT qid, id, score FROM (
 
 def q_sim_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch IVF at full probe (nprobe = n_centroids): exact KNN served
-    through the IVF plan — equi-join of the probe table against the
-    cluster-partitioned index, per-qid top-k window. Full probe makes
-    the result centroid-independent, so this HAS an exact DuckDB
-    oracle: brute-force squared-L2 top-k."""
-    from .operators.ivf import build_ivf, ivf_search_batch
+    through the IVF plan. The posting lists are kmeans_exact cells (the
+    8 cells sim_ivf trains, at _IVF_BATCH_ITERS rounds); the probe table
+    (qid, qvec, cell) comes from a row-local nearest-cells ranking, one
+    broadcast equi-join on cell fetches the candidates, and a per-qid
+    window keeps the float squared-L2 top 5. Full probe makes the
+    result centroid-independent, so this HAS an exact DuckDB oracle:
+    brute-force squared-L2 top-k. Plan size is O(1) in the number of
+    queries (no per-query union branches)."""
+    from .operators.kmeans_exact import (
+        assign_cells_expr,
+        kmeans_exact,
+        probe_cells_expr,
+        quantize,
+        quantized_arr,
+        space_arrays,
+    )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cent, _codes = kmeans_exact(
+        None,
+        k=_IVF_K,
+        dsub=64,
+        iters=_IVF_BATCH_ITERS,
+        arr=space_arrays(quantized_arr(emb), 64),
     )
-    index = build_ivf(emb, n_centroids=8, seed=42)
-    queries = emb.filter(F.col("id") < 3).select(
-        F.col("id").alias("qid"), F.col("vec").cast("array<double>").alias("qvec")
+    q = quantize(F.col("embedding"))
+    index = emb.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        assign_cells_expr(q, cent, _IVF_K, 64).alias("cell"),
     )
-    return ivf_search_batch(index, queries, k=5, nprobe=8)
+    probes = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").cast("array<double>").alias("qvec"),
+        F.explode(probe_cells_expr(q, cent, _IVF_K, 64, _IVF_K)).alias("cell"),
+    )
+    w = Window.partitionBy("qid").orderBy(F.asc("score"), F.asc("id"))
+    return (
+        index.join(F.broadcast(probes), "cell")
+        .filter(F.col("id") != F.col("qid"))
+        .withColumn("score", F.round(sq_l2(F.col("vec"), F.col("qvec")), 4))
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= 5)
+        .select("qid", "id", "score")
+    )
 
 
 _DUCK_SQL2 = (
@@ -5619,10 +5636,9 @@ def q_orders_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame is a few MB — AQE folded it to ONE task and the 64n
     # md5+conv evaluations ran single-threaded (measured 11s -> the
     # whole query is compute-bound after the fan-out, which byte-sized
-    # coalescing cannot see). defaultParallelism scales with the
-    # cluster instead of pinning a local constant.
-    n_parts = spark.sparkContext.defaultParallelism
-    rep = base.repartition(n_parts, F.col("k")).select(
+    # coalescing cannot see). The count scales with the cluster
+    # instead of pinning a local constant.
+    rep = spread(base, "k").select(
         "k", "v", F.explode(F.sequence(F.lit(0), F.lit(BOOT_B - 1))).alias("b")
     )
     # u lands in its OWN projection and the CASE ladder references the

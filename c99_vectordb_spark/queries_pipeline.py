@@ -1098,7 +1098,7 @@ def q_sim_ivfpq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids and PQ codebooks, hash-checked end to end: (1) every
     vector is assigned to its nearest coarse cluster (argmin — at
     scale this is the PARTITION key, so the probe filter below becomes
-    partition pruning, ivf.py); (2) the RESIDUAL v - C0[cluster] is
+    partition pruning); (2) the RESIDUAL v - C0[cluster] is
     PQ-encoded with the pinned codebooks; (3) the query probes its 4
     nearest clusters only — the scan skips 12/16 of the corpus — and
     ADC-scores codes against per-cluster residual LUTs; (4) top-10 by

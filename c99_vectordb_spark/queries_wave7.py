@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from . import hashing
+from .session import spread
 
 # ---------------------------------------------------------------------------
 # shared: Spark-side md5-56 (twin of hashing.duckdb_md5_hash56_sql)
@@ -401,11 +402,9 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity)."""
     # a single small parquet file arrives as ONE split, serializing
     # the md5-per-gram stage (~280 digests/doc); the shuffle moves
-    # only doc rows (operators/multimodal._fan_out rationale —
-    # measured 13.6s -> ~3s at sf0.1)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    # only doc rows (session.spread rationale — measured 13.6s -> ~3s
+    # at sf0.1)
+    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     fp = winnow_fingerprints(docs)
     rare = (
         fp.groupBy("fp")
@@ -1185,9 +1184,7 @@ def q_dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-position explode); only (source, chunk-hash, len) rows ever
     shuffle."""
     h = _spark_md5_56(f"substring(t, i - {_CDC_GRAM - 1}, {_CDC_GRAM})")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    docs = spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     chunks = (
         docs.select(
             "source",

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -20,7 +20,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
@@ -43,3 +43,17 @@ def get_spark(
     )
     return builder.getOrCreate()
 
+
+
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Give a compute-dense, byte-small stage the whole cluster.
+
+    A small single-file parquet table arrives as ONE input split, and
+    AQE's byte-sized coalescing folds a small keyed shuffle back to one
+    task; neither can see per-row compute that is heavy (64-dim dot
+    products, per-doc signature UDFs, codec stages, 64x hash fan-outs).
+    This repartitions to an EXPLICIT, cluster-derived count (planned as
+    REPARTITION_BY_NUM, which AQE never coalesces), hashed on ``keys``,
+    or round-robin when none are given. The shuffle moves only the
+    small input rows; the compute after it gains every core."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)

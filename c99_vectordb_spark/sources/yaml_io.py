@@ -208,13 +208,30 @@ def parse_records_yaml(text: str) -> list[tuple]:
 DISTRIBUTED_PARSE_BYTES = 4 << 20
 
 
+def rows_to_df(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """Parsed rows -> DataFrame, handed over as Arrow so the plan is a
+    JVM-only LocalTableScan. ``createDataFrame(list)`` parallelizes the
+    list through a PythonRDD instead, which boots Python workers the
+    verb otherwise never uses. ``dtype=object`` keeps nullable ids and
+    ids above 2**53 exact (a float64 column would round them)."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.names, dtype=object), schema
+    )
+
+
 def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
     try:
         with open(path, encoding="utf-8") as f:
             text = f.read()
     except FileNotFoundError:
         return spark.createDataFrame([], YAML_RECORDS_SCHEMA)
-    return spark.createDataFrame(parse_records_yaml(text), YAML_RECORDS_SCHEMA)
+    return rows_to_df(spark, parse_records_yaml(text), YAML_RECORDS_SCHEMA)
 
 
 def _revive(scalar: str | None, tag: str | None):

@@ -675,7 +675,7 @@ def apply_yaml_save_rows(
     if batch_id <= last_applied_batch(store):
         store.save_embeddings(build_embeddings(records, dim=dim))
         return False
-    batch = spark.createDataFrame(rows, yaml_io.YAML_BATCH_SCHEMA).select(
+    batch = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_BATCH_SCHEMA).select(
         [f.name for f in SAVE_BATCH_SCHEMA.fields]
     )
     bad = validate_overwrites(records, batch)

@@ -14,7 +14,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from c99_vectordb_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("tests", shuffle_partitions=8)
     yield spark
     spark.stop()

@@ -1,110 +1,82 @@
-"""IVF index: exactness at full probe, recall at partial probe."""
+"""IVF over kmeans_exact cells: exactness at full probe, plan size of
+the batch query."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from c99_vectordb_spark.operators import ivf as IVF
+from c99_vectordb_spark.operators import kmeans_exact as KE
+
+_K = 8
+_QIDS = {0, 1, 2}
 
 
 @pytest.fixture(scope="module")
-def index(spark, embeddings):
-    emb = embeddings.select(
-        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+def model(embeddings):
+    cent, _codes = KE.kmeans_exact(
+        None,
+        k=_K,
+        dsub=64,
+        iters=2,
+        arr=KE.space_arrays(KE.quantized_arr(embeddings), 64),
     )
-    idx = IVF.build_ivf(emb, n_centroids=8, seed=42)
-    idx.assigned.cache().count()
-    return idx
+    return cent
 
 
-@pytest.fixture(scope="module")
-def query_set(embeddings):
-    rows = embeddings.filter(F.col("vec_id") < 4).collect()
-    return [(r.vec_id, [float(x) for x in r.embedding]) for r in rows]
-
-
-def _exact(spark, embeddings, query_set, k):
-    from c99_vectordb_spark.operators.recall import score_sq_l2
-
-    emb = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
+def _exact_top5(rows, qids, score=lambda d: d):
+    """Brute-force top-5 per query by (score of squared L2, id), self
+    excluded."""
     out = {}
-    for qid, qvec in query_set:
-        rows = (
-            emb.withColumn("score", F.round(score_sq_l2(F.col("vec"), qvec), 4))
-            .filter(F.col("id") != qid)
-            .orderBy(F.asc("score"), F.asc("id"))
-            .limit(k)
-            .collect()
+    for qid, qv in ((i, v) for i, v in rows if i in qids):
+        scored = sorted(
+            (score(sum((a - b) * (a - b) for a, b in zip(v, qv))), i)
+            for i, v in rows
+            if i != qid
         )
-        out[qid] = [(r.id, r.score) for r in rows]
+        out[qid] = [(i, s) for s, i in scored[:5]]
     return out
 
 
-def test_full_probe_is_exact(spark, embeddings, index, query_set):
-    exact = _exact(spark, embeddings, query_set, k=5)
-    got = IVF.ivf_search(index, query_set, k=5, nprobe=8).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.id, r.score))
-    assert by_q == exact
+def _by_qid(rows):
+    got: dict = {}
+    for r in rows:
+        got.setdefault(r.qid, []).append((r.id, r.score))
+    return {q: sorted(v, key=lambda t: (t[1], t[0])) for q, v in got.items()}
 
 
-def test_partial_probe_recall(spark, embeddings, index, query_set):
-    exact = _exact(spark, embeddings, query_set, k=1)
-    got = IVF.ivf_search(index, query_set, k=1, nprobe=3).collect()
-    hits = sum(
-        1
-        for r in got
-        if exact[r.qid] and r.id == exact[r.qid][0][0]
-    )
-    # self-vector's own cluster is always probed first; top-1 neighbors
-    # of random gaussian vectors usually share it
-    assert hits >= len(query_set) // 2
+def test_full_probe_is_exact(spark, embeddings, model):
+    """Probing all k trained cells returns exactly the brute-force
+    integer top-5 on the quantized vectors."""
+    qarr = KE.quantized_arr(embeddings)
+    standing = KE.standing_semdedup_cells(embeddings, model, _K)
+    got = KE.ivf_batch_topk(
+        embeddings.filter(F.col("vec_id").isin(*_QIDS)),
+        model,
+        standing,
+        tau_k=5,
+        k=_K,
+        nprobe=_K,
+    ).collect()
+    rows = [(r.id, list(r.q)) for r in qarr.collect()]
+    assert _by_qid(got) == _exact_top5(rows, _QIDS)
 
 
-def test_partitioned_index_roundtrip(spark, index, query_set, tmp_path):
-    path = str(tmp_path / "ivf")
-    index.write(path)
-    loaded = IVF.IvfIndex.read(spark, path, index.centroids)
-    a = sorted(map(tuple, IVF.ivf_search(index, query_set[:1], k=3, nprobe=2).collect()))
-    b = sorted(map(tuple, IVF.ivf_search(loaded, query_set[:1], k=3, nprobe=2).collect()))
-    assert a == b
+def test_batch_full_probe_is_exact(spark, embeddings, sf_dir):
+    """sim_ivf_batch probes every kmeans_exact cell, so it must return
+    exactly the brute-force float top-5 whatever the trained centroids."""
+    from c99_vectordb_spark.queries_ext import q_sim_ivf_batch
+
+    got = _by_qid(q_sim_ivf_batch(spark, sf_dir).collect())
+    rows = [(r.vec_id, [float(x) for x in r.embedding]) for r in embeddings.collect()]
+    assert got == _exact_top5(rows, _QIDS, lambda d: round(d, 4))
 
 
-def _query_df(spark, query_set):
-    return spark.createDataFrame(
-        [(qid, vec) for qid, vec in query_set], "qid LONG, qvec ARRAY<DOUBLE>"
-    )
+def test_batch_search_plan_has_no_unions(spark, sf_dir):
+    """Plan-size guard: one probe join, zero Union nodes — the plan
+    must not grow with the number of queries."""
+    from c99_vectordb_spark.queries_ext import q_sim_ivf_batch
 
-
-def test_batch_search_equals_loop_search(spark, index, query_set):
-    """The single-plan batch path must reproduce the per-query loop
-    exactly (same probe ranking, same score rounding, same ties)."""
-    loop = sorted(map(tuple, IVF.ivf_search(index, query_set, k=5, nprobe=3).collect()))
-    batch = sorted(
-        map(
-            tuple,
-            IVF.ivf_search_batch(
-                index, _query_df(spark, query_set), k=5, nprobe=3
-            ).collect(),
-        )
-    )
-    assert batch == loop
-
-
-def test_batch_full_probe_is_exact(spark, embeddings, index, query_set):
-    exact = _exact(spark, embeddings, query_set, k=5)
-    got = IVF.ivf_search_batch(index, _query_df(spark, query_set), k=5, nprobe=8).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r.qid, []).append((r.id, r.score))
-    assert by_q == exact
-
-
-def test_batch_search_plan_has_no_unions(spark, index, query_set):
-    """Plan-size guard: one probe join + one index join, zero Union
-    nodes — the plan must not grow with the number of queries."""
-    df = IVF.ivf_search_batch(index, _query_df(spark, query_set), k=5, nprobe=3)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = q_sim_ivf_batch(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan

@@ -34,7 +34,6 @@ BNLJ_ALLOWED = {
     "sim_recall_report": "recall measurement: exact ground-truth + SQ scan tiers broadcast the bounded 16-query set",
     "sim_filtered_recall": "recall measurement: the prefilter-exact gold standard broadcasts the bounded 16-query set; 1-row verdict aggregates",
     "sim_ivf": "centroid assignment; broadcast side is the k-centroid table",
-    "sim_ivf_batch": "centroid assignment; broadcast side is the k-centroid table",
     "events_resample": "gap-fill grid join; broadcast side is the bounded hour grid",
     "tpch_q11": "1-row scalar aggregate broadcast (global value total)",
     "tpch_q22": "1-row scalar aggregate broadcast (average balance)",

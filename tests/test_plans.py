@@ -150,12 +150,24 @@ def test_ivf_partitioned_store_prunes_partitions(spark, embeddings, tmp_path):
     """The cluster-partitioned IVF store is the 'inverted file': a
     probe of 2 clusters must show partition filters on the scan and
     read only those directories."""
-    from c99_vectordb_spark.operators import ivf as IVF
+    from c99_vectordb_spark.operators.kmeans_exact import (
+        assign_cells_expr,
+        kmeans_exact,
+        quantize,
+        quantized_arr,
+        space_arrays,
+    )
 
-    emb = embeddings.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
-    index = IVF.build_ivf(emb, n_centroids=8, seed=42)
+    cent, _codes = kmeans_exact(
+        None, k=8, dsub=64, iters=1, arr=space_arrays(quantized_arr(embeddings), 64)
+    )
+    index = embeddings.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        assign_cells_expr(quantize(F.col("embedding")), cent, 8, 64).alias("cluster"),
+    )
     path = str(tmp_path / "ivf_store")
-    index.write(path)
+    index.write.partitionBy("cluster").parquet(path)
     loaded = spark.read.parquet(path).filter(F.col("cluster").isin(1, 3))
     plan = _plan(loaded)
     assert "PartitionFilters" in plan and "cluster" in plan.split("PartitionFilters")[1][:120]

@@ -2,9 +2,9 @@
 
 Two invariants the r12 plan changes must hold forever:
 
-1. **Result identity** — `_spread` (operators/similarity) and the
-   explicit-count repartitions added to `minhash_lsh_pairs` and
-   `orders_bootstrap_ci` are pure physical-plan moves: hash-spreading
+1. **Result identity** — `session.spread`, the one helper behind the
+   similarity scoring spreads, `minhash_lsh_pairs` and
+   `orders_bootstrap_ci`, is a pure physical-plan move: hash-spreading
    the corpus side must not change a single output row of the scoring
    operators (scores are the same expressions over the same doubles;
    windows carry total orders).
@@ -36,7 +36,7 @@ def test_spread_preserves_topk_neighbors(spark, embeddings, monkeypatch):
     spread = _rows(
         S.topk_neighbors(emb, queries, k=5), ["qid", "id", "score"]
     )
-    monkeypatch.setattr(S, "_spread", lambda df, key: df)
+    monkeypatch.setattr(S, "spread", lambda df, *keys: df)
     unspread = _rows(
         S.topk_neighbors(emb, queries, k=5), ["qid", "id", "score"]
     )
@@ -61,7 +61,7 @@ def test_spread_preserves_lsh_and_sq(spark, embeddings, monkeypatch):
         S.sq_topk_batch(embeddings, queries, k=5, qvec_col="qvec"),
         ["qid", "id", "qdist"],
     )
-    monkeypatch.setattr(S, "_spread", lambda df, key: df)
+    monkeypatch.setattr(S, "spread", lambda df, *keys: df)
     b_lsh = _rows(
         S.lsh_bucketed_neighbors(emb, queries, dim=dim, k=5),
         ["qid", "id", "score"],
@@ -78,12 +78,12 @@ def test_spread_is_explicit_count_not_coalescible(spark, embeddings):
     """The corpus side must carry REPARTITION_BY_NUM (explicit count):
     AQE may coalesce REPARTITION_BY_COL, silently re-serializing the
     compute-dense scoring stages the spread exists to widen."""
-    import c99_vectordb_spark.operators.similarity as S
+    from c99_vectordb_spark.session import spread as spread_fn
 
     emb = embeddings.select(
         F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
-    spread = S._spread(emb, "id")
+    spread = spread_fn(emb, "id")
     n = spark.sparkContext.defaultParallelism
     assert spread.rdd.getNumPartitions() == n
     # an explicit-count repartition plans its Exchange with the

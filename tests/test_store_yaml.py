@@ -238,3 +238,63 @@ def test_fast_loader_error_text_matches_pure_python():
     with pytest.raises(yaml.YAMLError) as ei:
         yaml_io.fast_safe_load(bad)
     assert str(ei.value) == expected
+
+
+_TYPED_YAML = """---
+id: 0
+metadata: {d: 2024-01-02, nested: {a: 1, b: [1, 2]}, mixed: [1, "x", true, 2.5], ok: true, f: 1.5, s: "\U0001F600 hi", n: null}
+body: |-
+  typed \U0001F600
+---
+id: 2
+metadata: {lang: en}
+body: |-
+  after a gap
+---
+id: 3
+body: ""
+"""
+
+
+def test_yaml_load_is_jvm_only(spark, tmp_path):
+    """A non-empty YAML store loads as a LocalTableScan: no PythonRDD,
+    so no Python worker boots for a verb that runs no UDF; the rows
+    equal the driver-side parse (typed metadata, non-BMP text, a gap,
+    a blank body)."""
+    path = tmp_path / "db.yaml"
+    path.write_text(_TYPED_YAML, encoding="utf-8")
+    df = yaml_io.load_records_yaml(spark, str(path))
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    want = spark.createDataFrame(
+        yaml_io.parse_records_yaml(_TYPED_YAML), yaml_io.YAML_RECORDS_SCHEMA
+    )
+    assert df.collect() == want.collect()
+
+
+def test_index_read_runs_no_job_and_ignores_stale_index(spark, tmp_path):
+    from c99_vectordb_spark import cli
+
+    yaml_path = str(tmp_path / "db.yaml")
+    emb_path = str(tmp_path / "db.emb")
+    with open(yaml_path, "w", encoding="utf-8") as f:
+        f.write(_TYPED_YAML)
+    cli._write_embeddings(
+        yaml_io.load_records_yaml(spark, yaml_path), emb_path, yaml_path
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("index-read", "index read")
+    try:
+        index = cli._read_index(spark, emb_path, yaml_path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("index-read")) == []
+    # blank records are not embedded
+    got = sorted(map(tuple, index.collect()))
+    assert [r[0] for r in got] == [0, 2]
+    assert got == sorted(map(tuple, spark.read.parquet(emb_path).collect()))
+    # an edited YAML no longer matches the sidecar: recall embeds in flight
+    with open(yaml_path, "a", encoding="utf-8") as f:
+        f.write("---\nid: 4\nbody: |-\n  new\n")
+    assert cli._read_index(spark, emb_path, yaml_path) is None
+    assert cli._read_index(spark, str(tmp_path / "missing.emb"), yaml_path) is None

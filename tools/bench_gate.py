@@ -70,10 +70,10 @@ def _calibrate() -> float:
 def _confirm_rerun(names: list[str], sf: str) -> dict[str, float]:
     """Fresh samples for the breaching queries only.
 
-    Min-of-3 noop-sink samples per query (min-of-2 for the chained-
-    dedup pair, which re-runs through bench._chained_dedup so its
-    timing base matches how its stored best was measured — the shared
-    pairs/components stage)."""
+    Min-of-3 noop-sink samples per query; a chained family
+    (bench.CHAINED) re-runs through its chain, min-of-2, so its timing
+    base matches how its stored best was measured — the shared
+    stage."""
     sys.path.insert(0, REPO)
     import bench as benchmod
     from c99_vectordb_spark import queries_registry as QR
@@ -85,39 +85,15 @@ def _confirm_rerun(names: list[str], sf: str) -> dict[str, float]:
     out: dict[str, float] = {}
     try:
         spark.read.parquet(f"{sf_dir}/region.parquet").count()
-        dedup_family = ("dedup_components", "dedup_survivors",
-                        "dedup_cluster_sizes", "dedup_cross_source")
-        if set(dedup_family) & set(names):
-            runs = [benchmod._chained_dedup(spark, sf_dir) for _ in range(2)]
-            for i, n in enumerate(dedup_family):
-                out[n] = round(min(r[i] for r in runs), 3)
-        bpe_family = ("corpus_bpe_merges", "corpus_bpe_encode",
-                      "corpus_fertility", "corpus_vocab_sweep")
-        if set(bpe_family) & set(names):
-            runs = [benchmod._chained_bpe(spark, sf_dir) for _ in range(2)]
-            for i, n in enumerate(bpe_family):
-                out[n] = round(min(r[i] for r in runs), 3)
-        suffix_family = ("dedup_suffix_array", "decontaminate_exact_overlap",
-                         "decontaminate_span_scrub")
-        if set(suffix_family) & set(names):
-            runs = [benchmod._chained_suffix(spark, sf_dir) for _ in range(2)]
-            for i, n in enumerate(suffix_family):
-                out[n] = round(min(r[i] for r in runs), 3)
-        kmeans_family = ("sim_ivf", "dedup_semdedup_pairs", "sim_ivfpq")
-        if set(kmeans_family) & set(names):
-            runs = [benchmod._chained_kmeans(spark, sf_dir) for _ in range(2)]
-            for i, n in enumerate(kmeans_family):
-                out[n] = round(min(r[i] for r in runs), 3)
-        graph_family = ("graph_pagerank", "graph_communities")
-        if set(graph_family) & set(names):
-            # min-of-5: the iterative-join kernels keep descending
-            # through run 4 (r11 adjudication at calib 0.177: 9.30,
-            # 3.07, 2.82, 2.54, 2.46 — min-of-3 reads 15-25% above the
-            # floor, which was the entire standing graph_pagerank flag;
-            # the r6 pagerank "regression" was likewise cold samples)
-            runs = [benchmod._chained_graph(spark, sf_dir) for _ in range(5)]
-            for i, n in enumerate(graph_family):
-                out[n] = round(min(r[i] for r in runs), 3)
+        for fn, family, combine, max_runs in benchmod.CHAINED:
+            if set(family) & set(names):
+                # min-of-5 for a family that keeps sampling in the bench:
+                # the graph kernels keep descending through run 4 (r11
+                # adjudication at calib 0.177: 9.30, 3.07, 2.82, 2.54,
+                # 2.46 — min-of-3 reads 15-25% above the floor, which
+                # was the entire standing graph_pagerank flag)
+                runs = [fn(spark, sf_dir) for _ in range(5 if max_runs > 2 else 2)]
+                out.update(combine(family, runs)[0])
         for name in names:
             if name in out or name not in qs:
                 continue

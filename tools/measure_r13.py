@@ -12,7 +12,7 @@ Usage:
                               [--no-plan] name [name ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the usable CPUs).
 """
 
 from __future__ import annotations

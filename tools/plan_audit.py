@@ -55,7 +55,6 @@ def main() -> int:
     import __spark_entry__ as entry
     from c99_vectordb_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("plan_audit", shuffle_partitions=8)
     rows: list[tuple[str, dict[str, int]]] = []
     errors: list[tuple[str, str]] = []

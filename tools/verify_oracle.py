@@ -128,7 +128,6 @@ def main() -> int:
         print("typesweep: clean")
         return 0
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     spark = get_spark("verify_oracle", shuffle_partitions=8)
 
     failures = []
