@@ -22,6 +22,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+import time
 
 import yaml as _yaml
 from pyspark.sql import SparkSession, functions as F
@@ -104,10 +105,24 @@ def _yaml_sha256(yaml_path: str) -> str | None:
         return None
 
 
+#: Driver-JVM profile for a verb's short-lived process: it runs a few
+#: small jobs and exits, so C2 compilation (about 11 CPU-s of a 5k-record
+#: cold recall on 4 cores) never pays back, and the parallel GC's worker
+#: threads and heap sizing cost more than they save.
+CLI_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"
+
+
 def _get_spark() -> SparkSession:
     from .session import get_spark
 
-    return get_spark("memo-spark-cli")
+    return get_spark("memo-spark-cli", java_options=CLI_JAVA_OPTIONS)
+
+
+def _jvm_flags(spark) -> str:
+    """The driver JVM's -X/-XX flags, as it was started."""
+    mgmt = spark.sparkContext._jvm.java.lang.management
+    args = mgmt.ManagementFactory.getRuntimeMXBean().getInputArguments()
+    return " ".join(a for a in args if a.startswith("-X"))
 
 
 def _display_cell(scalar, tag, list_val, yrepr=None):
@@ -684,9 +699,21 @@ def main(argv: list[str] | None = None) -> int:
         print("Error: reindex does not accept extra arguments", file=sys.stderr)
         return 1
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = _get_spark()
+    # an in-process caller's session is used as it is: re-running the
+    # builder on it would overwrite the caller's runtime confs
+    t = time.perf_counter()
+    spark = SparkSession.getActiveSession()
+    owns_session = spark is None
+    if owns_session:
+        spark = _get_spark()
     try:
+        if verbose:
+            _log(
+                verbose,
+                f"startup: get_spark {time.perf_counter() - t:.2f} s"
+                f"{'' if owns_session else ' (active session reused)'}; "
+                f"JVM options: {_jvm_flags(spark)}",
+            )
         if verb == "save":
             return cmd_save(spark, base, rest[0], verbose)
         if verb == "recall":

@@ -6,6 +6,18 @@ splitting, partition coalescing), Arrow for the pandas-UDF boundary,
 and a shuffle-partition count sized for the test machine (on a real
 1000-executor cluster this would be raised or left to AQE's
 coalescing with a high initial value).
+
+``java_options`` starts a NEW driver JVM with extra flags; the CLI
+passes its short-lived-process profile (``cli.CLI_JAVA_OPTIONS``: C1-only
+JIT, serial GC), while tests, ``bench.py`` and the registry keep the JVM
+defaults, whose C2 compiler pays off in a long-lived session. The flags
+go through ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
+a user's ``--driver-java-options`` (e.g. in ``PYSPARK_SUBMIT_ARGS``)
+replaces ``spark.driver.extraJavaOptions`` outright, whereas
+``defaultJavaOptions`` is prepended to it, so both survive. A user's own
+``spark.driver.defaultJavaOptions`` is replaced when ``java_options`` is
+given. They reach only a JVM this call launches; an already-running
+one keeps the flags it was started with.
 """
 
 from __future__ import annotations
@@ -19,6 +31,7 @@ def get_spark(
     app_name: str = "c99_vectordb_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
+    java_options: str | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
@@ -41,6 +54,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if java_options:
+        builder = builder.config("spark.driver.defaultJavaOptions", java_options)
     return builder.getOrCreate()
 
 
