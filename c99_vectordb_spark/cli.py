@@ -10,9 +10,9 @@ Storage layout: ``<base>.yaml`` is the compatibility source of truth
 parquet (the FAISS ``.memo`` replacement). Recall reuses the derived
 index only when its recorded source fingerprint (``_SOURCE_SHA256``,
 the hash of the YAML it was built from) still matches — any external
-edit to the YAML makes recall fall back to in-flight embedding, so the
-reference's save-only-index desync quirk (M6) STILL cannot occur;
-``reindex`` rewrites both canonically.
+edit to the YAML makes recall fall back to embedding the records on the
+driver as it parses the YAML, so the reference's save-only-index desync
+quirk (M6) STILL cannot occur; ``reindex`` rewrites both canonically.
 
 Usage: ``python -m c99_vectordb_spark.cli [-f base] [-v] <verb> ...``
 """
@@ -28,7 +28,7 @@ import yaml as _yaml
 from pyspark.sql import SparkSession, functions as F
 
 from . import fmt
-from .functions.embed import build_embeddings
+from .functions.embed import build_embeddings, embed_rows
 from .model import (
     DEFAULT_K,
     DEFAULT_LIMIT,
@@ -81,18 +81,22 @@ def _db_paths(base: str) -> tuple[str, str]:
     return str(p.with_suffix(".yaml")), str(p.with_suffix(".emb"))
 
 
-def _load_records_or_error(spark, yaml_path: str):
-    """Load the database YAML with the reference's error contract
-    (memo_cli.py:338-341 etc): any load failure prints one line to
-    stderr and the verb returns 1 — never a traceback."""
+def _load_or_error(yaml_path: str, load):
+    """``load()`` of the database YAML with the reference's error
+    contract (memo_cli.py:338-341 etc): any load failure prints one line
+    to stderr and the verb returns 1 — never a traceback."""
     try:
-        return yaml_io.load_records_yaml(spark, yaml_path), 0
+        return load(), 0
     except Exception as e:  # noqa: BLE001 — the reference catches Exception
         print(
             f"Error: failed to load database YAML '{yaml_path}': {e}",
             file=sys.stderr,
         )
         return None, 1
+
+
+def _load_records_or_error(spark, yaml_path: str):
+    return _load_or_error(yaml_path, lambda: yaml_io.load_records_yaml(spark, yaml_path))
 
 
 def _yaml_sha256(yaml_path: str) -> str | None:
@@ -150,10 +154,19 @@ def _display_cell(scalar, tag, list_val, yrepr=None):
 def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     k = R.clamp_k(k)
-    records, rc = _load_records_or_error(spark, yaml_path)
+    rows, rc = _load_or_error(yaml_path, lambda: yaml_io.read_records_yaml(yaml_path))
     if rc:
         return rc
+    records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
     embeddings = _read_index(spark, emb_path, yaml_path)
+    if embeddings is None:
+        # no valid index: embed the parsed bodies here, on the driver,
+        # so the recall runs the same join as with one and boots no
+        # Python worker
+        embeddings = embed_rows(spark, [row[1] for row in rows])
+    # the frames now hold what the recall reads; the parsed rows, as
+    # large as the store, need not live through its Spark job
+    del rows
     # R4: diagnostics to stderr only — stdout is the result contract
     # (memo_cli.py:38-40). The count is a full Spark job, so it only
     # runs when -v is actually on.
@@ -429,7 +442,7 @@ def _read_index(spark, emb_path: str, yaml_path: str):
     YAML (fingerprint check), else None — the reference's recall reads
     its .memo index rather than re-embedding the corpus per query
     (memo_cli.py:470-479). A missing or stale index self-heals to
-    in-flight embedding (S3 semantics, memo_cli.py:251-262), which is
+    embedding on the driver (S3 semantics, memo_cli.py:251-262), which is
     how the M6 desync quirk stays impossible here. recall() joins
     embeddings back to the filtered record set, so results are
     identical either way. The read carries its schema: inferring it

@@ -1,30 +1,37 @@
-"""V1/V5 — signed hashing-trick bag-of-words embedding, two ways.
+"""V1/V5 — signed hashing-trick bag-of-words embedding.
 
 Reference pipeline (/root/reference/memo_cli.py:158-167): lowercase →
 ``[a-z0-9_]+`` tokens → signed hash into DIM buckets → L2 normalize.
 The salted builtin ``hash()`` is replaced by the stable spec in
 ``hashing.py`` (SURVEY.md §1.3 — intentional behavioral fix).
 
-Two implementations with identical integer results:
+Two implementations with identical integer results, run in three places:
 
 1. ``embed_expr`` — pure Spark SQL expression (higher-order functions).
    Fully JVM-side, Catalyst-optimizable, and exactly mirrorable in
    DuckDB SQL → this is what the correctness oracle checks.
-2. ``embed_pandas_udf`` — Arrow-batched pandas UDF with a per-batch
-   token-hash cache. Map-only (no shuffle), used by default for bulk
-   embedding builds: at 100 TB this is one narrow stage over the
-   documents table, no wide exchange anywhere.
+2. ``hashing.embed_text_int`` — the Python implementation, with a
+   token → (bucket, sign) cache. It runs
+   - in the executors' Python workers, as ``embed_pandas_udf`` in
+     ``build_embeddings``: map-only (no shuffle), used for bulk builds
+     (``save``/``reindex`` index writes, the native store, streaming,
+     the registry) — at 100 TB one narrow stage over the documents
+     table, no wide exchange anywhere;
+   - on the driver, as ``embed_rows``: a CLI recall on a YAML store
+     without a valid index embeds the rows the YAML parse already holds
+     in Python, so it starts no Python worker.
 
-Both produce exact integer count vectors (ARRAY<BIGINT>); the
+All produce exact integer count vectors (ARRAY<BIGINT>); the
 L2-normalized float view is a derived expression (``normalized``).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..model import DIM
+from ..hashing import embed_text_int
+from ..model import DIM, EMBEDDINGS_SCHEMA
 from . import text as Ft
 
 
@@ -54,33 +61,46 @@ def embed_expr(body: Column, dim: int = DIM) -> Column:
 
 
 def embed_pandas_udf(dim: int = DIM):
-    """Arrow-batched pandas UDF computing the same integer embedding.
-
-    Vectorized per batch with a token→(bucket, signed) cache; exact
-    integer parity with ``embed_expr`` (tested in tests/test_embed.py).
+    """Arrow-batched pandas UDF computing the same integer embedding:
+    ``hashing.embed_text_int`` per body, with one token cache per batch;
+    exact integer parity with ``embed_expr`` (tested in tests/test_embed.py).
     """
-    import numpy as np
-
-    from ..hashing import token_hash, tokenize
 
     @F.pandas_udf("array<long>")
     def _embed(bodies: pd.Series) -> pd.Series:
         cache: dict[str, tuple[int, int]] = {}
-        out = []
-        for body in bodies:
-            vec = np.zeros(dim, dtype=np.int64)
-            if body:
-                for tok in tokenize(body):
-                    hit = cache.get(tok)
-                    if hit is None:
-                        h = token_hash(tok)
-                        hit = (h % dim, 1 if h & 1 else -1)
-                        cache[tok] = hit
-                    vec[hit[0]] += hit[1]
-            out.append(vec)
-        return pd.Series(out)
+        return pd.Series([embed_text_int(body, dim, cache) for body in bodies])
 
     return _embed
+
+
+def embed_rows(spark: SparkSession, bodies: list[str]) -> DataFrame:
+    """The (id, vec) EMBEDDINGS_SCHEMA frame of ``bodies``, the i-th
+    with id i (``yaml_io.parse_records_yaml`` densifies the ids),
+    embedded in this (the driver's) process by
+    ``hashing.embed_text_int`` — the same integers as
+    ``build_embeddings`` without a Python worker. Blank bodies are
+    embedded too, to the zero vector; a consumer drops them with the
+    Spark-side ``is_blank`` filter, as ``recall`` does.
+
+    The vectors reach the JVM as one Arrow table; its scan runs no
+    Python. The frame is dense: 8·DIM bytes (3 KiB) per record here,
+    and about twice that in the JVM, which ships it inside the scan's
+    task binaries."""
+    import numpy as np
+    import pyarrow as pa
+
+    cache: dict[str, tuple[int, int]] = {}
+    vecs = np.zeros((len(bodies), DIM), dtype=np.int64)
+    for i, body in enumerate(bodies):
+        vecs[i] = embed_text_int(body, DIM, cache)
+    table = pa.table(
+        {
+            "id": np.arange(len(bodies), dtype=np.int64),
+            "vec": pa.FixedSizeListArray.from_arrays(vecs.ravel(), DIM),
+        }
+    )
+    return spark.createDataFrame(table, EMBEDDINGS_SCHEMA)
 
 
 def normalized(vec: Column) -> Column:

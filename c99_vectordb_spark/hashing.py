@@ -66,18 +66,29 @@ def token_hash(token: str) -> int:
     return h
 
 
-def embed_text_int(text: str, dim: int = DIM) -> list[int]:
+def embed_text_int(
+    text: str | None, dim: int = DIM, cache: dict | None = None
+) -> list[int]:
     """Signed hashing-trick bag-of-words as exact integer counts.
 
     Same semantics as the reference's embed_text_hash
     (memo_cli.py:158-167) before L2 normalization. Integer counts make
     dot products / squared distances exactly representable, which the
-    DuckDB oracle checks rely on.
+    DuckDB oracle checks rely on. ``None`` embeds to the zero vector.
+    ``cache`` maps token -> (bucket, sign) across calls with the same
+    ``dim``, so a batch hashes each distinct token once.
     """
     vec = [0] * dim
+    if not text:
+        return vec
+    if cache is None:
+        cache = {}
     for tok in tokenize(text):
-        h = token_hash(tok)
-        vec[h % dim] += 1 if h & 1 else -1
+        hit = cache.get(tok)
+        if hit is None:
+            h = token_hash(tok)
+            hit = cache[tok] = (h % dim, 1 if h & 1 else -1)
+        vec[hit[0]] += hit[1]
     return vec
 
 

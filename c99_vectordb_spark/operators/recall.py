@@ -19,6 +19,15 @@ Scoring paths:
   L2-normalized vectors, score ∈ [0,4] — the reference's visible score
   (d² = 2 − 2·cosθ, SURVEY.md §1.4).
 
+Embeddings: ``recall`` joins the records to an (id, vec) frame. The CLI
+passes the store's index (``<base>.emb``) or, without a valid one, the
+frame it embedded on the driver from the parsed YAML rows
+(``functions.embed.embed_rows``), so either way the plan is records ⋈
+embeddings → TakeOrderedAndProject with no Python UDF. With
+``embeddings=None`` (``__spark_entry__.entry``, the tests) recall embeds
+the filtered records in flight with the pandas UDF, in the executors'
+Python workers.
+
 Determinism: ties broken by id ascending (reference leaves FAISS ties
 unspecified; SURVEY.md §7 risk 4).
 """

@@ -17,7 +17,11 @@ and get identical semantics:
 
 The parse runs driver-side, as the reference's does: the reference
 loads its YAML store wholesale per command, and error behavior stays
-byte-identical to it. Scale lives in the Parquet store (store.py).
+byte-identical to it. Scale lives in the Parquet store (store.py). A
+CLI recall without a valid index takes the parsed rows
+(``read_records_yaml``) and embeds their bodies on the driver too
+(``functions.embed.embed_rows``), instead of shipping every body to
+Python workers and the vectors back.
 """
 
 from __future__ import annotations
@@ -225,13 +229,19 @@ def rows_to_df(
     )
 
 
-def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
+def read_records_yaml(path: str) -> list[tuple]:
+    """The parsed rows of the store at ``path``; none when there is no
+    file."""
     try:
         with open(path, encoding="utf-8") as f:
             text = f.read()
     except FileNotFoundError:
-        return spark.createDataFrame([], YAML_RECORDS_SCHEMA)
-    return rows_to_df(spark, parse_records_yaml(text), YAML_RECORDS_SCHEMA)
+        return []
+    return parse_records_yaml(text)
+
+
+def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
+    return rows_to_df(spark, read_records_yaml(path), YAML_RECORDS_SCHEMA)
 
 
 def _revive(scalar: str | None, tag: str | None):

@@ -78,3 +78,56 @@ def test_blank_bodies_skipped(spark):
     )
     out = embed.build_embeddings(df, dim=DIM).collect()
     assert [r.id for r in out] == [0]
+
+
+def test_embed_cache_is_transparent():
+    cache: dict = {}
+    for text in ["Hello hello WORLD", "world 9x hello", "", "   "]:
+        assert hashing.embed_text_int(text, DIM, cache) == hashing.embed_text_int(
+            text, DIM
+        )
+    assert hashing.embed_text_int(None, DIM, cache) == [0] * DIM
+
+
+#: bodies by id; the gaps (2-4, 6) densify to blank records
+_EDGE_BODIES = {
+    0: "",
+    1: "  \t ",
+    5: "\u00a0\u00a0",  # NBSP only: blank to Spark's Unicode is_blank
+    7: "UPPER Case MiXeD",
+    8: "\u212a kelvin \u0130stanbul",
+    9: "abc_123 9x __init__ 2026",
+    10: " ".join(["alpha"] * 1100 + [f"w{i}" for i in range(100)]),
+    11: "astral \U0001f600 \U0001d400\U0001d401 text",
+    12: "plain words again",
+}
+
+
+def test_driver_embeddings_match_udf(spark, tmp_path):
+    """The (id, vec) frame embedded on the driver from the parsed YAML
+    rows equals the pandas-UDF build on every non-blank record, and embeds
+    the blank ones (which recall's is_blank filter drops) to zero."""
+    import yaml
+
+    from c99_vectordb_spark.model import DIM as STORE_DIM
+    from c99_vectordb_spark.sources import yaml_io
+
+    path = tmp_path / "db.yaml"
+    path.write_text(
+        yaml.safe_dump_all(
+            [{"id": i, "metadata": {}, "body": b} for i, b in _EDGE_BODIES.items()],
+            explicit_start=True, allow_unicode=True,
+        ),
+        encoding="utf-8",
+    )
+    rows = yaml_io.read_records_yaml(str(path))
+    records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
+    driver = embed.embed_rows(spark, [row[1] for row in rows])
+    udf = embed.build_embeddings(records, dim=STORE_DIM)
+    got = {r.id: list(r.vec) for r in driver.collect()}
+    want = {r.id: list(r.vec) for r in udf.orderBy("id").collect()}
+    assert sorted(got) == list(range(13))
+    assert {i: got[i] for i in want} == want
+    assert sorted(set(got) - set(want)) == [0, 1, 2, 3, 4, 5, 6]
+    assert all(got[i] == [0] * STORE_DIM for i in set(got) - set(want))
+    assert want[10] != [0] * STORE_DIM and max(map(abs, want[10])) > 127

@@ -1,0 +1,129 @@
+"""CPU time and peak memory of one cold memo verb, split by kind of process.
+
+    python tools/proc_split.py ARGV...
+
+Runs ``python -m c99_vectordb_spark.cli ARGV`` in the current
+directory, in its own session, and samples ``/proc`` every 20 ms (with
+``perfbench/proc.py``'s reader) until every process of that session has
+ended. Each process is put into one kind by its command line:
+
+- ``python driver``: the CLI process itself;
+- ``driver JVM``: the JVM that runs ``SparkSubmit``;
+- ``python workers``: ``pyspark.daemon`` and the workers it forks;
+- ``launcher``: the ``spark-submit``/``spark-class`` scripts and the
+  short-lived launcher JVM that computes the driver's command line.
+
+Prints one line per kind: the number of processes seen, their CPU
+seconds (user + system, the last value sampled for each process) and
+the peak of their summed resident memory, then the peak of the whole
+tree's resident memory and the CLI's exit code. A child sampled between
+a fork and its exec still reports its parent's resident pages: the
+JVM's short-lived helper commands show as ``other`` and can inflate the
+total. The CLI's own stdout is
+discarded; its stderr is shown when it exits non-zero. Example:
+
+    python tools/proc_split.py -f /path/to/db recall -k 10 --filter "lang: en" --yaml "some query"
+"""
+
+from __future__ import annotations
+
+import os
+import signal
+import subprocess
+import sys
+import threading
+import time
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+from proc import _session_members  # noqa: E402
+
+SAMPLE_S = 0.02
+KINDS = ("python driver", "driver JVM", "python workers", "launcher", "other")
+
+
+def kind_of(pid: int, root: int) -> str:
+    if pid == root:
+        return "python driver"
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            args = f.read().decode(errors="replace").split("\0")
+    except OSError:
+        return "other"
+    cmd = " ".join(args)
+    if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
+        return "python workers"
+    if "org.apache.spark.launcher.Main" in cmd:
+        return "launcher"
+    if os.path.basename(args[0]) == "java" and "org.apache.spark.deploy.SparkSubmit" in cmd:
+        return "driver JVM"
+    if "spark-submit" in cmd or "spark-class" in cmd:
+        return "launcher"
+    return "other"
+
+
+def main(argv: list[str] | None = None) -> int:
+    argv = list(sys.argv[1:] if argv is None else argv)
+    if not argv or argv[0] in ("-h", "--help"):
+        print(__doc__)
+        return 0
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, env.get("PYTHONPATH")]))
+    cmd = [sys.executable, "-m", "c99_vectordb_spark.cli", *argv]
+    kinds: dict[int, str] = {}
+    cpu: dict[int, float] = {}
+    peak = dict.fromkeys(KINDS, 0)
+    peak_total = 0
+    stop = threading.Event()
+    t0 = time.perf_counter()
+    p = subprocess.Popen(
+        cmd, env=env, stdout=subprocess.DEVNULL,
+        stderr=subprocess.PIPE, text=True, start_new_session=True,
+    )
+
+    def sample() -> None:
+        nonlocal peak_total
+        while True:
+            live = _session_members(p.pid)
+            rss = dict.fromkeys(KINDS, 0)
+            for pid, r, c in live:
+                # classified anew each time, as spark-class execs into
+                # the driver JVM; a process that has just ended keeps
+                # its kind
+                kind = kind_of(pid, p.pid)
+                if kind != "other" or pid not in kinds:
+                    kinds[pid] = kind
+                rss[kinds[pid]] += r
+                cpu[pid] = c
+            for k in KINDS:
+                peak[k] = max(peak[k], rss[k])
+            peak_total = max(peak_total, sum(rss.values()))
+            if stop.is_set() and not live:
+                return
+            time.sleep(SAMPLE_S)
+
+    sampler = threading.Thread(target=sample, daemon=True)
+    sampler.start()
+    _, err = p.communicate()
+    wall = time.perf_counter() - t0
+    stop.set()
+    sampler.join(timeout=30)
+    if sampler.is_alive():  # a process outlived the verb
+        os.killpg(p.pid, signal.SIGKILL)
+        sampler.join()
+    print(f"{'kind':<16}{'procs':>6}{'cpu_s':>9}{'peak_rss_mb':>13}")
+    for k in KINDS:
+        pids = [pid for pid, kk in kinds.items() if kk == k]
+        if not pids and k == "other":
+            continue
+        print(f"{k:<16}{len(pids):>6}{sum(cpu[pid] for pid in pids):>9.2f}"
+              f"{peak[k] / (1 << 20):>13.0f}")
+    print(f"{'total':<16}{len(kinds):>6}{sum(cpu.values()):>9.2f}{peak_total / (1 << 20):>13.0f}")
+    print(f"wall {wall:.2f} s, exit code {p.returncode}")
+    if p.returncode:
+        print(err, file=sys.stderr)
+    return p.returncode
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())
