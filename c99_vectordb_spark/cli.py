@@ -27,8 +27,8 @@ import time
 import yaml as _yaml
 from pyspark.sql import SparkSession, functions as F
 
-from . import fmt
-from .functions.embed import build_embeddings, embed_rows
+from . import fmt, hashing
+from .functions.embed import embed_rows
 from .model import (
     DEFAULT_K,
     DEFAULT_LIMIT,
@@ -37,7 +37,7 @@ from .model import (
     EMBEDDINGS_SCHEMA,
     STATS_TOP_N,
 )
-from .operators import analyze as A, filters as Flt, mutate as M, recall as R
+from .operators import analyze as A, filters as Flt, recall as R
 from .sources import yaml_io
 from .sources.store import _swap_write
 
@@ -95,8 +95,8 @@ def _load_or_error(yaml_path: str, load):
         return None, 1
 
 
-def _load_records_or_error(spark, yaml_path: str):
-    return _load_or_error(yaml_path, lambda: yaml_io.load_records_yaml(spark, yaml_path))
+def _read_rows_or_error(yaml_path: str):
+    return _load_or_error(yaml_path, lambda: yaml_io.read_records_yaml(yaml_path))
 
 
 def _yaml_sha256(yaml_path: str) -> str | None:
@@ -154,7 +154,7 @@ def _display_cell(scalar, tag, list_val, yrepr=None):
 def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     k = R.clamp_k(k)
-    rows, rc = _load_or_error(yaml_path, lambda: yaml_io.read_records_yaml(yaml_path))
+    rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
     records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
@@ -163,7 +163,7 @@ def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
         # no valid index: embed the parsed bodies here, on the driver,
         # so the recall runs the same join as with one and boots no
         # Python worker
-        embeddings = embed_rows(spark, [row[1] for row in rows])
+        embeddings = embed_rows(spark, [row[:2] for row in rows])
     # the frames now hold what the recall reads; the parsed rows, as
     # large as the store, need not live through its Spark job
     del rows
@@ -215,7 +215,9 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
     if offset < 0:
         print("Error: --offset must be >= 0", file=sys.stderr)
         return 1
-    records, rc = _load_records_or_error(spark, yaml_path)
+    records, rc = _load_or_error(
+        yaml_path, lambda: yaml_io.load_records_yaml(spark, yaml_path)
+    )
     if rc:
         return rc
     try:
@@ -385,56 +387,36 @@ def cmd_save(spark, base, save_path, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     try:
         with open(save_path, encoding="utf-8") as f:
-            rows = yaml_io.parse_save_batch_yaml(f.read())
+            batch = yaml_io.parse_save_batch_yaml(f.read())
     except (OSError, yaml_io.YamlValidationError) as e:
         print(f"Error: {e}", file=sys.stderr)
         return 1
-    batch = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_BATCH_SCHEMA)
-    records, rc = _load_records_or_error(spark, yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
-    # parse the YAML once across the verb's four actions (validate,
-    # max-id, dump, embed) instead of once per action
-    records = records.cache()
-    # the try starts BEFORE the first action on the cached frame, so a
-    # failure in validate_overwrites / the max-id collect cannot leak
-    # the cached blocks (r12 advice #1)
-    try:
-        bad_ids = set(M.validate_overwrites(records, batch))
-        max_id = (
-            records.agg(F.coalesce(F.max("id"), F.lit(-1))).collect()[0][0]
-        )
-        # echo in apply order (memo_cli.py:420-440): the reference
-        # prints a Memorized line per entry AS IT GOES and errors on
-        # the FIRST bad overwrite in batch order — earlier echoes
-        # already emitted, but nothing is written to disk (files are
-        # saved after the loop)
-        next_id = max_id + 1
-        for rid, body, *_ in rows:
-            if rid is None:
-                print(fmt.memorized(body, next_id))
-                next_id += 1
-            elif rid in bad_ids:
-                print(
-                    f"Error: override id {rid} does not exist",
-                    file=sys.stderr,
-                )
-                return 1
-            else:
-                print(fmt.memorized(body, rid))
-        merged = M.upsert(records, batch).cache()
-        try:
-            _log(
-                verbose,
-                f"save: {len(rows)} entries applied onto max_id={max_id}",
-            )
-            yaml_io.save_records_yaml(merged.orderBy("id"), yaml_path)
-            _write_embeddings(merged, emb_path, yaml_path)
-        finally:
-            merged.unpersist()
-        return 0
-    finally:
-        records.unpersist()
+    # an overwrite must name a non-blank record of the store AS LOADED
+    # (memo_cli.py:426-433); the parse densifies ids, so row i has id i
+    # and the next append gets id len(rows)
+    writable = {rid for rid, body, *_ in rows if not hashing.is_blank(body)}
+    max_id = len(rows) - 1
+    # apply in batch order, echoing as it goes (memo_cli.py:420-440):
+    # a repeated id is last-write-wins, and the FIRST bad overwrite is
+    # an error after the earlier echoes, with nothing written (the
+    # files are saved after the loop)
+    for rid, *entry in batch:
+        if rid is None:
+            rid = len(rows)
+            rows.append((rid, *entry))
+        elif rid in writable:
+            rows[rid] = (rid, *entry)
+        else:
+            print(f"Error: override id {rid} does not exist", file=sys.stderr)
+            return 1
+        print(fmt.memorized(entry[0], rid))
+    _log(verbose, f"save: {len(batch)} entries applied onto max_id={max_id}")
+    yaml_io.save_records_yaml(rows, yaml_path)
+    _write_embeddings(spark, rows, emb_path, yaml_path)
+    return 0
 
 
 def _read_index(spark, emb_path: str, yaml_path: str):
@@ -457,13 +439,18 @@ def _read_index(spark, emb_path: str, yaml_path: str):
     return spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
 
 
-def _write_embeddings(records, emb_path: str, yaml_path: str) -> None:
-    # the index records which YAML it derives from (an underscore-
-    # prefixed sidecar, invisible to Spark's parquet reader, committed
-    # by the same rename as the table); recall only trusts the index
-    # while the fingerprint still matches
+def _write_embeddings(spark, rows, emb_path: str, yaml_path: str) -> None:
+    # blank records are not indexed (memo_cli.py:278-280). One file: a
+    # recall then scans the index in one task; written as the frame's
+    # four slices, it cost a cold 5k-record recall about 1 CPU-s more
+    # (4 cores). The index
+    # records which YAML it derives from (an underscore-prefixed
+    # sidecar, invisible to Spark's parquet reader, committed by the
+    # same rename as the table); recall only trusts the index while the
+    # fingerprint still matches
+    pairs = [(rid, body) for rid, body, *_ in rows if not hashing.is_blank(body)]
     _swap_write(
-        build_embeddings(records, dim=DIM),
+        embed_rows(spark, pairs).coalesce(1),
         emb_path,
         marker=("_SOURCE_SHA256", _yaml_sha256(yaml_path)),
     )
@@ -472,29 +459,16 @@ def _write_embeddings(records, emb_path: str, yaml_path: str) -> None:
 def cmd_reindex(spark, base, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     _hint_native_migration(verbose, yaml_path)
-    records, rc = _load_records_or_error(spark, yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
-    # scan the parsed rows once: without the cache every downstream
-    # action (count, compact, dump, embed) rebuilds them
-    records = records.cache()
-    try:
-        n_before = records.count()
-        compacted = M.compact(records).cache()
-        # the try starts right after .cache(), so a failed count or
-        # write cannot leak the cached blocks
-        try:
-            n_after = compacted.count()
-            yaml_io.save_records_yaml(compacted.orderBy("id"), yaml_path)
-            _write_embeddings(compacted, emb_path, yaml_path)
-        finally:
-            compacted.unpersist()
-    finally:
-        records.unpersist()
+    kept = yaml_io.compact_records(rows)
+    yaml_io.save_records_yaml(kept, yaml_path)
+    _write_embeddings(spark, kept, emb_path, yaml_path)
     print(f"Rebuilt index from {os.path.basename(yaml_path)}")
     print(f"Wrote index: {os.path.basename(emb_path)}")
-    if n_before - n_after > 0:
-        print(fmt.compacted(n_before - n_after))
+    if len(rows) > len(kept):
+        print(fmt.compacted(len(rows) - len(kept)))
     return 0
 
 

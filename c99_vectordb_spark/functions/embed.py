@@ -14,12 +14,12 @@ Two implementations with identical integer results, run in three places:
    token → (bucket, sign) cache. It runs
    - in the executors' Python workers, as ``embed_pandas_udf`` in
      ``build_embeddings``: map-only (no shuffle), used for bulk builds
-     (``save``/``reindex`` index writes, the native store, streaming,
-     the registry) — at 100 TB one narrow stage over the documents
-     table, no wide exchange anywhere;
-   - on the driver, as ``embed_rows``: a CLI recall on a YAML store
-     without a valid index embeds the rows the YAML parse already holds
-     in Python, so it starts no Python worker.
+     (the native store, streaming, the registry) — at 100 TB one
+     narrow stage over the documents table, no wide exchange anywhere;
+   - on the driver, as ``embed_rows``: every CLI verb that embeds
+     (``save``, ``reindex``, and a recall on a YAML store without a
+     valid index) embeds the rows the YAML parse already holds in
+     Python, so no CLI verb starts a Python worker.
 
 All produce exact integer count vectors (ARRAY<BIGINT>); the
 L2-normalized float view is a derived expression (``normalized``).
@@ -74,14 +74,15 @@ def embed_pandas_udf(dim: int = DIM):
     return _embed
 
 
-def embed_rows(spark: SparkSession, bodies: list[str]) -> DataFrame:
-    """The (id, vec) EMBEDDINGS_SCHEMA frame of ``bodies``, the i-th
-    with id i (``yaml_io.parse_records_yaml`` densifies the ids),
+def embed_rows(spark: SparkSession, pairs: list[tuple[int, str]]) -> DataFrame:
+    """The (id, vec) EMBEDDINGS_SCHEMA frame of ``(id, body)`` pairs,
     embedded in this (the driver's) process by
     ``hashing.embed_text_int`` — the same integers as
-    ``build_embeddings`` without a Python worker. Blank bodies are
-    embedded too, to the zero vector; a consumer drops them with the
-    Spark-side ``is_blank`` filter, as ``recall`` does.
+    ``build_embeddings`` without a Python worker. Every pair is
+    embedded, a blank body to the zero vector: ``save``/``reindex``
+    pass only the non-blank records, which makes the frame
+    ``build_embeddings``' rows; a recall passes all of them and drops
+    the blank ones with the Spark-side ``is_blank`` filter.
 
     The vectors reach the JVM as one Arrow table; its scan runs no
     Python. The frame is dense: 8·DIM bytes (3 KiB) per record here,
@@ -91,14 +92,13 @@ def embed_rows(spark: SparkSession, bodies: list[str]) -> DataFrame:
     import pyarrow as pa
 
     cache: dict[str, tuple[int, int]] = {}
-    vecs = np.zeros((len(bodies), DIM), dtype=np.int64)
-    for i, body in enumerate(bodies):
+    ids = np.empty(len(pairs), dtype=np.int64)
+    vecs = np.zeros((len(pairs), DIM), dtype=np.int64)
+    for i, (rid, body) in enumerate(pairs):
+        ids[i] = rid
         vecs[i] = embed_text_int(body, DIM, cache)
     table = pa.table(
-        {
-            "id": np.arange(len(bodies), dtype=np.int64),
-            "vec": pa.FixedSizeListArray.from_arrays(vecs.ravel(), DIM),
-        }
+        {"id": ids, "vec": pa.FixedSizeListArray.from_arrays(vecs.ravel(), DIM)}
     )
     return spark.createDataFrame(table, EMBEDDINGS_SCHEMA)
 

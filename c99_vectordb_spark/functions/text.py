@@ -28,8 +28,11 @@ def normalize_ws_unicode(c: Column) -> Column:
     """Whitespace collapse with UNICODE \\s ((?U) = Java
     UNICODE_CHARACTER_CLASS) — matches the reference's Python re
     semantics, where e.g. U+00A0 NBSP is whitespace
-    (memo_cli.py:138-139)."""
-    return F.trim(F.regexp_replace(c, r"(?U)\s+", " "))
+    (memo_cli.py:138-139). Python's \\s also matches the separators
+    U+001C-U+001F, which Java's White_Space property leaves out, so the
+    class names them; with them the two agree on every code point of the
+    Basic Multilingual Plane."""
+    return F.trim(F.regexp_replace(c, r"(?U)[\s\x1c-\x1f]+", " "))
 
 
 def is_blank(c: Column) -> Column:

@@ -44,6 +44,14 @@ def normalize_ws(text: str) -> str:
     return re.sub(r"\s+", " ", text).strip()
 
 
+def is_blank(text: str | None) -> bool:
+    """The reference's blank-record test, ``not normalize_ws(text)``
+    (memo_cli.py:142-143): ``str.strip`` and re's ``\\s`` share one
+    Unicode whitespace set, and strip skips the regex pass. The
+    driver-side twin of ``functions.text.is_blank``."""
+    return not (text or "").strip()
+
+
 def normalize_ws_ascii(text: str) -> str:
     """ASCII-\\s whitespace collapse + space-strip — byte-exact twin of
     the Spark expression ``trim(regexp_replace(c, '\\s+', ' '))`` (Java

@@ -15,6 +15,12 @@ Reference write path (/root/reference/memo_cli.py:403-449 command_save,
 - M5 compaction (reindex): drop blank/deleted, re-assign dense ids
   0..n-1 in surviving id order
 
+Where each runs: the CLI's ``save`` and ``reindex`` apply M1/M2/M5 to
+the parsed YAML rows on the driver, as the reference does
+(``cli.cmd_save``, ``yaml_io.compact_records``, M4 as
+:func:`is_deleted_record`). The Spark operators below serve the native
+store, the streaming ingest and the registry, with M4's metadata rule.
+
 Scale notes: the upsert is an outer-join-free ``anti-join + union``
 (Delta MERGE semantics in plain Spark). Dense-id assignment needs a
 total order; at test scale a single ``row_number`` window is fine, at
@@ -26,7 +32,6 @@ through one task.
 
 from __future__ import annotations
 
-import pandas as pd
 import yaml
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -38,38 +43,27 @@ from .scalable_window import global_rank
 # M4 — tombstone predicate
 # ---------------------------------------------------------------------------
 
-def _body_tombstone_udf():
-    """Body-parses-as-YAML-map-with-truthy-deleted rule
-    (memo_cli.py:151-155) — inherently a YAML parse, so a (rare-path)
-    Arrow UDF; only called on bodies that LOOK like YAML maps."""
-
-    @F.pandas_udf("boolean")
-    def _is_yaml_deleted(bodies: pd.Series) -> pd.Series:
-        def check(b):
-            if not b or ":" not in b:
-                return False
-            try:
-                parsed = yaml.safe_load(b)
-            # Exception, not just YAMLError: PyYAML raises plain
-            # ValueError on e.g. out-of-range timestamps ("when:
-            # 2001-99-99"), and the reference treats ANY parse failure
-            # as not-deleted (memo_cli.py:150-155) instead of crashing
-            except Exception:  # noqa: BLE001
-                return False
-            return isinstance(parsed, dict) and bool(parsed.get("deleted"))
-
-        return bodies.map(check)
-
-    return _is_yaml_deleted
+def is_deleted_record(metadata: dict | None, body: str | None) -> bool:
+    """M4 on one driver-side record, the reference's rule
+    (memo_cli.py:146-155): truthy ``metadata['deleted']``, or a body
+    that parses as a YAML map with a truthy ``deleted``. ANY exception
+    from the parse means not deleted: PyYAML raises plain ValueError
+    on e.g. an out-of-range timestamp (``deleted: 2001-99-99``). A body
+    without a ``:`` cannot hold a map with a truthy value, so it skips
+    the parse."""
+    if metadata and metadata.get("deleted"):
+        return True
+    if not body or ":" not in body:
+        return False
+    try:
+        parsed = yaml.safe_load(body)
+    except Exception:  # noqa: BLE001 — the reference catches Exception
+        return False
+    return isinstance(parsed, dict) and bool(parsed.get("deleted"))
 
 
-def is_deleted(
-    metadata: Column | None = None,
-    body: Column | None = None,
-    check_body_yaml: bool = True,
-    metadata_types: Column | None = None,
-) -> Column:
-    """M4 — truthy metadata.deleted OR YAML-map body with truthy deleted.
+def is_deleted(metadata: Column, metadata_types: Column | None = None) -> Column:
+    """M4's metadata rule as a Spark predicate — truthy metadata.deleted.
 
     'Truthy' is the reference's Python ``bool()`` on the ORIGINAL YAML
     value (memo_cli.py:146-148), reconstructed from the stringified
@@ -78,38 +72,28 @@ def is_deleted(
     bool matches its spellings, str is falsy only when empty (the
     string "false" IS truthy in Python), list/map are falsy when empty.
     Without type tags, the fallback falsy list covers every stringified
-    form a Python-falsy YAML value can take.
+    form a Python-falsy YAML value can take. The body rule runs only on
+    the driver (:func:`is_deleted_record`), where the CLI compacts.
     """
-    preds = []
-    if metadata is not None:
-        v = metadata.getItem("deleted")
-        if metadata_types is not None:
-            tag = metadata_types.getItem("deleted")
-            falsy = (
-                v.isNull()
-                | (tag == "null")
-                | ((tag == "bool") & v.isin("False", "false"))
-                | ((tag == "int") & F.coalesce(v.try_cast("long") == 0, F.lit(False)))
-                | ((tag == "float") & F.coalesce(v.try_cast("double") == 0.0, F.lit(False)))
-                | ((tag == "str") & (v == ""))
-                | ((tag == "list") & (v == "[]"))
-                | ((tag == "map") & (v == "{}"))
-            )
-        else:
-            falsy = v.isNull() | v.isin(
-                "False", "false", "0", "0.0", "-0.0", "", "None", "null",
-                "[]", "{}",
-            )
-        preds.append(metadata.isNotNull() & ~falsy)
-    if body is not None and check_body_yaml:
-        looks_yamlish = body.isNotNull() & body.contains(":")
-        preds.append(looks_yamlish & _body_tombstone_udf()(body))
-    if not preds:
-        return F.lit(False)
-    out = preds[0]
-    for p in preds[1:]:
-        out = out | p
-    return out
+    v = metadata.getItem("deleted")
+    if metadata_types is not None:
+        tag = metadata_types.getItem("deleted")
+        falsy = (
+            v.isNull()
+            | (tag == "null")
+            | ((tag == "bool") & v.isin("False", "false"))
+            | ((tag == "int") & F.coalesce(v.try_cast("long") == 0, F.lit(False)))
+            | ((tag == "float") & F.coalesce(v.try_cast("double") == 0.0, F.lit(False)))
+            | ((tag == "str") & (v == ""))
+            | ((tag == "list") & (v == "[]"))
+            | ((tag == "map") & (v == "{}"))
+        )
+    else:
+        falsy = v.isNull() | v.isin(
+            "False", "false", "0", "0.0", "-0.0", "", "None", "null",
+            "[]", "{}",
+        )
+    return metadata.isNotNull() & ~falsy
 
 
 # ---------------------------------------------------------------------------
@@ -214,22 +198,18 @@ def compact(
     id_col: str = "id",
     body_col: str = "body",
     metadata_col: str = "metadata",
-    check_body_yaml: bool = True,
     scalable: bool = False,
 ) -> DataFrame:
-    """M5 — drop blank/deleted records, re-sequence ids 0..n-1 in
-    surviving id order (memo_cli.py:343-366; [observed] id 2 -> id 1
-    after a delete). Returns the compacted table with dense ids."""
-    md = F.col(metadata_col) if metadata_col in records.columns else None
-    tags_col = f"{metadata_col}_types"
-    tags = F.col(tags_col) if tags_col in records.columns else None
-    survivors = records.filter(
-        ~Ft.is_blank(F.col(body_col))
-        & ~is_deleted(
-            md, F.col(body_col), check_body_yaml=check_body_yaml,
-            metadata_types=tags,
-        )
-    )
+    """M5 — drop blank and metadata-tombstoned records, re-sequence ids
+    0..n-1 in surviving id order (memo_cli.py:343-366; [observed] id 2
+    -> id 1 after a delete). Returns the compacted table with dense ids.
+    The CLI's ``reindex`` compacts its parsed rows on the driver
+    instead (``yaml_io.compact_records``), body tombstones included."""
+    survivors = records.filter(~Ft.is_blank(F.col(body_col)))
+    if metadata_col in records.columns:
+        tags_col = f"{metadata_col}_types"
+        tags = F.col(tags_col) if tags_col in records.columns else None
+        survivors = survivors.filter(~is_deleted(F.col(metadata_col), tags))
     out = assign_dense_ids(survivors, order_col=id_col, scalable=scalable)
     return out.drop(id_col).withColumnRenamed("new_id", id_col).select(
         records.columns

@@ -590,7 +590,7 @@ def q_compaction_reseq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("map<string,string>").alias("metadata_types"),
         F.lit(None).cast("map<string,array<string>>").alias("metadata_lists"),
     )
-    out = compact(records, check_body_yaml=False, scalable=True)
+    out = compact(records, scalable=True)
     return out.select("id", F.length("body").alias("body_len"))
 
 

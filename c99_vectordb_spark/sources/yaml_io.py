@@ -17,11 +17,15 @@ and get identical semantics:
 
 The parse runs driver-side, as the reference's does: the reference
 loads its YAML store wholesale per command, and error behavior stays
-byte-identical to it. Scale lives in the Parquet store (store.py). A
-CLI recall without a valid index takes the parsed rows
-(``read_records_yaml``) and embeds their bodies on the driver too
-(``functions.embed.embed_rows``), instead of shipping every body to
-Python workers and the vectors back.
+byte-identical to it. Scale lives in the Parquet store (store.py).
+The CLI's verbs work on the parsed rows (``read_records_yaml``) in this
+(the driver's) process: ``save`` applies its batch to them and
+``reindex`` compacts them (``compact_records``), both dump them back
+(``save_records_yaml``), and both, like a recall without a valid index,
+embed them with ``functions.embed.embed_rows``. Spark gets the rows as
+an Arrow-backed frame (``rows_to_df``) for a recall's or an analyze's
+query, and the vectors for the ``<base>.emb`` write; no verb ships a
+body to a Python worker.
 """
 
 from __future__ import annotations
@@ -35,7 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..fmt import LiteralStr
+from ..hashing import is_blank
 from ..model import RECORDS_SCHEMA, SAVE_BATCH_SCHEMA
+from ..operators.mutate import is_deleted_record
 from .convert import record_row, split_metadata
 
 #: Spark MapType does not preserve insertion order, but the reference
@@ -291,9 +297,28 @@ def revive_metadata(r) -> dict[str, Any]:
     return md
 
 
+def _keyed(row: tuple) -> dict[str, Any]:
+    """A parsed row (``YAML_RECORDS_SCHEMA`` column order, or the
+    ``RECORDS_SCHEMA`` prefix of it) keyed by column name."""
+    return dict(zip(YAML_RECORDS_SCHEMA.names, row))
+
+
+def compact_records(rows: list[tuple]) -> list[tuple]:
+    """M5 on parsed rows (memo_cli.py:343-366): drop the blank and the
+    tombstoned records (``mutate.is_deleted_record``) and renumber the
+    rest 0..n-1 in id order. Only a row whose ``metadata_keys`` hold
+    ``deleted`` needs its metadata revived for the check."""
+    kept = []
+    for r in rows:
+        md = revive_metadata(_keyed(r)) if "deleted" in (r[6] or ()) else None
+        if not is_blank(r[1]) and not is_deleted_record(md, r[1]):
+            kept.append(r)
+    return [(i, *r[1:]) for i, r in enumerate(kept)]
+
+
 def records_to_yaml(rows: list) -> str:
-    """Canonical multi-doc dump of collected RECORDS_SCHEMA rows
-    (ordered by id; caller collects — adapter-scale only)."""
+    """Canonical multi-doc dump of RECORDS_SCHEMA rows keyed by column
+    name (adapter-scale only)."""
     docs = []
     for r in sorted(rows, key=lambda r: r["id"]):
         md = revive_metadata(r)
@@ -308,10 +333,10 @@ def records_to_yaml(rows: list) -> str:
     )
 
 
-def save_records_yaml(records: DataFrame, path: str) -> None:
-    rows = records.collect()
+def save_records_yaml(rows: list[tuple], path: str) -> None:
+    """Write parsed rows (see :func:`_keyed`) as the canonical store."""
     with open(path, "w", encoding="utf-8") as f:
-        f.write(records_to_yaml(rows))
+        f.write(records_to_yaml([_keyed(r) for r in rows]))
 
 
 def parse_save_batch_yaml(text: str) -> list[tuple]:

@@ -261,27 +261,58 @@ def test_reindex_swaps_in_fingerprinted_index(spark, db_base):
 
 
 def test_reindex_failed_count_releases_caches(spark, db_base, monkeypatch):
-    """A failure while counting the compacted frame must not leave
-    either cached frame behind. A cache whose first build fails has
-    persisted no RDD yet, but it stays registered with the session's
-    cache manager, and the next query over that plan would build it."""
-    from pyspark.sql import functions as F
+    """A compaction that raises leaves the YAML bytes and ``<base>.emb``
+    as they were, and caches nothing in the session: reindex compacts
+    the parsed rows on the driver before it writes anything."""
+    _, rc = _mine(spark, db_base, ["reindex"])
+    assert rc == 0
 
-    compact = cli.M.compact
+    def snapshot():
+        out = {}
+        for root in (db_base + ".yaml", db_base + ".emb"):
+            paths = [root] if os.path.isfile(root) else [
+                os.path.join(root, n) for n in sorted(os.listdir(root))
+            ]
+            for p in paths:
+                with open(p, "rb") as f:
+                    out[p] = f.read()
+        return out
 
-    def failing_compact(records):
-        return compact(records).withColumn(
-            "body", F.raise_error(F.lit("boom from compact"))
-        )
+    before = snapshot()
 
-    monkeypatch.setattr(cli.M, "compact", failing_compact)
+    def failing_compact(rows):
+        raise RuntimeError("boom from compact")
+
+    monkeypatch.setattr(cli.yaml_io, "compact_records", failing_compact)
     spark.catalog.clearCache()
-    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
-    before = persistent().size()  # RDDs other tests persisted directly
-    with pytest.raises(Exception, match="boom from compact"):
+    with pytest.raises(RuntimeError, match="boom from compact"):
         cli.main(["-f", db_base, "reindex"])
+    assert snapshot() == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert persistent().size() == before
+
+
+@pytest.mark.parametrize("verb", ["save", "reindex"])
+def test_index_write_runs_no_python(spark, db_base, tmp_path, monkeypatch, verb):
+    """The frame that save and reindex write as ``<base>.emb`` was
+    embedded on the driver: its executed plan evaluates no Python."""
+    frames = []
+    swap_write = cli._swap_write
+
+    def capturing_swap_write(df, *args, **kwargs):
+        frames.append(df)
+        return swap_write(df, *args, **kwargs)
+
+    monkeypatch.setattr(cli, "_swap_write", capturing_swap_write)
+    argv = ["reindex"]
+    if verb == "save":
+        batch = tmp_path / "batch.yaml"
+        batch.write_text("- body: a new note\n- id: 1\n  body: replaced\n", encoding="utf-8")
+        argv = ["save", str(batch)]
+    _, rc = _mine(spark, db_base, argv)
+    assert rc == 0 and len(frames) == 1
+    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert frames[0].count() == (8 if verb == "save" else 7)
 
 
 def _capture_both(fn, *args) -> tuple[str, str, int]:

@@ -1,0 +1,271 @@
+"""Frozen ``save``/``reindex`` transcripts that need no reference tree.
+
+Each case seeds a YAML store (or none), runs CLI verbs on it in order,
+in-process, and after every step records stdout, stderr, the exit code,
+the YAML bytes, the index rows of ``<base>.emb`` and whether the index's
+fingerprint names the YAML beside it. ``tests/golden/save_reindex.json``
+holds the expected transcripts. All of them but ``unit_separator_body``
+were recorded from the Spark-side implementation of the two verbs
+(``mutate.upsert``/``compact`` and the pandas-UDF index build), so the
+driver-side one is held to its bytes; that case records the one intended
+change: a body of only U+001C-U+001F is blank, as it is to Python's
+``\\s`` and to the reference.
+
+Re-record cases (all, or the named ones) with the package that
+``PYTHONPATH`` points at:
+
+    PYTHONPATH=. python tests/test_cli_transcripts.py --record [NAME ...]
+"""
+
+from __future__ import annotations
+
+import contextlib
+import hashlib
+import io
+import json
+import os
+import sys
+import tempfile
+
+import pytest
+
+GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden", "save_reindex.json")
+
+_STORE = """\
+---
+id: 0
+metadata:
+  source: user
+  tags: [food, personal]
+  ts: '2026-01-15'
+body: |-
+  remember the pasta recipe
+---
+id: 1
+metadata:
+  source: user
+  priority: 2
+body: |-
+  dark mode preferred
+---
+id: 2
+metadata: {}
+body: |-
+  rotate the api keys quarterly
+---
+id: 3
+metadata:
+  source: chat
+  when: 2026-03-10
+body: |-
+  book flights for the offsite
+"""
+
+_GAP_STORE = """\
+---
+id: 0
+body: first
+---
+id: 1
+metadata: {lang: en}
+body: second
+---
+id: 3
+body: after a gap
+"""
+
+# the metadata forms of test_mutate.py::test_is_deleted_python_falsy_forms;
+# a record is a tombstone when bool(metadata['deleted']) is true
+_DELETED_FORMS = ["0.0", "-0.0", "[]", "{}", "'false'", "''", ".nan", "0",
+                  "2.5", "false", "true", "'None'", "null"]
+_FALSY_STORE = "".join(
+    f"---\nid: {i}\nmetadata:\n  deleted: {v}\n  n: {i}\nbody: record {i}\n"
+    for i, v in enumerate(_DELETED_FORMS)
+)
+
+_BODY_STORE = """\
+---
+id: 0
+body: 'deleted: true'
+---
+id: 1
+body: 'deleted: 2001-99-99'
+---
+id: 2
+body: "\\xA0"
+---
+id: 3
+body: 'deleted: false'
+---
+id: 4
+body: 'just a body with: colon'
+---
+id: 5
+body: plain body text
+"""
+
+_UNIT_SEPARATOR_STORE = """\
+---
+id: 0
+body: alpha note
+---
+id: 1
+body: "\\x1C"
+---
+id: 2
+body: beta note
+---
+id: 3
+body: " \\x1F "
+"""
+
+#: name -> (seed store text or None, steps); a ``save`` step is
+#: ``("save", <batch text>)``, any other step is the verb's argv
+CASES = {
+    "append_and_overwrite": (_STORE, [
+        ("save", "- body: new note about pasta sauce\n  metadata: {source: chat, n: 7}\n"
+                 "- id: 1\n  body: overwritten preference\n  metadata: {source: system}\n"
+                 "- body: appended without metadata\n"),
+        ("recall", "-k", "3", "pasta"),
+        ("reindex",),
+    ]),
+    "duplicate_overwrite_last_wins": (_STORE, [
+        ("save", "- id: 2\n  body: first write\n"
+                 "- body: an append between\n"
+                 "- id: 2\n  body: second write wins\n  metadata: {v: 2}\n"),
+    ]),
+    "bad_overwrite_blank_gap": (_GAP_STORE, [
+        ("save", "- body: ok append\n- id: 0\n  body: fine\n"
+                 "- id: 2\n  body: target is a blank gap\n- body: never echoed\n"),
+    ]),
+    "bad_overwrite_past_end": (_GAP_STORE, [
+        ("save", "- id: 1\n  body: fine\n- id: 4\n  body: one past the end\n"),
+    ]),
+    "save_into_missing_store": (None, [
+        ("save", "- id: 0\n  body: nothing to overwrite\n"),
+        ("save", "- body: first memory\n  metadata: {lang: en}\n---\nbody: second memory\n"),
+        ("reindex",),
+    ]),
+    "reindex_missing_store": (None, [
+        ("reindex",),
+        ("recall", "-k", "3", "anything"),
+    ]),
+    "reindex_all_blank": ("---\nid: 0\nbody: ''\n---\nid: 2\nbody: '   '\n", [
+        ("reindex",),
+        ("save", "- body: the only memory\n"),
+    ]),
+    "metadata_falsy_forms": (_FALSY_STORE, [
+        ("reindex",),
+        ("save", "- id: 0\n  body: overwrite survives\n"),
+    ]),
+    "body_tombstones": (_BODY_STORE, [
+        ("recall", "-k", "10", "body"),
+        ("reindex",),
+    ]),
+    "unit_separator_body": (_UNIT_SEPARATOR_STORE, [
+        ("recall", "-k", "10", "--yaml", "note"),
+        ("save", "- id: 1\n  body: overwrite of a separator-only body\n"),
+        ("reindex",),
+    ]),
+}
+
+
+def _index_rows(emb_path: str):
+    """(id, nonzero (slot, count) pairs) of every index row, by id."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(emb_path):
+        return None
+    table = pq.read_table(emb_path).to_pydict()
+    rows = sorted(zip(table["id"], table["vec"]))
+    return [[i, [[j, v] for j, v in enumerate(vec) if v]] for i, vec in rows]
+
+
+def _fingerprint_ok(yaml_path: str, emb_path: str):
+    try:
+        with open(os.path.join(emb_path, "_SOURCE_SHA256")) as f:
+            recorded = f.read()
+        with open(yaml_path, "rb") as f:
+            return recorded == hashlib.sha256(f.read()).hexdigest()
+    except OSError:
+        return None
+
+
+def run_case(name: str) -> list[dict]:
+    """Run one case in a fresh directory; one transcript dict per step."""
+    from c99_vectordb_spark import cli
+
+    store, steps = CASES[name]
+    out = []
+    with tempfile.TemporaryDirectory() as tmp:
+        base = os.path.join(tmp, "memo")
+        yaml_path, emb_path = base + ".yaml", base + ".emb"
+        if store is not None:
+            with open(yaml_path, "w", encoding="utf-8") as f:
+                f.write(store)
+        for step in steps:
+            argv = list(step)
+            if step[0] == "save":
+                batch = os.path.join(tmp, "batch.yaml")
+                with open(batch, "w", encoding="utf-8") as f:
+                    f.write(step[1])
+                argv = ["save", batch]
+            stdout, stderr = io.StringIO(), io.StringIO()
+            with contextlib.redirect_stdout(stdout), contextlib.redirect_stderr(stderr):
+                rc = cli.main(["-f", base, *argv])
+            try:
+                with open(yaml_path, encoding="utf-8") as f:
+                    yaml_text = f.read()
+            except FileNotFoundError:
+                yaml_text = None
+            out.append({
+                "argv": list(step),
+                "stdout": stdout.getvalue().replace(tmp, "<tmp>"),
+                "stderr": stderr.getvalue().replace(tmp, "<tmp>"),
+                "rc": rc,
+                "yaml": yaml_text,
+                "index": _index_rows(emb_path),
+                "fingerprint_ok": _fingerprint_ok(yaml_path, emb_path),
+            })
+    return out
+
+
+def _golden() -> dict:
+    with open(GOLDEN, encoding="utf-8") as f:
+        return json.load(f)
+
+
+def test_golden_covers_every_case():
+    assert sorted(_golden()) == sorted(CASES)
+
+
+@pytest.mark.parametrize("name", sorted(CASES))
+def test_transcript_matches_golden(spark, name):
+    want = _golden()[name]
+    got = run_case(name)
+    assert len(got) == len(want)
+    for i, (g, w) in enumerate(zip(got, want)):
+        assert g == w, f"{name} step {i} {w['argv'][0]}"
+
+
+def _record(names: list[str]) -> None:
+    from c99_vectordb_spark.session import get_spark
+
+    golden = _golden() if os.path.exists(GOLDEN) else {}
+    spark = get_spark("record-transcripts", shuffle_partitions=8)
+    try:
+        for name in names or sorted(CASES):
+            golden[name] = run_case(name)
+            print(f"recorded {name}: rc {[s['rc'] for s in golden[name]]}")
+    finally:
+        spark.stop()
+    os.makedirs(os.path.dirname(GOLDEN), exist_ok=True)
+    with open(GOLDEN, "w", encoding="utf-8") as f:
+        json.dump({k: golden[k] for k in sorted(golden)}, f, indent=1, ensure_ascii=True)
+        f.write("\n")
+
+
+if __name__ == "__main__":
+    if sys.argv[1:2] != ["--record"]:
+        raise SystemExit(__doc__)
+    _record(sys.argv[2:])

@@ -122,7 +122,7 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
     )
     rows = yaml_io.read_records_yaml(str(path))
     records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
-    driver = embed.embed_rows(spark, [row[1] for row in rows])
+    driver = embed.embed_rows(spark, [row[:2] for row in rows])
     udf = embed.build_embeddings(records, dim=STORE_DIM)
     got = {r.id: list(r.vec) for r in driver.collect()}
     want = {r.id: list(r.vec) for r in udf.orderBy("id").collect()}
@@ -131,3 +131,26 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
     assert sorted(set(got) - set(want)) == [0, 1, 2, 3, 4, 5, 6]
     assert all(got[i] == [0] * STORE_DIM for i in set(got) - set(want))
     assert want[10] != [0] * STORE_DIM and max(map(abs, want[10])) > 127
+
+
+def test_blank_predicates_agree(spark):
+    """The Spark ``is_blank`` (recall's and validate_overwrites' filter)
+    and the Python one (the driver-side compaction's and save's check)
+    agree on a body made of any one BMP code point, alone and between
+    spaces. Java's (?U)\\s alone misses U+001C-U+001F, which Python's
+    \\s (the reference's) matches."""
+    import pandas as pd
+
+    bodies = [
+        b for c in range(0x10000) if not 0xD800 <= c <= 0xDFFF
+        for b in (chr(c), f" {chr(c)} ")
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"body": bodies}), "body STRING")
+    spark_blank = {
+        r.body for r in df.filter(Ft.is_blank(F.col("body"))).collect()
+    }
+    python_blank = {b for b in bodies if hashing.is_blank(b)}
+    assert python_blank == {b for b in bodies if not hashing.normalize_ws(b)}
+    assert "\x1c" in python_blank and "\xa0" in python_blank
+    assert spark_blank == python_blank
+

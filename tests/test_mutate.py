@@ -65,22 +65,34 @@ def test_validate_overwrites_rejects_blank_and_missing(spark, base):
 
 
 def test_tombstone_metadata_and_body(spark):
+    """The metadata rule runs in Spark; the body rule (a YAML parse)
+    runs in the driver-side predicate that the CLI compacts with."""
     df = _records(
         spark,
         [
             (0, "normal", {"deleted": True}),
             (1, "normal", {"deleted": False}),
             (2, "normal", {"deleted": "true"}),
-            (3, "deleted: true", None),  # body-as-YAML tombstone
-            (4, "deleted: false", None),
-            (5, "just a body with: colon", None),
             (6, "normal", None),
         ],
     )
-    out = df.filter(
-        M.is_deleted(F.col("metadata"), F.col("body"))
-    ).select("id").collect()
-    assert sorted(r.id for r in out) == [0, 2, 3]
+    out = df.filter(M.is_deleted(F.col("metadata"))).select("id").collect()
+    assert sorted(r.id for r in out) == [0, 2]
+    bodies = {
+        "deleted: true": True,  # body-as-YAML tombstone
+        "deleted: false": False,
+        "just a body with: colon": False,
+        # PyYAML raises ValueError on the out-of-range date: not deleted
+        "deleted: 2001-99-99": False,
+        "{deleted: yes, other: 1}": True,
+        "- deleted: true": False,  # a list, not a map
+        "normal": False,
+        "": False,
+    }
+    for body, want in bodies.items():
+        assert M.is_deleted_record(None, body) is want, body
+    assert M.is_deleted_record({"deleted": True}, "normal")
+    assert not M.is_deleted_record({"deleted": 0.0}, "normal")
 
 
 def test_compact_resequences_ids(spark, base):

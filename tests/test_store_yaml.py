@@ -280,7 +280,7 @@ def test_index_read_runs_no_job_and_ignores_stale_index(spark, tmp_path):
     with open(yaml_path, "w", encoding="utf-8") as f:
         f.write(_TYPED_YAML)
     cli._write_embeddings(
-        yaml_io.load_records_yaml(spark, yaml_path), emb_path, yaml_path
+        spark, yaml_io.read_records_yaml(yaml_path), emb_path, yaml_path
     )
     sc = spark.sparkContext
     sc.setJobGroup("index-read", "index read")

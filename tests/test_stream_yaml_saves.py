@@ -50,7 +50,7 @@ def _seed_yaml(spark, path: str) -> None:
         for i in range(5)
     ]
     records = spark.createDataFrame(rows, RECORDS_SCHEMA)
-    yaml_io.save_records_yaml(records.orderBy("id"), path)
+    yaml_io.save_records_yaml(records.orderBy("id").collect(), path)
 
 
 def _canon(rows):

@@ -23,6 +23,11 @@ total. The CLI's own stdout is
 discarded; its stderr is shown when it exits non-zero. Example:
 
     python tools/proc_split.py -f /path/to/db recall -k 10 --filter "lang: en" --yaml "some query"
+
+The package it runs is the one of the checkout this file lives in,
+whatever the current directory or ``PYTHONPATH``: that checkout comes
+first on the child's ``PYTHONPATH``. To measure another tree, run that
+tree's copy of the tool.
 """
 
 from __future__ import annotations
