@@ -24,7 +24,6 @@ import shutil
 import sys
 import time
 
-import yaml as _yaml
 from pyspark.sql import SparkSession, functions as F
 
 from . import fmt, hashing
@@ -35,6 +34,7 @@ from .model import (
     DEFAULT_OFFSET,
     DIM,
     EMBEDDINGS_SCHEMA,
+    RECORDS_SCHEMA,
     STATS_TOP_N,
 )
 from .operators import analyze as A, filters as Flt, recall as R
@@ -81,22 +81,18 @@ def _db_paths(base: str) -> tuple[str, str]:
     return str(p.with_suffix(".yaml")), str(p.with_suffix(".emb"))
 
 
-def _load_or_error(yaml_path: str, load):
-    """``load()`` of the database YAML with the reference's error
+def _read_rows_or_error(yaml_path: str):
+    """The parsed rows of the database YAML with the reference's error
     contract (memo_cli.py:338-341 etc): any load failure prints one line
     to stderr and the verb returns 1 — never a traceback."""
     try:
-        return load(), 0
+        return yaml_io.read_records_yaml(yaml_path), 0
     except Exception as e:  # noqa: BLE001 — the reference catches Exception
         print(
             f"Error: failed to load database YAML '{yaml_path}': {e}",
             file=sys.stderr,
         )
         return None, 1
-
-
-def _read_rows_or_error(yaml_path: str):
-    return _load_or_error(yaml_path, lambda: yaml_io.read_records_yaml(yaml_path))
 
 
 def _yaml_sha256(yaml_path: str) -> str | None:
@@ -129,35 +125,13 @@ def _jvm_flags(spark) -> str:
     return " ".join(a for a in args if a.startswith("-X"))
 
 
-def _display_cell(scalar, tag, list_val, yrepr=None):
-    """format_cell parity (memo_cli.py:552-557) on the ORIGINAL value.
-
-    With the adapter's metadata_yaml column the original object comes
-    back exactly (safe_load of the canonical per-key dump), so
-    format_cell renders byte-identically to the reference — including
-    int list elements ([1, 2], not ['1', '2']) and strings needing
-    YAML quotes. The stringly fallback covers rows without the column."""
-    if yrepr is not None:
-        return fmt.format_cell(_yaml.safe_load(yrepr))
-    if list_val is not None:
-        return fmt.format_cell(list(list_val))
-    if scalar is None:
-        return ""
-    if tag in ("map", "list"):
-        try:
-            return fmt.format_cell(_yaml.safe_load(scalar))
-        except _yaml.YAMLError:
-            return scalar
-    return scalar
-
-
 def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     k = R.clamp_k(k)
     rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
-    records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
+    records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
     embeddings = _read_index(spark, emb_path, yaml_path)
     if embeddings is None:
         # no valid index: embed the parsed bodies here, on the driver,
@@ -215,9 +189,7 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
     if offset < 0:
         print("Error: --offset must be >= 0", file=sys.stderr)
         return 1
-    records, rc = _load_or_error(
-        yaml_path, lambda: yaml_io.load_records_yaml(spark, yaml_path)
-    )
+    rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
     try:
@@ -227,95 +199,82 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
     except ValueError as e:
         print(f"Error: invalid --filter expression: {e}", file=sys.stderr)
         return 1
-    matches = records.filter(fcol).cache()
-    n = matches.count()
-    print(fmt.matched(n))
-    if stats_key is not None:
-        return _print_stats(matches, stats_key)
-    # default projection: id + first 3 sorted metadata keys
-    # (memo_cli.py:560-565)
-    selected = fields if fields else ["id", *A.default_fields(matches)]
-    extra = [
-        c
-        for c in ("metadata_yaml", "metadata_keys")
-        if c in matches.columns
-    ]
-    page = (
-        matches.orderBy("id")
-        .offset(offset)
-        .limit(limit)
-        .select("id", "metadata", "metadata_types", "metadata_lists", *extra)
-        .collect()
-    )
-    rows = []
+    # Spark filters, counts, pages and aggregates; the cells render from
+    # the parsed rows (row i has id i) at the ids it returns
+    matches = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA).filter(fcol).cache()
+    try:
+        print(fmt.matched(matches.count()))
+        if stats_key is not None:
+            return _print_stats(matches, stats_key, rows)
+        # default projection: id + first 3 sorted metadata keys
+        # (memo_cli.py:560-565)
+        selected = fields if fields else ["id", *A.default_fields(matches)]
+        page = matches.orderBy("id").offset(offset).limit(limit).select("id").collect()
+    finally:
+        matches.unpersist()
+    table = []
     for r in page:
-        row = []
-        for field in selected:
-            if field == "id":
-                row.append(str(r.id))
-                continue
-            if field == "metadata":
-                row.append(fmt.format_cell(yaml_io.revive_metadata(r)))
-                continue
-            key = field[len("metadata.") :] if field.startswith("metadata.") else field
-            try:
-                yrepr = (r.metadata_yaml or {}).get(key)
-            except AttributeError:
-                yrepr = None
-            row.append(
-                _display_cell(
-                    (r.metadata or {}).get(key),
-                    (r.metadata_types or {}).get(key),
-                    (r.metadata_lists or {}).get(key),
-                    yrepr,
-                )
-            )
-        rows.append(row)
+        md = yaml_io.str_keys(rows[r.id][2])
+        table.append([_cell(r.id, md, field) for field in selected])
     headers = ["ID" if f == "id" else f for f in selected]
-    out = fmt.table(headers, rows)
+    out = fmt.table(headers, table)
     if out:
         print(out)
     return 0
 
 
-def _print_stats_metadata(matches, key: str) -> int:
-    """--stats metadata special case (memo_cli.py:543-547 resolve +
-    581-597): each matched record contributes its WHOLE metadata dict,
-    counted by format_cell rendering. Driver-side over the collected
-    matches — the reference is driver-side too, and the YAML adapter is
-    human-scale by contract. Dicts are never numeric or date-like
-    (float(str(dict)) and parse_iso both fail), so no range prints."""
-    from collections import Counter
+def _cell(rid: int, md: dict, field: str) -> str:
+    """One analyze cell: format_cell (memo_cli.py:552-557) of the
+    loaded value."""
+    if field == "id":
+        return str(rid)
+    if field == "metadata":
+        return fmt.format_cell(md)
+    key = field[len("metadata.") :] if field.startswith("metadata.") else field
+    return fmt.format_cell(md.get(key))
 
-    extras = [
-        c
-        for c in ("metadata_yaml", "metadata_keys")
-        if c in matches.columns
-    ]
-    rows = (
-        matches.orderBy("id")
-        .select("id", "metadata", "metadata_types", "metadata_lists", *extras)
-        .collect()
-    )
-    counter: Counter = Counter(
-        fmt.format_cell(yaml_io.revive_metadata(r)) for r in rows
-    )
-    top = counter.most_common(STATS_TOP_N)
+
+def _print_stats(matches, key: str, rows) -> int:
+    """Stats block (memo_cli.py:581-633): the matched values counted by
+    their format_cell rendering (memo_cli.py:588). Top-4 tie-break: the
+    reference's Counter insertion order equals first-occurrence order
+    of an id-ascending scan, so (count desc, min(id) asc) reproduces
+    it exactly."""
+    numeric = date_range = None
+    if key == "metadata":
+        # each matched record counts its WHOLE metadata dict
+        # (memo_cli.py:543-547); a dict is never numeric or date-like
+        # (float(str(dict)) and parse_iso both fail)
+        groups = [
+            (fmt.format_cell(yaml_io.str_keys(rows[r.id][2])), 1, r.id)
+            for r in matches.select("id").collect()
+        ]
+    else:
+        groups, numeric, date_range = _value_stats(matches, key, rows)
+    # (count, first id) per rendering
+    counts: dict[str, list[int]] = {}
+    for shown, n, first_id in groups:
+        c = counts.setdefault(shown, [0, first_id])
+        c[0] += n
+        c[1] = min(c[1], first_id)
+    ranked = sorted(counts.items(), key=lambda kv: (-kv[1][0], kv[1][1]))
+    top = [(shown, n) for shown, (n, _) in ranked[:STATS_TOP_N]]
     other = None
-    if len(counter) > STATS_TOP_N:
-        residual = sum(counter.values()) - sum(c for _, c in top)
-        other = (len(counter) - STATS_TOP_N, residual)
-    print(fmt.stats_block(key, len(counter), top, other, None, None))
+    if len(ranked) > STATS_TOP_N:
+        residual = sum(n for _, (n, _) in ranked[STATS_TOP_N:])
+        other = (len(ranked) - STATS_TOP_N, residual)
+    print(fmt.stats_block(key, len(ranked), top, other, numeric, date_range))
     return 0
 
 
-def _print_stats(matches, key: str) -> int:
-    """Stats block (memo_cli.py:581-633). Top-4 tie-break: the
-    reference's Counter insertion order equals first-occurrence order
-    of an id-ascending scan, so (count desc, min(id) asc) reproduces
-    it exactly AND is deterministic distributed."""
-    if key == "metadata":
-        return _print_stats_metadata(matches, key)
+def _value_stats(matches, key: str, rows):
+    """One key's (rendering, count, first id) groups and its numeric or
+    date-like range, aggregated by Spark. A group holds one str() (the
+    filter's, convert.split_metadata) of one type, so its values render
+    alike: as format_cell of the value at its first id. Groups of
+    different types can render alike too (1 and '1', [a] and '[a]');
+    the caller merges them. Nulls are dropped first
+    (memo_cli.py:583-586)."""
     k = key[len("metadata.") :] if key.startswith("metadata.") else key
     if key == "id":
         value = F.col("id").cast("string")
@@ -323,22 +282,7 @@ def _print_stats(matches, key: str) -> int:
         tag = F.lit("int")
     else:
         tag = F.coalesce(F.col("metadata_types").getItem(k), F.lit("str"))
-        # list/map values count by their format_cell rendering
-        # (memo_cli.py:588): the canonical flow dump in metadata_yaml
-        # IS that rendering (quoted elements included); the legacy
-        # join/repr forms are the fallback for rows without the column
-        lv = F.col("metadata_lists").getItem(k)
-        legacy = F.when(
-            lv.isNotNull(),
-            F.concat(F.lit("["), F.array_join(lv, ", "), F.lit("]")),
-        ).otherwise(F.col("metadata").getItem(k))
-        if "metadata_yaml" in matches.columns:
-            value = F.when(
-                tag.isin("list", "map"),
-                F.coalesce(F.col("metadata_yaml").getItem(k), legacy),
-            ).otherwise(F.col("metadata").getItem(k))
-        else:
-            value = legacy
+        value = F.when(tag != "null", F.col("metadata").getItem(k))
         # reference numeric path: isinstance(v,(int,float)) OR float(str(v));
         # booleans are ints in python -> True=1.0 (memo_cli.py:601-604)
         numeric_src = F.when(tag == "bool", (F.col("metadata").getItem(k) == "True").cast("double")).otherwise(
@@ -347,40 +291,39 @@ def _print_stats(matches, key: str) -> int:
     vals = matches.select(
         F.col("id").alias("rid"), value.alias("v"), numeric_src.alias("num"), tag.alias("tag")
     ).filter(F.col("v").isNotNull()).cache()
-
-    counts = (
-        vals.groupBy("v")
-        .agg(F.count(F.lit(1)).alias("count"), F.min("rid").alias("first_id"))
-        .orderBy(F.desc("count"), F.asc("first_id"))
-        .collect()
-    )
-    cardinality = len(counts)
-    top = [(r.v, r["count"]) for r in counts[:STATS_TOP_N]]
-    other = None
-    if cardinality > STATS_TOP_N:
-        residual = sum(r["count"] for r in counts[STATS_TOP_N:])
-        other = (cardinality - STATS_TOP_N, residual)
-
-    numeric = None
-    date_range = None
-    agg = vals.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bool_and(F.col("num").isNotNull()), F.lit(False)).alias("ok"),
-        F.min("num").alias("mn"),
-        F.max("num").alias("mx"),
-        F.avg("num").alias("av"),
-    ).collect()[0]
-    if agg.n > 0 and agg.ok:
-        numeric = (agg.mn, agg.mx, agg.av)
-    else:
-        d = A.date_stats(vals.filter(F.col("tag") == "str"), F.col("v")).collect()[0]
-        total = vals.count()
-        if d.n == total and total > 0 and d.date_ok:
-            date_range = (d.dmin, d.dmax)
-    print(
-        fmt.stats_block(key, cardinality, top, other, numeric, date_range)
-    )
-    return 0
+    try:
+        groups = (
+            vals.groupBy("v", "tag")
+            .agg(F.count(F.lit(1)).alias("count"), F.min("rid").alias("first_id"))
+            .collect()
+        )
+        numeric = None
+        date_range = None
+        agg = vals.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bool_and(F.col("num").isNotNull()), F.lit(False)).alias("ok"),
+            F.min("num").alias("mn"),
+            F.max("num").alias("mx"),
+            F.avg("num").alias("av"),
+        ).collect()[0]
+        if agg.n > 0 and agg.ok:
+            numeric = (agg.mn, agg.mx, agg.av)
+        else:
+            d = A.date_stats(vals.filter(F.col("tag") == "str"), F.col("v")).collect()[0]
+            if d.n == agg.n and agg.n > 0 and d.date_ok:
+                date_range = (d.dmin, d.dmax)
+    finally:
+        vals.unpersist()
+    rendered = [
+        (
+            r.v if key == "id"
+            else fmt.format_cell(yaml_io.str_keys(rows[r.first_id][2])[k]),
+            r["count"],
+            r.first_id,
+        )
+        for r in groups
+    ]
+    return rendered, numeric, date_range
 
 
 def cmd_save(spark, base, save_path, verbose) -> int:

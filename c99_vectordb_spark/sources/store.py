@@ -130,9 +130,7 @@ def migrate_yaml_to_parquet(
     from ..model import DIM
     from . import yaml_io
 
-    records = yaml_io.load_records_yaml(spark, yaml_path).select(
-        [f.name for f in RECORDS_SCHEMA.fields]
-    )
+    records = yaml_io.load_records_yaml(spark, yaml_path)
     store = ParquetStore(spark, base)
     store.save_records(records)
     persisted = store.load_records()

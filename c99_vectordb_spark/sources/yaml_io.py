@@ -15,17 +15,21 @@ and get identical semantics:
 - save-batch parsing with the reference's validations
   (memo_cli.py:369-400)
 
-The parse runs driver-side, as the reference's does: the reference
-loads its YAML store wholesale per command, and error behavior stays
+A parsed row is the reference's record, ``(id, body, metadata)``:
+``metadata`` is the dict ``yaml.safe_load`` returned, or None when it is
+absent or empty. This module is the one that knows that row format. The
+parse runs driver-side, as the reference's does: the reference loads its
+YAML store wholesale per command, and error behavior stays
 byte-identical to it. Scale lives in the Parquet store (store.py).
 The CLI's verbs work on the parsed rows (``read_records_yaml``) in this
 (the driver's) process: ``save`` applies its batch to them and
 ``reindex`` compacts them (``compact_records``), both dump them back
 (``save_records_yaml``), and both, like a recall without a valid index,
-embed them with ``functions.embed.embed_rows``. Spark gets the rows as
-an Arrow-backed frame (``rows_to_df``) for a recall's or an analyze's
-query, and the vectors for the ``<base>.emb`` write; no verb ships a
-body to a Python worker.
+embed them with ``functions.embed.embed_rows``; ``analyze`` renders its
+cells from them. The Spark columns come from one place, ``rows_to_df``:
+it derives RECORDS_SCHEMA's string triple (``convert.record_row``) for
+a recall's or an analyze's query and hands it over as Arrow; no verb
+ships a body to a Python worker.
 """
 
 from __future__ import annotations
@@ -34,36 +38,13 @@ import re
 from typing import Any
 
 import yaml
-from pyspark.sql import DataFrame, SparkSession
-
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..fmt import LiteralStr
 from ..hashing import is_blank
-from ..model import RECORDS_SCHEMA, SAVE_BATCH_SCHEMA
+from ..model import RECORDS_SCHEMA
 from ..operators.mutate import is_deleted_record
-from .convert import record_row, split_metadata
-
-#: Spark MapType does not preserve insertion order, but the reference
-#: renders metadata dicts in YAML insertion order (format_cell /
-#: save_yaml_tables with sort_keys=False). The adapter carries the
-#: original key order in an extra column.
-_KEYS_FIELD = T.StructField("metadata_keys", T.ArrayType(T.StringType()), True)
-#: per-key canonical YAML of the ORIGINAL value (safe_dump flow style):
-#: the stringly triple cannot reproduce the reference's format_cell
-#: rendering or round-trip typed values (dates, nested maps, non-string
-#: list elements) through save — this column can do both, because
-#: yaml.safe_load(metadata_yaml[k]) == the original object (round-5
-#: review findings on display/save/stats parity).
-_YREPR_FIELD = T.StructField(
-    "metadata_yaml", T.MapType(T.StringType(), T.StringType()), True
-)
-YAML_RECORDS_SCHEMA = T.StructType(
-    [*RECORDS_SCHEMA.fields, _YREPR_FIELD, _KEYS_FIELD]
-)
-YAML_BATCH_SCHEMA = T.StructType(
-    [*SAVE_BATCH_SCHEMA.fields, _YREPR_FIELD, _KEYS_FIELD]
-)
+from .convert import record_row
 
 
 #: LibYAML C bindings parse and emit ~10x faster than the pure-Python
@@ -73,13 +54,12 @@ YAML_BATCH_SCHEMA = T.StructType(
 #: asymmetries: (1) error TEXTS differ, so the fast loaders fall back
 #: to the pure-Python parser on failure to keep golden error messages;
 #: (2) the Python emitter appends a "..." document-end marker after
-#: TOP-LEVEL SCALARS that libyaml omits — fast dumps are therefore
-#: used only where that framing is invisible (the metadata_yaml
-#: carrier, whose consumers safe_load it; and whole-record mappings,
-#: which never take the marker), never in fmt.format_cell whose bytes
-#: are golden-matched to the reference; (3) libyaml escapes non-BMP
-#: characters where Python writes them — the dump helpers walk the
-#: payload and fall back to the Python emitter on astral content.
+#: TOP-LEVEL SCALARS that libyaml omits — the fast dump is therefore
+#: used only for whole-record mappings, which never take the marker,
+#: never in fmt.format_cell whose bytes are golden-matched to the
+#: reference; (3) libyaml escapes non-BMP characters where Python
+#: writes them — the dump walks the payload and falls back to the
+#: Python emitter on astral content.
 _C_SAFE_LOADER = getattr(yaml, "CSafeLoader", None)
 _C_SAFE_DUMPER = getattr(yaml, "CSafeDumper", None)
 
@@ -130,44 +110,11 @@ def _has_non_bmp(obj) -> bool:
     return False
 
 
-def fast_safe_dump(value, **kw) -> str:
-    if _C_SAFE_DUMPER is None or _has_non_bmp(value):
-        return yaml.safe_dump(value, **kw)
-    return yaml.dump(value, Dumper=_C_SAFE_DUMPER, **kw)
-
-
 def fast_safe_dump_all(values, **kw) -> str:
     values = list(values)
     if _C_SAFE_DUMPER is None or _has_non_bmp(values):
         return yaml.safe_dump_all(values, **kw)
     return yaml.dump_all(values, Dumper=_C_SAFE_DUMPER, **kw)
-
-
-def _scalar_dump(v) -> str:
-    """One metadata value's stored YAML repr, identical bytes with or
-    without libyaml: the pure-Python emitter appends a '...' document-
-    end marker after top-level scalars ('v\\n...\\n') that libyaml
-    omits, and the marker survives .strip() — so the same corpus would
-    persist different parquet bytes per environment (r7 advice).
-    Consumers safe_load either form; normalizing keeps any future
-    byte-level fingerprint over metadata_yaml environment-stable. A
-    legitimate value can't be clipped: a literal newline before '...'
-    only occurs as the marker (multi-line strings emit flow-quoted
-    with escaped newlines)."""
-    s = fast_safe_dump(
-        v, default_flow_style=True, sort_keys=False, allow_unicode=True
-    ).strip()
-    if s.endswith("\n..."):
-        s = s[: -len("\n...")].rstrip("\n")
-    return s
-
-
-def _yaml_extras(metadata: dict | None) -> tuple[dict | None, list | None]:
-    """(metadata_yaml, metadata_keys) for one record's original dict."""
-    if not metadata:
-        return None, None
-    yrepr = {str(k): _scalar_dump(v) for k, v in metadata.items()}
-    return yrepr, [str(k) for k in metadata.keys()]
 
 
 class YamlValidationError(ValueError):
@@ -197,7 +144,7 @@ def _validate_record_doc(doc) -> tuple[int, str, dict | None]:
 
 
 def parse_records_yaml(text: str) -> list[tuple]:
-    """Multi-doc YAML -> validated dense RECORDS_SCHEMA rows."""
+    """Multi-doc YAML -> validated dense ``(id, body, metadata)`` rows."""
     by_id: dict[int, tuple[str, dict | None]] = {}
     for doc in _parse_docs(text):
         rid, body, metadata = _validate_record_doc(doc)
@@ -205,12 +152,8 @@ def parse_records_yaml(text: str) -> list[tuple]:
             raise YamlValidationError(f"duplicate id {rid}")
         by_id[rid] = (body, metadata)
     n = (max(by_id) + 1) if by_id else 0
-    rows = []
-    for i in range(n):  # densify: gaps become blank records
-        body, metadata = by_id.get(i, ("", None))
-        yrepr, keys = _yaml_extras(metadata)
-        rows.append((*record_row(i, body, metadata), yrepr, keys))
-    return rows
+    # densify: gaps become blank records
+    return [(i, *by_id.get(i, ("", None))) for i in range(n)]
 
 
 #: YAML stores at or above this size get the ``-v`` hint to migrate to
@@ -218,20 +161,42 @@ def parse_records_yaml(text: str) -> list[tuple]:
 DISTRIBUTED_PARSE_BYTES = 4 << 20
 
 
+def _arrow_table(rows: list[tuple], arrow_schema):
+    import pyarrow as pa
+
+    columns = list(zip(*(record_row(*r) for r in rows))) or [()] * len(arrow_schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def rows_to_df(
     spark: SparkSession, rows: list[tuple], schema: T.StructType
 ) -> DataFrame:
-    """Parsed rows -> DataFrame, handed over as Arrow so the plan is a
-    JVM-only LocalTableScan. ``createDataFrame(list)`` parallelizes the
-    list through a PythonRDD instead, which boots Python workers the
-    verb otherwise never uses. ``dtype=object`` keeps nullable ids and
-    ids above 2**53 exact (a float64 column would round them)."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    import pandas as pd
+    """Parsed rows -> a RECORDS_SCHEMA or SAVE_BATCH_SCHEMA frame: the
+    one place the string triple Spark filters on is derived
+    (``convert.record_row``). The frame is handed over as one Arrow
+    table, empty or not, so its plan is a JVM-only LocalTableScan;
+    ``createDataFrame`` of a list, or of an empty pandas frame,
+    parallelizes through a PythonRDD instead, which boots Python
+    workers the verb otherwise never uses."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=schema.names, dtype=object), schema
+    # the Python-side columns are freed before Spark copies the table:
+    # alive through the copy, they raised a 20k-record recall's peak RSS
+    table = _arrow_table(rows, to_arrow_schema(schema))
+    # Spark rebuilds a map column with nested values before the hand-over
+    # and, under pyarrow < 17, drops its nulls (SPARK-48302): a record
+    # without metadata would read metadata_lists {}. That column is null
+    # exactly when metadata, a flat map that keeps its nulls, is. A SQL
+    # string, not a Column: PySpark's first Column imports IPython when
+    # it is installed (about 26 MB), which here would add to the peak.
+    return spark.createDataFrame(table, schema).selectExpr(
+        *(
+            f"IF(metadata IS NULL, NULL, {n}) AS {n}" if n == "metadata_lists" else n
+            for n in schema.names
+        )
     )
 
 
@@ -247,84 +212,35 @@ def read_records_yaml(path: str) -> list[tuple]:
 
 
 def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
-    return rows_to_df(spark, read_records_yaml(path), YAML_RECORDS_SCHEMA)
+    return rows_to_df(spark, read_records_yaml(path), RECORDS_SCHEMA)
 
 
-def _revive(scalar: str | None, tag: str | None):
-    """Best-effort inverse of convert.split_metadata stringification
-    for canonical YAML round-trips."""
-    if scalar is None:
-        return None
-    if tag == "int":
-        return int(scalar)
-    if tag == "float":
-        return float(scalar)
-    if tag == "bool":
-        return scalar == "True"
-    return scalar
-
-
-def revive_metadata(r) -> dict[str, Any]:
-    """Reconstruct the dynamic metadata dict of one collected row, in
-    original key order when ``metadata_keys`` is available.
-
-    When the ``metadata_yaml`` column is present the ORIGINAL values
-    come back exactly (safe_load of the canonical per-key dump —
-    dates stay dates, nested maps stay maps, int list elements stay
-    ints); the stringly-triple fallback covers rows from the native
-    store, which does not carry the column."""
-    scalars = r["metadata"] or {}
-    tags = r["metadata_types"] or {}
-    lists = r["metadata_lists"] or {}
-    try:
-        yrepr = r["metadata_yaml"] or {}
-    except (KeyError, ValueError):
-        yrepr = {}
-    try:
-        order = r["metadata_keys"]
-    except (KeyError, ValueError):
-        order = None
-    if order is None:
-        order = [*scalars.keys(), *[k for k in lists.keys() if k not in scalars]]
-    md: dict[str, Any] = {}
-    for k in order:
-        if k in yrepr and yrepr[k] is not None:
-            md[k] = fast_safe_load(yrepr[k])
-        elif k in lists and lists[k] is not None:
-            md[k] = list(lists[k])
-        elif k in scalars:
-            md[k] = _revive(scalars[k], tags.get(k))
-    return md
-
-
-def _keyed(row: tuple) -> dict[str, Any]:
-    """A parsed row (``YAML_RECORDS_SCHEMA`` column order, or the
-    ``RECORDS_SCHEMA`` prefix of it) keyed by column name."""
-    return dict(zip(YAML_RECORDS_SCHEMA.names, row))
+def str_keys(metadata: dict | None) -> dict[str, Any]:
+    """A record's metadata as the store writes and the CLI renders it:
+    top-level keys through ``str()`` (an int key 7 becomes '7'), values
+    as loaded; ``{}`` for none."""
+    return {str(k): v for k, v in (metadata or {}).items()}
 
 
 def compact_records(rows: list[tuple]) -> list[tuple]:
     """M5 on parsed rows (memo_cli.py:343-366): drop the blank and the
     tombstoned records (``mutate.is_deleted_record``) and renumber the
-    rest 0..n-1 in id order. Only a row whose ``metadata_keys`` hold
-    ``deleted`` needs its metadata revived for the check."""
-    kept = []
-    for r in rows:
-        md = revive_metadata(_keyed(r)) if "deleted" in (r[6] or ()) else None
-        if not is_blank(r[1]) and not is_deleted_record(md, r[1]):
-            kept.append(r)
-    return [(i, *r[1:]) for i, r in enumerate(kept)]
+    rest 0..n-1 in id order."""
+    kept = [
+        (body, md)
+        for _, body, md in rows
+        if not is_blank(body) and not is_deleted_record(md, body)
+    ]
+    return [(i, *r) for i, r in enumerate(kept)]
 
 
-def records_to_yaml(rows: list) -> str:
-    """Canonical multi-doc dump of RECORDS_SCHEMA rows keyed by column
-    name (adapter-scale only)."""
-    docs = []
-    for r in sorted(rows, key=lambda r: r["id"]):
-        md = revive_metadata(r)
-        docs.append(
-            {"id": r["id"], "metadata": md, "body": LiteralStr(r["body"] or "")}
-        )
+def records_to_yaml(rows: list[tuple]) -> str:
+    """Canonical multi-doc dump of parsed rows, in their (id) order
+    (adapter-scale only)."""
+    docs = [
+        {"id": rid, "metadata": str_keys(md), "body": LiteralStr(body or "")}
+        for rid, body, md in rows
+    ]
     # whole-record mappings never take the "..." marker, so the C
     # emitter's output is byte-identical to safe_dump_all here
     # (test_c_emitter_parity pins it)
@@ -334,14 +250,15 @@ def records_to_yaml(rows: list) -> str:
 
 
 def save_records_yaml(rows: list[tuple], path: str) -> None:
-    """Write parsed rows (see :func:`_keyed`) as the canonical store."""
+    """Write parsed rows as the canonical store."""
     with open(path, "w", encoding="utf-8") as f:
-        f.write(records_to_yaml([_keyed(r) for r in rows]))
+        f.write(records_to_yaml(rows))
 
 
 def parse_save_batch_yaml(text: str) -> list[tuple]:
-    """Save-batch file -> SAVE_BATCH_SCHEMA rows (memo_cli.py:369-400):
-    1+ entries; body non-empty string; optional id >= 0; metadata map."""
+    """Save-batch file -> ``(id or None, body, metadata)`` rows
+    (memo_cli.py:369-400): 1+ entries; body non-empty string; optional
+    id >= 0; metadata map."""
     parsed = _parse_docs(text)
     entries: list[dict] = []
     for doc in parsed:
@@ -366,8 +283,6 @@ def parse_save_batch_yaml(text: str) -> list[tuple]:
         metadata = e.get("metadata")
         if metadata is not None and not isinstance(metadata, dict):
             raise YamlValidationError("metadata must be a mapping")
-        scalars, tags, lists = split_metadata(metadata or None)
-        yrepr, keys = _yaml_extras(metadata or None)
-        rows.append((rid, body, scalars, tags, lists, yrepr, keys))
+        rows.append((rid, body, metadata or None))
     return rows
 

@@ -675,9 +675,7 @@ def apply_yaml_save_rows(
     if batch_id <= last_applied_batch(store):
         store.save_embeddings(build_embeddings(records, dim=dim))
         return False
-    batch = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_BATCH_SCHEMA).select(
-        [f.name for f in SAVE_BATCH_SCHEMA.fields]
-    )
+    batch = yaml_io.rows_to_df(spark, rows, SAVE_BATCH_SCHEMA)
     bad = validate_overwrites(records, batch)
     if bad:
         raise yaml_io.YamlValidationError(f"override ids do not exist: {bad}")

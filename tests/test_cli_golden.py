@@ -291,6 +291,19 @@ def test_reindex_failed_count_releases_caches(spark, db_base, monkeypatch):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+@pytest.mark.parametrize(
+    "extra", [["--fields", "id,source,tags"], ["--stats", "priority"]]
+)
+def test_analyze_releases_caches(spark, db_base, extra):
+    """analyze caches its matches, and --stats its values, for the Spark
+    jobs it runs over them; an in-process caller's session holds no
+    cached plan once the verb returns."""
+    spark.catalog.clearCache()
+    out, rc = _mine(spark, db_base, ["analyze", "--filter", "source: user", *extra])
+    assert rc == 0 and out.startswith("Matched: "), out
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("verb", ["save", "reindex"])
 def test_index_write_runs_no_python(spark, db_base, tmp_path, monkeypatch, verb):
     """The frame that save and reindex write as ``<base>.emb`` was

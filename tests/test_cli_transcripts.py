@@ -1,15 +1,26 @@
-"""Frozen ``save``/``reindex`` transcripts that need no reference tree.
+"""Frozen CLI transcripts that need no reference tree.
 
 Each case seeds a YAML store (or none), runs CLI verbs on it in order,
 in-process, and after every step records stdout, stderr, the exit code,
 the YAML bytes, the index rows of ``<base>.emb`` and whether the index's
 fingerprint names the YAML beside it. ``tests/golden/save_reindex.json``
-holds the expected transcripts. All of them but ``unit_separator_body``
-were recorded from the Spark-side implementation of the two verbs
-(``mutate.upsert``/``compact`` and the pandas-UDF index build), so the
-driver-side one is held to its bytes; that case records the one intended
-change: a body of only U+001C-U+001F is blank, as it is to Python's
-``\\s`` and to the reference.
+holds the expected transcripts.
+
+The ``save``/``reindex`` cases but ``unit_separator_body`` were recorded
+from the Spark-side implementation of the two verbs (``mutate.upsert``/
+``compact`` and the pandas-UDF index build), so the driver-side one is
+held to its bytes; that case records the one intended change: a body of
+only U+001C-U+001F is blank, as it is to Python's ``\\s`` and to the
+reference.
+
+The ``analyze_*`` and ``recall_filter_yaml_reindex`` cases were recorded
+while each parsed row still carried a per-key YAML dump of its metadata
+for rendering, so the code that renders from the loaded dicts is held
+to its bytes, except three re-recorded ``--stats`` cases:
+``analyze_stats_unicode_list`` and ``analyze_stats_map`` print list and
+map values as ``fmt.format_cell`` does (``--fields`` prints them so
+too), and ``analyze_stats_null`` drops null values before counting, as
+the reference does.
 
 Re-record cases (all, or the named ones) with the package that
 ``PYTHONPATH`` points at:
@@ -28,6 +39,7 @@ import sys
 import tempfile
 
 import pytest
+from test_cli_golden_r5 import TYPED_DB_YAML
 
 GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "golden", "save_reindex.json")
 
@@ -119,6 +131,80 @@ id: 3
 body: " \\x1F "
 """
 
+# test_cli_golden_r5's typed store, an id gap (4), then: an int key, a
+# null beside numbers (``a``), non-ASCII and non-BMP list and map values
+# (``uni``, ``umap``), the lists whose str() and YAML renderings differ
+# (``l``), ISO date strings (``ts``) and a record with no metadata
+_ANALYZE_STORE = TYPED_DB_YAML + """\
+---
+id: 5
+metadata:
+  source: user
+  7: int key
+  a: 3
+  n: 3
+  l: [1]
+  uni: [caf\u00e9, b]
+  umap: {\u043a\u043b\u044e\u0447: \u0437\u043d\u0430\u0447\u0435\u043d\u0438\u0435, e: "\U0001F600"}
+  ts: '2026-01-15'
+body: |-
+  int key and unicode record
+---
+id: 6
+metadata:
+  source: user
+  a: null
+  n: 2.5
+  l: ['1']
+  uni: ["\U0001F600 smile", caf\u00e9]
+  ts: '2026-02-01T10:00:00Z'
+body: |-
+  null value record
+---
+id: 7
+metadata:
+  source: user
+  a: 5
+  n: 4
+  l: [1.0]
+  umap: {\u043a\u043b\u044e\u0447: \u0434\u0440\u0443\u0433\u043e\u0435}
+body: |-
+  float list record
+---
+id: 8
+metadata:
+  source: user
+  l: [true]
+  uni: [caf\u00e9, b]
+  umap: {\u043a\u043b\u044e\u0447: \u0437\u043d\u0430\u0447\u0435\u043d\u0438\u0435, e: "\U0001F600"}
+body: |-
+  bool list record
+---
+id: 9
+metadata:
+  source: chat
+  l: ['true']
+body: |-
+  string list record
+---
+id: 10
+body: |-
+  record with no metadata
+"""
+
+_ALL_USER = ("analyze", "--filter", "source: user")
+
+# values of different types whose str() or format_cell renderings
+# coincide: --stats counts a value by its format_cell rendering
+_MIXED_STORE = "".join(
+    f"---\nid: {i}\nmetadata: {{source: user, k: {v}}}\nbody: mixed {i}\n"
+    for i, v in enumerate([
+        "{a: 1}", "\"{'a': 1}\"", "[1]", "'[1]'", "1", "'1'",
+        "[true]", "'[True]'", "[a]", "\"['a']\"", "'[a]'",
+    ])
+)
+
+
 #: name -> (seed store text or None, steps); a ``save`` step is
 #: ``("save", <batch text>)``, any other step is the verb's argv
 CASES = {
@@ -166,6 +252,35 @@ CASES = {
         ("recall", "-k", "10", "--yaml", "note"),
         ("save", "- id: 1\n  body: overwrite of a separator-only body\n"),
         ("reindex",),
+    ]),
+    "analyze_fields": (_ANALYZE_STORE, [
+        _ALL_USER,
+        (*_ALL_USER, "--fields", "id,7,a,l,uni,umap,cfg,when,ts,metadata"),
+        (*_ALL_USER, "--fields", "id,uni,metadata", "--limit", "2", "--offset", "3"),
+        ("analyze", "--filter", "source: nobody"),
+    ]),
+    "analyze_stats_id": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "id")]),
+    "analyze_stats_metadata": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "metadata")]),
+    "analyze_stats_list": (_ANALYZE_STORE, [
+        ("analyze", "--filter", "$or: [{source: user}, {source: chat}]", "--stats", "l"),
+    ]),
+    "analyze_stats_unicode_list": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "uni")]),
+    "analyze_stats_map": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "umap")]),
+    "analyze_stats_date": (_ANALYZE_STORE, [
+        (*_ALL_USER, "--stats", "ts"),
+        (*_ALL_USER, "--stats", "when"),
+    ]),
+    "analyze_stats_numeric": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "n")]),
+    "analyze_stats_null": (_ANALYZE_STORE, [(*_ALL_USER, "--stats", "a")]),
+    "analyze_stats_mixed_types": (_MIXED_STORE, [
+        (*_ALL_USER, "--stats", "k"),
+        (*_ALL_USER, "--fields", "id,k"),
+    ]),
+    "analyze_missing_store": (None, [_ALL_USER]),
+    "recall_filter_yaml_reindex": (_ANALYZE_STORE, [
+        ("recall", "-k", "4", "--filter", "source: user", "--yaml", "record"),
+        ("reindex",),
+        ("recall", "-k", "4", "--filter", "source: user", "--yaml", "record"),
     ]),
 }
 

@@ -109,7 +109,7 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
     the blank ones (which recall's is_blank filter drops) to zero."""
     import yaml
 
-    from c99_vectordb_spark.model import DIM as STORE_DIM
+    from c99_vectordb_spark.model import DIM as STORE_DIM, RECORDS_SCHEMA
     from c99_vectordb_spark.sources import yaml_io
 
     path = tmp_path / "db.yaml"
@@ -121,7 +121,7 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
         encoding="utf-8",
     )
     rows = yaml_io.read_records_yaml(str(path))
-    records = yaml_io.rows_to_df(spark, rows, yaml_io.YAML_RECORDS_SCHEMA)
+    records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
     driver = embed.embed_rows(spark, [row[:2] for row in rows])
     udf = embed.build_embeddings(records, dim=STORE_DIM)
     got = {r.id: list(r.vec) for r in driver.collect()}

@@ -114,26 +114,10 @@ def test_filter_parity_generated(spark, reference, mds, filt):
 )
 def test_yaml_roundtrip_through_reference(reference, tmp_path_factory, mds, bodies):
     """records_to_yaml output loads identically in the REFERENCE loader:
-    bodies byte-equal, metadata semantically equal (our typed triple
-    revives ints/floats/bools/strs/lists)."""
+    bodies byte-equal, metadata semantically equal (the parsed rows
+    keep the loaded ints/floats/bools/strs/lists)."""
     n = min(len(mds), len(bodies))
-    rows = [record_row(i, bodies[i], mds[i]) for i in range(n)]
-
-    class _R(dict):
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
-
-    dict_rows = [
-        {
-            "id": r[0],
-            "body": r[1],
-            "metadata": r[2],
-            "metadata_types": r[3],
-            "metadata_lists": r[4],
-        }
-        for r in rows
-    ]
-    text = yaml_io.records_to_yaml(dict_rows)
+    text = yaml_io.records_to_yaml([(i, bodies[i], mds[i]) for i in range(n)])
     p = tmp_path_factory.mktemp("yaml") / "db.yaml"
     p.write_text(text, encoding="utf-8")
     texts, metas = reference.load_yaml_tables(pathlib.Path(p))

@@ -138,48 +138,17 @@ def test_distributed_error_is_first_in_document_order(spark, tmp_path):
 
 def test_c_emitter_parity():
     """The adapter's bulk load/save path runs through libyaml
-    (fast_safe_dump/_load in sources/yaml_io) for the ~10x parse/emit
-    speedup; this pins the byte-parity contract that makes the switch
-    safe. Every value form the adapter can carry must emit IDENTICAL
-    bytes through yaml.safe_dump and the C dumper in BOTH framings the
-    code uses (per-key flow dump for metadata_yaml modulo the Python
-    emitter's top-level-scalar "..." framing marker, and the canonical
-    multi-doc record dump, which takes no marker). If libyaml is
-    absent the helpers already fall back to pure Python."""
+    (fast_safe_dump_all/_load_all in sources/yaml_io) for the ~10x
+    parse/emit speedup; this pins the byte-parity contract that makes
+    the switch safe: the canonical multi-doc record dump must emit
+    IDENTICAL bytes through yaml.safe_dump_all and the C dumper. If
+    libyaml is absent the helpers already fall back to pure Python."""
     import yaml
 
     from c99_vectordb_spark.fmt import LiteralStr
 
     if not hasattr(yaml, "CSafeDumper"):
         pytest.skip("libyaml not available; helpers use pure python")
-
-    values = [
-        0.1, 1e20, 1e-9, 3.14159, float("inf"), -float("inf"), 1.0,
-        123456789.123456789, 1e16, -0.0, 5e-324, 2.5e10,
-        0, 42, -7, 2**62, True, False, None,
-        "plain", "with: colon", "ümlaut", "emoji \U0001f600",
-        "'quoted'", '"dq"', "123", "null", "~", "yes", "no", "on",
-        "1e5", "0x1f", "", " lead", "trail ", "\ttabbed", "a" * 300,
-        "- dash", "# hash", "[bracket", "{brace", "*star", "&amp",
-        "!bang", "|pipe", ">gt", "%pct", "@at", "`tick",
-        [1, 2, {"a": 0.5}], {"k": [1.5, "x"], "d": {"n": None}},
-        ["ün", [True, 1e-3]],
-    ]
-    for v in values:
-        py = yaml.safe_dump(
-            v, default_flow_style=True, sort_keys=False, allow_unicode=True
-        )
-        c = yaml_io.fast_safe_dump(
-            v, default_flow_style=True, sort_keys=False, allow_unicode=True
-        )
-        # the one allowed diff: python appends "...\n" after top-level
-        # scalars; both sides are .strip()ed by _yaml_extras consumers
-        # via safe_load, never compared as bytes. Astral content must
-        # come back byte-IDENTICAL (the helper falls back to python).
-        assert py == c or py == c + "...\n", (v, py, c)
-        assert yaml.safe_load(c) == yaml.safe_load(py) or (
-            yaml.safe_load(py) != yaml.safe_load(py)  # NaN fixture guard
-        )
 
     # the record-dump framing must be EXACTLY byte-identical: these
     # bytes are the canonical .yaml file golden-matched to the
@@ -257,19 +226,26 @@ body: ""
 
 
 def test_yaml_load_is_jvm_only(spark, tmp_path):
-    """A non-empty YAML store loads as a LocalTableScan: no PythonRDD,
-    so no Python worker boots for a verb that runs no UDF; the rows
-    equal the driver-side parse (typed metadata, non-BMP text, a gap,
-    a blank body)."""
+    """A YAML store, or a missing one, loads as a LocalTableScan: no
+    PythonRDD, so no Python worker boots for a verb that runs no UDF;
+    the rows equal the driver-side parse's string triple (typed
+    metadata, non-BMP text, a gap, a blank body)."""
+    from c99_vectordb_spark.model import RECORDS_SCHEMA
+    from c99_vectordb_spark.sources.convert import record_row
+
     path = tmp_path / "db.yaml"
     path.write_text(_TYPED_YAML, encoding="utf-8")
     df = yaml_io.load_records_yaml(spark, str(path))
-    lineage = df._jdf.queryExecution().toRdd().toDebugString()
-    assert "PythonRDD" not in lineage, lineage
+    empty = yaml_io.load_records_yaml(spark, str(tmp_path / "missing.yaml"))
+    for frame in (df, empty):
+        lineage = frame._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
     want = spark.createDataFrame(
-        yaml_io.parse_records_yaml(_TYPED_YAML), yaml_io.YAML_RECORDS_SCHEMA
+        [record_row(*r) for r in yaml_io.parse_records_yaml(_TYPED_YAML)],
+        RECORDS_SCHEMA,
     )
     assert df.collect() == want.collect()
+    assert empty.collect() == [] and empty.schema == RECORDS_SCHEMA
 
 
 def test_index_read_runs_no_job_and_ignores_stale_index(spark, tmp_path):

@@ -41,16 +41,14 @@ _SAVE_2 = """\
 """
 
 
-def _seed_yaml(spark, path: str) -> None:
-    from c99_vectordb_spark.model import RECORDS_SCHEMA
+def _seed_yaml(path: str) -> None:
     from c99_vectordb_spark.sources import yaml_io
 
     rows = [
-        (i, f"seed record {i}", {"source": "seed"} if i % 2 else None, None, None)
+        (i, f"seed record {i}", {"source": "seed"} if i % 2 else None)
         for i in range(5)
     ]
-    records = spark.createDataFrame(rows, RECORDS_SCHEMA)
-    yaml_io.save_records_yaml(records.orderBy("id").collect(), path)
+    yaml_io.save_records_yaml(rows, path)
 
 
 def _canon(rows):
@@ -63,6 +61,7 @@ def _canon(rows):
 
 def test_stream_yaml_saves_equals_batch(spark):
     from c99_vectordb_spark.functions.embed import build_embeddings
+    from c99_vectordb_spark.model import SAVE_BATCH_SCHEMA
     from c99_vectordb_spark.operators.mutate import upsert
     from c99_vectordb_spark.sources import yaml_io
     from c99_vectordb_spark.sources.store import migrate_yaml_to_parquet
@@ -70,7 +69,7 @@ def test_stream_yaml_saves_equals_batch(spark):
 
     with tempfile.TemporaryDirectory() as tmp:
         yaml_path = os.path.join(tmp, "db.yaml")
-        _seed_yaml(spark, yaml_path)
+        _seed_yaml(yaml_path)
 
         # stream side: migrated store + two micro-batches
         store = migrate_yaml_to_parquet(
@@ -98,9 +97,7 @@ def test_stream_yaml_saves_equals_batch(spark):
         records = batch_store.load_records()
         for text in (_SAVE_1, _SAVE_2):
             rows = yaml_io.parse_save_batch_yaml(text)
-            batch = spark.createDataFrame(rows, yaml_io.YAML_BATCH_SCHEMA).select(
-                records.columns
-            )
+            batch = yaml_io.rows_to_df(spark, rows, SAVE_BATCH_SCHEMA)
             records = upsert(records, batch)
         expected_emb = build_embeddings(records, dim=DIM)
 
@@ -126,7 +123,7 @@ def test_stream_yaml_saves_rejects_bad_overwrite(spark):
 
     with tempfile.TemporaryDirectory() as tmp:
         yaml_path = os.path.join(tmp, "db.yaml")
-        _seed_yaml(spark, yaml_path)
+        _seed_yaml(yaml_path)
         store = migrate_yaml_to_parquet(
             spark, yaml_path, os.path.join(tmp, "db"), dim=DIM
         )
@@ -159,7 +156,7 @@ def test_apply_yaml_save_rows_replay_is_idempotent(spark):
 
     with tempfile.TemporaryDirectory() as tmp:
         yaml_path = os.path.join(tmp, "db.yaml")
-        _seed_yaml(spark, yaml_path)
+        _seed_yaml(yaml_path)
         store = migrate_yaml_to_parquet(
             spark, yaml_path, os.path.join(tmp, "db"), dim=DIM
         )

@@ -17,9 +17,10 @@ Prints one line per kind: the number of processes seen, their CPU
 seconds (user + system, the last value sampled for each process) and
 the peak of their summed resident memory, then the peak of the whole
 tree's resident memory and the CLI's exit code. A child sampled between
-a fork and its exec still reports its parent's resident pages: the
-JVM's short-lived helper commands show as ``other`` and can inflate the
-total. The CLI's own stdout is
+a fork and its exec still reports its parent's resident pages and
+command line: the JVM's short-lived helper commands, and a child of the
+driver JVM that has not yet exec'd, show as ``other`` and can inflate
+the total. The CLI's own stdout is
 discarded; its stderr is shown when it exits non-zero. Example:
 
     python tools/proc_split.py -f /path/to/db recall -k 10 --filter "lang: en" --yaml "some query"
@@ -47,20 +48,46 @@ SAMPLE_S = 0.02
 KINDS = ("python driver", "driver JVM", "python workers", "launcher", "other")
 
 
+def _args(pid: int) -> list[str] | None:
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return f.read().decode(errors="replace").split("\0")
+    except OSError:
+        return None
+
+
+def _is_driver_jvm(args: list[str] | None) -> bool:
+    return bool(args) and os.path.basename(args[0]) == "java" and (
+        "org.apache.spark.deploy.SparkSubmit" in " ".join(args)
+    )
+
+
+def _parent(pid: int) -> int | None:
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            # the field after the ")" that closes the command name
+            return int(f.read().rsplit(")", 1)[1].split()[1])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
 def kind_of(pid: int, root: int) -> str:
     if pid == root:
         return "python driver"
-    try:
-        with open(f"/proc/{pid}/cmdline", "rb") as f:
-            args = f.read().decode(errors="replace").split("\0")
-    except OSError:
+    args = _args(pid)
+    if args is None:
         return "other"
     cmd = " ".join(args)
     if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
         return "python workers"
     if "org.apache.spark.launcher.Main" in cmd:
         return "launcher"
-    if os.path.basename(args[0]) == "java" and "org.apache.spark.deploy.SparkSubmit" in cmd:
+    if _is_driver_jvm(args):
+        # a child the JVM forked, sampled before its exec, still shows
+        # the JVM's command line (and resident pages)
+        parent = _parent(pid)
+        if parent is not None and _is_driver_jvm(_args(parent)):
+            return "other"
         return "driver JVM"
     if "spark-submit" in cmd or "spark-class" in cmd:
         return "launcher"
