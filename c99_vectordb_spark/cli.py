@@ -14,6 +14,13 @@ edit to the YAML makes recall fall back to embedding the records on the
 driver as it parses the YAML, so the reference's save-only-index desync
 quirk (M6) STILL cannot occur; ``reindex`` rewrites both canonically.
 
+A verb that launches its own driver JVM starts it with a short-lived
+process's profile (``CLI_JAVA_OPTIONS``, ``CLI_CONF``) and maps Spark's
+classes from a per-user class-data archive (``class_archive``), which
+the first such verb writes; ``-v`` reports the archive as used, created
+or off on stderr. A verb run in a process with an active session uses
+that session as it is.
+
 Usage: ``python -m c99_vectordb_spark.cli [-f base] [-v] <verb> ...``
 """
 
@@ -27,6 +34,7 @@ import time
 from pyspark.sql import SparkSession, functions as F
 
 from . import fmt, hashing
+from .class_archive import ClassArchive
 from .functions.embed import embed_rows
 from .model import (
     DEFAULT_K,
@@ -38,6 +46,7 @@ from .model import (
     STATS_TOP_N,
 )
 from .operators import analyze as A, filters as Flt, recall as R
+from .session import driver_memory
 from .sources import yaml_io
 from .sources.store import _swap_write
 
@@ -108,14 +117,25 @@ def _yaml_sha256(yaml_path: str) -> str | None:
 #: Driver-JVM profile for a verb's short-lived process: it runs a few
 #: small jobs and exits, so C2 compilation (about 11 CPU-s of a 5k-record
 #: cold recall on 4 cores) never pays back, and the parallel GC's worker
-#: threads and heap sizing cost more than they save.
-CLI_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"
+#: threads and heap sizing cost more than they save. The JVM's own log
+#: lines go to stderr, never into the result on stdout (by default its
+#: warnings go to stdout), and the class-data archive's are off.
+#: ``class_archive`` adds the archive's flag.
+CLI_JAVA_OPTIONS = (
+    "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"
+    " -Xlog:disable -Xlog:all=warning,cds*=off:stderr"
+)
+#: Session confs of the CLI's profile. PySpark's call-site capture, read
+#: once per process, costs each ``pyspark.sql.functions`` call about four
+#: py4j round trips, and the first one imports IPython when it is
+#: installed; a verb's error output does not use the call site.
+CLI_CONF = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
 
 
-def _get_spark() -> SparkSession:
+def _get_spark(java_options: str = CLI_JAVA_OPTIONS) -> SparkSession:
     from .session import get_spark
 
-    return get_spark("memo-spark-cli", java_options=CLI_JAVA_OPTIONS)
+    return get_spark("memo-spark-cli", java_options=java_options, conf=CLI_CONF)
 
 
 def _jvm_flags(spark) -> str:
@@ -214,7 +234,7 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
         matches.unpersist()
     table = []
     for r in page:
-        md = yaml_io.str_keys(rows[r.id][2])
+        md = rows[r.id][2] or {}
         table.append([_cell(r.id, md, field) for field in selected])
     headers = ["ID" if f == "id" else f for f in selected]
     out = fmt.table(headers, table)
@@ -225,13 +245,14 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
 
 def _cell(rid: int, md: dict, field: str) -> str:
     """One analyze cell: format_cell (memo_cli.py:552-557) of the
-    loaded value."""
+    loaded value; the whole dict as loaded, a key as the filter sees
+    it (``yaml_io.str_keys``)."""
     if field == "id":
         return str(rid)
     if field == "metadata":
         return fmt.format_cell(md)
     key = field[len("metadata.") :] if field.startswith("metadata.") else field
-    return fmt.format_cell(md.get(key))
+    return fmt.format_cell(yaml_io.str_keys(md).get(key))
 
 
 def _print_stats(matches, key: str, rows) -> int:
@@ -246,7 +267,7 @@ def _print_stats(matches, key: str, rows) -> int:
         # (memo_cli.py:543-547); a dict is never numeric or date-like
         # (float(str(dict)) and parse_iso both fail)
         groups = [
-            (fmt.format_cell(yaml_io.str_keys(rows[r.id][2])), 1, r.id)
+            (fmt.format_cell(rows[r.id][2] or {}), 1, r.id)
             for r in matches.select("id").collect()
         ]
     else:
@@ -635,7 +656,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = SparkSession.getActiveSession()
     owns_session = spark is None
     if owns_session:
-        spark = _get_spark()
+        archive = ClassArchive(CLI_JAVA_OPTIONS, driver_memory())
+        with archive.launch_env():
+            spark = _get_spark(archive.java_options)
     try:
         if verbose:
             _log(
@@ -660,6 +683,7 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         if owns_session:
             spark.stop()
+            _log(verbose, f"class archive: {archive.finish()}")
 
 
 if __name__ == "__main__":

@@ -9,8 +9,11 @@ coalescing with a high initial value).
 
 ``java_options`` starts a NEW driver JVM with extra flags; the CLI
 passes its short-lived-process profile (``cli.CLI_JAVA_OPTIONS``: C1-only
-JIT, serial GC), while tests, ``bench.py`` and the registry keep the JVM
-defaults, whose C2 compiler pays off in a long-lived session. The flags
+JIT, serial GC, JVM logging on stderr, plus the flag of its class-data
+archive, ``class_archive``) and its session confs (``conf``:
+``cli.CLI_CONF``), while tests, ``bench.py`` and the registry keep the
+JVM defaults, whose C2 compiler pays off in a long-lived session, and
+never touch the archive cache. The flags
 go through ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
 a user's ``--driver-java-options`` (e.g. in ``PYSPARK_SUBMIT_ARGS``)
 replaces ``spark.driver.extraJavaOptions`` outright, whereas
@@ -32,6 +35,7 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     java_options: str | None = None,
+    conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
@@ -51,13 +55,18 @@ def get_spark(
         # BIGINT nanos — functions.text.normalize_event_time converts
         # either vintage to canonical (ts TIMESTAMP_NTZ, ts_us BIGINT)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if java_options:
         builder = builder.config("spark.driver.defaultJavaOptions", java_options)
+    for k, v in (conf or {}).items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
+
+def driver_memory() -> str:
+    return os.environ.get("SPARK_DRIVER_MEM", "8g")
 
 
 def spread(df: DataFrame, *keys: str) -> DataFrame:

@@ -216,9 +216,10 @@ def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
 
 
 def str_keys(metadata: dict | None) -> dict[str, Any]:
-    """A record's metadata as the store writes and the CLI renders it:
-    top-level keys through ``str()`` (an int key 7 becomes '7'), values
-    as loaded; ``{}`` for none."""
+    """A record's metadata as ``analyze`` looks one key up, as the Spark
+    map does: top-level keys through ``str()`` (an int key 7 becomes
+    '7'), values as loaded; ``{}`` for none. The store is written, and a
+    whole dict rendered, as loaded."""
     return {str(k): v for k, v in (metadata or {}).items()}
 
 
@@ -238,7 +239,7 @@ def records_to_yaml(rows: list[tuple]) -> str:
     """Canonical multi-doc dump of parsed rows, in their (id) order
     (adapter-scale only)."""
     docs = [
-        {"id": rid, "metadata": str_keys(md), "body": LiteralStr(body or "")}
+        {"id": rid, "metadata": md or {}, "body": LiteralStr(body or "")}
         for rid, body, md in rows
     ]
     # whole-record mappings never take the "..." marker, so the C

@@ -20,7 +20,11 @@ to its bytes, except three re-recorded ``--stats`` cases:
 ``analyze_stats_unicode_list`` and ``analyze_stats_map`` print list and
 map values as ``fmt.format_cell`` does (``--fields`` prints them so
 too), and ``analyze_stats_null`` drops null values before counting, as
-the reference does.
+the reference does. ``analyze_fields``, ``analyze_stats_metadata`` and
+``recall_filter_yaml_reindex`` were re-recorded when the store came to
+be written, and a whole metadata dict rendered, as loaded: the int key
+7 stays ``7``, where it had become ``'7'`` (``int_and_str_key`` holds
+both beside each other).
 
 Re-record cases (all, or the named ones) with the package that
 ``PYTHONPATH`` points at:
@@ -194,6 +198,25 @@ body: |-
 
 _ALL_USER = ("analyze", "--filter", "source: user")
 
+# an int key beside the str key it prints as: both survive a rewrite and
+# a whole-dict cell, while a key is looked up as the filter sees it
+# (str(), where the str key's value wins)
+_KEY_COLLISION_STORE = """\
+---
+id: 0
+metadata:
+  7: int key
+  '7': str key
+  lang: en
+body: |-
+  colliding keys
+---
+id: 1
+metadata: {lang: en}
+body: |-
+  plain record
+"""
+
 # values of different types whose str() or format_cell renderings
 # coincide: --stats counts a value by its format_cell rendering
 _MIXED_STORE = "".join(
@@ -277,6 +300,13 @@ CASES = {
         (*_ALL_USER, "--fields", "id,k"),
     ]),
     "analyze_missing_store": (None, [_ALL_USER]),
+    "int_and_str_key": (_KEY_COLLISION_STORE, [
+        ("reindex",),
+        ("save", "- id: 1\n  body: overwritten plain record\n  metadata: {lang: en}\n"),
+        ("analyze", "--filter", "lang: en", "--fields", "id,7,metadata"),
+        ("analyze", "--filter", "lang: en", "--stats", "metadata"),
+        ("recall", "-k", "2", "--filter", "lang: en", "--yaml", "keys"),
+    ]),
     "recall_filter_yaml_reindex": (_ANALYZE_STORE, [
         ("recall", "-k", "4", "--filter", "source: user", "--yaml", "record"),
         ("reindex",),

@@ -18,10 +18,11 @@ seconds (user + system, the last value sampled for each process) and
 the peak of their summed resident memory, then the peak of the whole
 tree's resident memory and the CLI's exit code. A child sampled between
 a fork and its exec still reports its parent's resident pages and
-command line: the JVM's short-lived helper commands, and a child of the
-driver JVM that has not yet exec'd, show as ``other`` and can inflate
-the total. The CLI's own stdout is
-discarded; its stderr is shown when it exits non-zero. Example:
+command line: the JVM's short-lived helper commands show as ``other``.
+A child of the driver JVM that has not yet exec'd shares the JVM's
+pages, so it shows as ``other`` but is left out of the total. The CLI's
+own stdout is discarded; its stderr is shown when it exits non-zero.
+Example:
 
     python tools/proc_split.py -f /path/to/db recall -k 10 --filter "lang: en" --yaml "some query"
 
@@ -71,27 +72,47 @@ def _parent(pid: int) -> int | None:
         return None
 
 
-def kind_of(pid: int, root: int) -> str:
+def classify(pid: int, root: int) -> tuple[str, bool]:
+    """The kind of ``pid``, and whether it is a child the driver JVM
+    forked, sampled before its exec: such a child still shows the JVM's
+    command line and shares its resident pages."""
     if pid == root:
-        return "python driver"
+        return "python driver", False
     args = _args(pid)
     if args is None:
-        return "other"
+        return "other", False
     cmd = " ".join(args)
     if "pyspark.daemon" in cmd or "pyspark.worker" in cmd:
-        return "python workers"
+        return "python workers", False
     if "org.apache.spark.launcher.Main" in cmd:
-        return "launcher"
+        return "launcher", False
     if _is_driver_jvm(args):
-        # a child the JVM forked, sampled before its exec, still shows
-        # the JVM's command line (and resident pages)
         parent = _parent(pid)
         if parent is not None and _is_driver_jvm(_args(parent)):
-            return "other"
-        return "driver JVM"
+            return "other", True
+        return "driver JVM", False
     if "spark-submit" in cmd or "spark-class" in cmd:
-        return "launcher"
-    return "other"
+        return "launcher", False
+    return "other", False
+
+
+def tally(live, root: int, kinds: dict[int, str], cpu: dict[int, float]) -> tuple[dict[str, int], int]:
+    """One sample of ``(pid, rss, cpu_s)`` triples: resident bytes per
+    kind and in total (the JVM's unexec'd forks left out of it). Updates
+    each process's kind, classified anew each time as spark-class execs
+    into the driver JVM (a process that has just ended keeps its kind),
+    and its CPU seconds."""
+    rss = dict.fromkeys(KINDS, 0)
+    total = 0
+    for pid, r, c in live:
+        kind, fork = classify(pid, root)
+        if kind != "other" or pid not in kinds:
+            kinds[pid] = kind
+        rss[kinds[pid]] += r
+        if not fork:
+            total += r
+        cpu[pid] = c
+    return rss, total
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -117,19 +138,10 @@ def main(argv: list[str] | None = None) -> int:
         nonlocal peak_total
         while True:
             live = _session_members(p.pid)
-            rss = dict.fromkeys(KINDS, 0)
-            for pid, r, c in live:
-                # classified anew each time, as spark-class execs into
-                # the driver JVM; a process that has just ended keeps
-                # its kind
-                kind = kind_of(pid, p.pid)
-                if kind != "other" or pid not in kinds:
-                    kinds[pid] = kind
-                rss[kinds[pid]] += r
-                cpu[pid] = c
+            rss, total = tally(live, p.pid, kinds, cpu)
             for k in KINDS:
                 peak[k] = max(peak[k], rss[k])
-            peak_total = max(peak_total, sum(rss.values()))
+            peak_total = max(peak_total, total)
             if stop.is_set() and not live:
                 return
             time.sleep(SAMPLE_S)
