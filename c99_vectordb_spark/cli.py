@@ -35,7 +35,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from . import fmt, hashing
 from .class_archive import ClassArchive
-from .functions.embed import embed_rows
+from .functions.embed import embed_rows, recall_terms
 from .model import (
     DEFAULT_K,
     DEFAULT_LIMIT,
@@ -154,10 +154,19 @@ def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
     embeddings = _read_index(spark, emb_path, yaml_path)
     if embeddings is None:
-        # no valid index: embed the parsed bodies here, on the driver,
-        # so the recall runs the same join as with one and boots no
-        # Python worker
-        embeddings = embed_rows(spark, [row[:2] for row in rows])
+        # no valid index: score the parsed bodies against the query
+        # here, on the driver, so the recall runs the same join as with
+        # one, boots no Python worker and hands Spark two integers per
+        # record
+        t = time.perf_counter()
+        embeddings = recall_terms(spark, [row[:2] for row in rows], query)
+        _log(
+            verbose,
+            f"recall: no valid index; scored {len(rows)} records on the "
+            f"driver in {time.perf_counter() - t:.2f} s",
+        )
+    else:
+        _log(verbose, f"recall: index {emb_path}")
     # the frames now hold what the recall reads; the parsed rows, as
     # large as the store, need not live through its Spark job
     del rows

@@ -10,19 +10,22 @@ Two implementations with identical integer results, run in three places:
 1. ``embed_expr`` — pure Spark SQL expression (higher-order functions).
    Fully JVM-side, Catalyst-optimizable, and exactly mirrorable in
    DuckDB SQL → this is what the correctness oracle checks.
-2. ``hashing.embed_text_int`` — the Python implementation, with a
-   token → (bucket, sign) cache. It runs
+2. ``hashing.embed_text_sparse`` — the Python implementation, one pass
+   over a text's tokens into bucket → count, with a token → (bucket,
+   sign) cache (``hashing.embed_text_int`` is its dense view). It runs
    - in the executors' Python workers, as ``embed_pandas_udf`` in
      ``build_embeddings``: map-only (no shuffle), used for bulk builds
      (the native store, streaming, the registry) — at 100 TB one
      narrow stage over the documents table, no wide exchange anywhere;
-   - on the driver, as ``embed_rows``: every CLI verb that embeds
-     (``save``, ``reindex``, and a recall on a YAML store without a
-     valid index) embeds the rows the YAML parse already holds in
-     Python, so no CLI verb starts a Python worker.
+   - on the driver, over the rows the YAML parse already holds in
+     Python, so no CLI verb starts a Python worker: ``embed_rows``
+     builds the dense index that ``save`` and ``reindex`` write, and
+     ``recall_terms`` reduces each record to the two integers a recall
+     without a valid index scores it by.
 
-All produce exact integer count vectors (ARRAY<BIGINT>); the
-L2-normalized float view is a derived expression (``normalized``).
+All produce exact integer count vectors (ARRAY<BIGINT>), or integers
+derived from them; the L2-normalized float view is a derived expression
+(``normalized``).
 """
 
 from __future__ import annotations
@@ -30,8 +33,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..hashing import embed_text_int
-from ..model import DIM, EMBEDDINGS_SCHEMA
+from ..hashing import embed_text_int, embed_text_sparse
+from ..model import DIM, EMBEDDINGS_SCHEMA, RECALL_TERMS_SCHEMA
 from . import text as Ft
 
 
@@ -77,30 +80,69 @@ def embed_pandas_udf(dim: int = DIM):
 def embed_rows(spark: SparkSession, pairs: list[tuple[int, str]]) -> DataFrame:
     """The (id, vec) EMBEDDINGS_SCHEMA frame of ``(id, body)`` pairs,
     embedded in this (the driver's) process by
-    ``hashing.embed_text_int`` — the same integers as
+    ``hashing.embed_text_sparse`` — the same integers as
     ``build_embeddings`` without a Python worker. Every pair is
-    embedded, a blank body to the zero vector: ``save``/``reindex``
+    embedded, a blank body to the zero vector; ``save``/``reindex``
     pass only the non-blank records, which makes the frame
-    ``build_embeddings``' rows; a recall passes all of them and drops
-    the blank ones with the Spark-side ``is_blank`` filter.
+    ``build_embeddings``' rows.
 
     The vectors reach the JVM as one Arrow table; its scan runs no
     Python. The frame is dense: 8·DIM bytes (3 KiB) per record here,
     and about twice that in the JVM, which ships it inside the scan's
-    task binaries."""
+    task binaries — a cost only the index write pays (a recall scores
+    from ``recall_terms``)."""
     import numpy as np
     import pyarrow as pa
 
     cache: dict[str, tuple[int, int]] = {}
     ids = np.empty(len(pairs), dtype=np.int64)
-    vecs = np.zeros((len(pairs), DIM), dtype=np.int64)
+    rows: list[int] = []
+    buckets: list[int] = []
+    counts: list[int] = []
     for i, (rid, body) in enumerate(pairs):
         ids[i] = rid
-        vecs[i] = embed_text_int(body, DIM, cache)
+        sparse = embed_text_sparse(body, DIM, cache)
+        rows.extend([i] * len(sparse))
+        buckets.extend(sparse)
+        counts.extend(sparse.values())
+    vecs = np.zeros((len(pairs), DIM), dtype=np.int64)
+    vecs[rows, buckets] = counts
     table = pa.table(
         {"id": ids, "vec": pa.FixedSizeListArray.from_arrays(vecs.ravel(), DIM)}
     )
     return spark.createDataFrame(table, EMBEDDINGS_SCHEMA)
+
+
+def recall_terms(
+    spark: SparkSession, pairs: list[tuple[int, str]], query_text: str
+) -> DataFrame:
+    """The (id, norm2, dot) RECALL_TERMS_SCHEMA frame of ``(id, body)``
+    pairs: each body's squared norm and its dot product with the
+    embedding of ``query_text``, exact int64 — the integers ``operators.recall.vec_norm2`` and
+    ``sparse_dot`` compute over ``embed_rows``' vector of the body. A
+    blank body scores (0, 0); a recall passes every record and drops the
+    blank ones with the Spark-side ``is_blank`` filter.
+
+    Three int64 columns reach the JVM as one Arrow table (24 bytes per
+    record), where a dense frame would carry 8·DIM."""
+    import pyarrow as pa
+
+    cache: dict[str, tuple[int, int]] = {}
+    ids, norm2, dot = [], [], []
+    q = [(b, w) for b, w in embed_text_sparse(query_text, DIM).items() if w]
+    for rid, body in pairs:
+        sparse = embed_text_sparse(body, DIM, cache)
+        ids.append(rid)
+        norm2.append(sum(c * c for c in sparse.values()))
+        dot.append(sum(w * sparse.get(b, 0) for b, w in q))
+    table = pa.table(
+        {
+            "id": pa.array(ids, pa.int64()),
+            "norm2": pa.array(norm2, pa.int64()),
+            "dot": pa.array(dot, pa.int64()),
+        }
+    )
+    return spark.createDataFrame(table, RECALL_TERMS_SCHEMA)
 
 
 def normalized(vec: Column) -> Column:

@@ -74,21 +74,23 @@ def token_hash(token: str) -> int:
     return h
 
 
-def embed_text_int(
+def embed_text_sparse(
     text: str | None, dim: int = DIM, cache: dict | None = None
-) -> list[int]:
-    """Signed hashing-trick bag-of-words as exact integer counts.
+) -> dict[int, int]:
+    """Signed hashing-trick bag-of-words as exact integer counts, sparse:
+    bucket -> count for the buckets the text's tokens hash to (a count
+    can be 0 where opposite signs cancel).
 
     Same semantics as the reference's embed_text_hash
     (memo_cli.py:158-167) before L2 normalization. Integer counts make
     dot products / squared distances exactly representable, which the
-    DuckDB oracle checks rely on. ``None`` embeds to the zero vector.
+    DuckDB oracle checks rely on. ``None`` embeds to no bucket.
     ``cache`` maps token -> (bucket, sign) across calls with the same
     ``dim``, so a batch hashes each distinct token once.
     """
-    vec = [0] * dim
+    counts: dict[int, int] = {}
     if not text:
-        return vec
+        return counts
     if cache is None:
         cache = {}
     for tok in tokenize(text):
@@ -96,7 +98,18 @@ def embed_text_int(
         if hit is None:
             h = token_hash(tok)
             hit = cache[tok] = (h % dim, 1 if h & 1 else -1)
-        vec[hit[0]] += hit[1]
+        counts[hit[0]] = counts.get(hit[0], 0) + hit[1]
+    return counts
+
+
+def embed_text_int(
+    text: str | None, dim: int = DIM, cache: dict | None = None
+) -> list[int]:
+    """The dense ``dim``-long view of :func:`embed_text_sparse`: the
+    zero vector for ``None`` or a text without tokens."""
+    vec = [0] * dim
+    for bucket, count in embed_text_sparse(text, dim, cache).items():
+        vec[bucket] = count
     return vec
 
 

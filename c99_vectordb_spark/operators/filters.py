@@ -409,7 +409,9 @@ def compile_filter(
                     ]
                     conjuncts.append(_fold_or(sub) if sub else F.lit(False))
             else:
-                conjuncts.append(_eval_condition(resolver(key), cond))
+                # a YAML int key (7) names the map's str() key, as
+                # yaml_io.str_keys and convert key the metadata
+                conjuncts.append(_eval_condition(resolver(str(key)), cond))
         return _fold_and(conjuncts) if conjuncts else F.lit(True)
 
     if parsed is None:

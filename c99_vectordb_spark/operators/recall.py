@@ -19,14 +19,19 @@ Scoring paths:
   L2-normalized vectors, score ∈ [0,4] — the reference's visible score
   (d² = 2 − 2·cosθ, SURVEY.md §1.4).
 
-Embeddings: ``recall`` joins the records to an (id, vec) frame. The CLI
-passes the store's index (``<base>.emb``) or, without a valid one, the
-frame it embedded on the driver from the parsed YAML rows
-(``functions.embed.embed_rows``), so either way the plan is records ⋈
-embeddings → TakeOrderedAndProject with no Python UDF. With
-``embeddings=None`` (``__spark_entry__.entry``, the tests) recall embeds
-the filtered records in flight with the pandas UDF, in the executors'
-Python workers.
+Embeddings: ``recall`` scores each record from two integers, its
+embedding's squared norm and its dot product with the query's. It joins
+the records to a frame that carries either them (``norm2``, ``dot``) or
+the embedding (``vec``), from which it derives them after the join
+(``vec_norm2``, ``sparse_dot``). The CLI passes the store's index
+(``<base>.emb``, an (id, vec) frame) or, without a valid one, the
+(id, norm2, dot) frame it computed on the driver from the parsed YAML
+rows (``functions.embed.recall_terms``), so no DIM-wide array enters
+the JVM on that path. Either way the plan is records ⋈ embeddings →
+TakeOrderedAndProject with no Python UDF. With ``embeddings=None``
+(``__spark_entry__.entry``, the tests) recall embeds the filtered
+records in flight with the pandas UDF, in the executors' Python
+workers.
 
 Determinism: ties broken by id ascending (reference leaves FAISS ties
 unspecified; SURVEY.md §7 risk 4).
@@ -163,9 +168,9 @@ def recall(
     """Full recall read path (memo_cli.py:453-524, SURVEY.md §3.1).
 
     Embeds ``query_text`` driver-side (one string), embeds records
-    in-flight unless a prebuilt ``embeddings`` DataFrame (id, vec) is
-    given, applies the compiled metadata filter and the blank-body skip
-    (F12), and returns top-k (id, body, score) by normalized squared-L2
+    in-flight unless an ``embeddings`` DataFrame is given — (id, vec),
+    or (id, norm2, dot) against this query's embedding — applies the
+    compiled metadata filter and the blank-body skip (F12), and returns top-k (id, body, score) by normalized squared-L2
     ascending. The reference's score floor (F11, ``score < -0.9``) is
     omitted: the score lies in [0, 4], so it never removes a row.
     """
@@ -188,11 +193,15 @@ def recall(
     # sparse integer dot — no per-document normalization pass. Zero
     # vectors (reference zero-guard, memo_cli.py:131-135): distance is
     # the other side's unit norm (1.0) or 0.0 if both are zero.
-    norm2 = vec_norm2(F.col("vec"))
+    if "vec" in emb.columns:
+        norm2 = vec_norm2(F.col("vec"))
+        dot = sparse_dot(F.col("vec"), qint)
+    else:
+        norm2, dot = F.col("norm2"), F.col("dot")
     if qnorm <= 1e-8:
         score = F.when(norm2 == 0, F.lit(0.0)).otherwise(F.lit(1.0))
     else:
-        cos = sparse_dot(F.col("vec"), qint).cast("double") / (
+        cos = dot.cast("double") / (
             F.sqrt(norm2.cast("double")) * F.lit(qnorm)
         )
         score = F.when(norm2 == 0, F.lit(1.0)).otherwise(F.lit(2.0) - 2 * cos)

@@ -24,9 +24,10 @@ byte-identical to it. Scale lives in the Parquet store (store.py).
 The CLI's verbs work on the parsed rows (``read_records_yaml``) in this
 (the driver's) process: ``save`` applies its batch to them and
 ``reindex`` compacts them (``compact_records``), both dump them back
-(``save_records_yaml``), and both, like a recall without a valid index,
-embed them with ``functions.embed.embed_rows``; ``analyze`` renders its
-cells from them. The Spark columns come from one place, ``rows_to_df``:
+(``save_records_yaml``) and embed them for the index
+(``functions.embed.embed_rows``); a recall without a valid index scores
+them against its query (``functions.embed.recall_terms``); ``analyze``
+renders its cells from them. The Spark columns come from one place, ``rows_to_df``:
 it derives RECORDS_SCHEMA's string triple (``convert.record_row``) for
 a recall's or an analyze's query and hands it over as Arrow; no verb
 ships a body to a Python worker.

@@ -1,62 +1,116 @@
 """Recall with and without the store's index: without one, the records
-are embedded on the driver while the YAML is parsed, so the plan runs no
-Python UDF; with one, the answer is the same to the byte."""
+are scored on the driver while the YAML is parsed, so the plan runs no
+Python UDF and reads no vector; with one, the answer is the same to the
+byte."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 import os
+import re
+
+import yaml
 
 from c99_vectordb_spark import cli
 from c99_vectordb_spark.operators import recall as R
 
-_STORE = "".join(
-    f"---\nid: {i}\nmetadata:\n  lang: {lang}\nbody: |-\n  {body}\n"
-    for i, (lang, body) in enumerate([
-        ("en", "spark hash join on a small table"),
-        ("zh", "window sort over a large scan"),
-        ("en", "vector recall with a metadata filter"),
-        ("en", "Hash JOIN hash join, broadcast the small side"),
-        ("de", "sort merge join over two large tables"),
-        ("en", "recall the small vector index"),
-    ])
+#: (metadata, body) by id: after the ordinary records a zero-token one
+#: (not blank, a zero vector), a metadata-less one, and a blank and an
+#: NBSP-only one (blank to Spark's Unicode is_blank), last, so that the
+#: reindex, which drops them, renumbers no other record
+_RECORDS = [
+    ({"lang": "en"}, "spark hash join on a small table"),
+    ({"lang": "zh"}, "window sort over a large scan"),
+    ({"lang": "en"}, "vector recall with a metadata filter"),
+    ({"lang": "en"}, "Hash JOIN hash join, broadcast the small side"),
+    ({"lang": "de"}, "sort merge join over two large tables"),
+    ({"lang": "en"}, "recall the small vector index"),
+    ({"lang": "en"}, "!!! ???"),
+    (None, "a small join without metadata"),
+    ({"lang": "en"}, ""),
+    ({"lang": "en"}, "\u00a0\u00a0"),
+]
+_STORE = yaml.safe_dump_all(
+    [
+        {"id": i, "body": body, **({"metadata": md} if md is not None else {})}
+        for i, (md, body) in enumerate(_RECORDS)
+    ],
+    explicit_start=True, allow_unicode=True,
 )
 
 _RECALLS = [
     ["-k", "3", "--filter", "lang: en", "--yaml", "small hash join"],
     ["-k", "4", "vector join table"],
+    # every non-blank record: the zero-token one scores 1.0
+    ["-k", "20", "--yaml", "small sort"],
+    # a zero-token query: 0.0 for a zero vector, 1.0 for the rest
+    ["-k", "20", "--yaml", "!!! ???"],
+    ["-k", "20", "--filter", "lang: en", "--yaml", "!!! ???"],
 ]
 
 
 def _store(tmp_path) -> str:
-    (tmp_path / "db.yaml").write_text(_STORE)
+    (tmp_path / "db.yaml").write_text(_STORE, encoding="utf-8")
     return str(tmp_path / "db")
 
 
-def _stdout(argv: list[str]) -> str:
-    out = io.StringIO()
-    with contextlib.redirect_stdout(out):
+def _run(argv: list[str]) -> tuple[str, str]:
+    out, err = io.StringIO(), io.StringIO()
+    with contextlib.redirect_stdout(out), contextlib.redirect_stderr(err):
         assert cli.main(argv) == 0
-    return out.getvalue()
+    return out.getvalue(), err.getvalue()
+
+
+def _stdout(argv: list[str]) -> str:
+    return _run(argv)[0]
+
+
+def _recall_frame(monkeypatch, argv):
+    """The frame and the ``embeddings`` input of one CLI recall."""
+    calls = []
+    recall = R.recall
+
+    def spy(*args, **kwargs):
+        calls.append((recall(*args, **kwargs), kwargs["embeddings"]))
+        return calls[-1][0]
+
+    monkeypatch.setattr(R, "recall", spy)
+    _stdout(argv)
+    monkeypatch.setattr(R, "recall", recall)
+    (call,) = calls
+    return call
+
+
+def _plan(frame) -> str:
+    return frame._jdf.queryExecution().executedPlan().toString()
 
 
 def test_unindexed_recall_plan_runs_no_python_udf(spark, tmp_path, monkeypatch):
     base = _store(tmp_path)
-    frames = []
-    recall = R.recall
-
-    def spy(*args, **kwargs):
-        frames.append(recall(*args, **kwargs))
-        return frames[-1]
-
-    monkeypatch.setattr(R, "recall", spy)
-    _stdout(["-f", base, "recall", *_RECALLS[0]])
+    frame, _ = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
     assert not os.path.exists(base + ".emb")
-    (frame,) = frames
-    plan = frame._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(frame)
     assert "TakeOrderedAndProject" in plan and "Join" in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_unindexed_recall_reads_no_vector(spark, tmp_path, monkeypatch):
+    """Without an index the records reach Spark as (id, norm2, dot): the
+    plan scans no array column and folds none with an ``aggregate``
+    lambda, as the indexed plan does over ``vec``."""
+    base = _store(tmp_path)
+    frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
+    assert emb.columns == ["id", "norm2", "dot"]
+    assert "array" not in emb.schema.simpleString()
+    plan = _plan(frame)
+    assert "vec#" not in plan
+    assert "aggregate(" not in plan and "lambdafunction" not in plan
+    _stdout(["-f", base, "reindex"])
+    frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
+    assert emb.columns == ["id", "vec"]
+    plan = _plan(frame)
+    assert "vec#" in plan and "aggregate(" in plan
 
 
 def test_recall_stdout_same_before_and_after_reindex(spark, tmp_path):
@@ -67,3 +121,35 @@ def test_recall_stdout_same_before_and_after_reindex(spark, tmp_path):
     indexed = [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS]
     assert indexed == inflight
     assert "id: 3" in inflight[0]
+    # the blank records never show; the zero-token one scores 1.0
+    # against a query with tokens, and 0.0 against one without
+    scores = {
+        q: {h["id"]: h["score"] for h in yaml.safe_load(out)["results"]}
+        for q, out in zip(("small sort", "!!! ???"), inflight[2:4])
+    }
+    assert sorted(scores["small sort"]) == list(range(8))
+    assert scores["small sort"][6] == 1.0
+    assert scores["!!! ???"] == {i: 0.0 if i == 6 else 1.0 for i in range(8)}
+    assert 7 not in {h["id"] for h in yaml.safe_load(inflight[4])["results"]}
+
+
+def test_verbose_recall_names_its_embedding_source(spark, tmp_path):
+    """``-v`` reports on stderr whether the recall read the index or
+    scored the records on the driver; stdout is the same as without it."""
+    base = _store(tmp_path)
+    argv = ["recall", *_RECALLS[0]]
+    plain = _stdout(["-f", base, *argv])
+    out, err = _run(["-f", base, "-v", *argv])
+    assert out == plain
+    notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
+    assert len(notes) == 1, err
+    assert re.fullmatch(
+        r"recall: no valid index; scored 10 records on the driver in \d+\.\d\d s",
+        notes[0],
+    ), notes
+    _stdout(["-f", base, "reindex"])
+    plain = _stdout(["-f", base, *argv])
+    out, err = _run(["-f", base, "-v", *argv])
+    assert out == plain
+    notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
+    assert notes == [f"recall: index {base}.emb"], err

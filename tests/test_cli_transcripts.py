@@ -24,7 +24,9 @@ the reference does. ``analyze_fields``, ``analyze_stats_metadata`` and
 ``recall_filter_yaml_reindex`` were re-recorded when the store came to
 be written, and a whole metadata dict rendered, as loaded: the int key
 7 stays ``7``, where it had become ``'7'`` (``int_and_str_key`` holds
-both beside each other).
+both beside each other). ``int_key_filter`` was recorded when a
+filter's int key (``7: int key``) came to be looked up as the map's
+str() key; it had ended in an AnalysisException.
 
 Re-record cases (all, or the named ones) with the package that
 ``PYTHONPATH`` points at:
@@ -306,6 +308,13 @@ CASES = {
         ("analyze", "--filter", "lang: en", "--fields", "id,7,metadata"),
         ("analyze", "--filter", "lang: en", "--stats", "metadata"),
         ("recall", "-k", "2", "--filter", "lang: en", "--yaml", "keys"),
+    ]),
+    "int_key_filter": (_ANALYZE_STORE, [
+        ("analyze", "--filter", "7: int key", "--fields", "id,7,source"),
+        ("analyze", "--filter", "'7': int key", "--fields", "id,7"),
+        ("analyze", "--filter", "7: {$ne: str key}", "--stats", "7"),
+        ("recall", "-k", "2", "--filter", "7: int key", "--yaml", "record"),
+        ("recall", "-k", "2", "--filter", "$or: [{7: int key}, {source: chat}]", "record"),
     ]),
     "recall_filter_yaml_reindex": (_ANALYZE_STORE, [
         ("recall", "-k", "4", "--filter", "source: user", "--yaml", "record"),

@@ -133,6 +133,34 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
     assert want[10] != [0] * STORE_DIM and max(map(abs, want[10])) > 127
 
 
+@pytest.mark.parametrize(
+    "query", ["Alpha alpha w7 upper KELVIN astral text 2026 __init__", "!!! ???"]
+)
+def test_recall_terms_match_vector_terms(spark, query):
+    """The (id, norm2, dot) frame a recall without an index scores by
+    holds, as exact int64, what ``vec_norm2`` and ``sparse_dot`` compute
+    over ``embed_rows``' vectors of the same bodies."""
+    from c99_vectordb_spark.model import DIM as STORE_DIM
+    from c99_vectordb_spark.operators import recall as R
+
+    pairs = [(i, _EDGE_BODIES.get(i)) for i in range(13)]
+    vec = F.col("vec")
+    want = {
+        r.id: (r.norm2, r.dot)
+        for r in embed.embed_rows(spark, pairs).select(
+            "id",
+            R.vec_norm2(vec).alias("norm2"),
+            R.sparse_dot(vec, hashing.embed_text_int(query, STORE_DIM)).alias("dot"),
+        ).collect()
+    }
+    terms = embed.recall_terms(spark, pairs, query)
+    assert terms.dtypes == [("id", "bigint"), ("norm2", "bigint"), ("dot", "bigint")]
+    got = {r.id: (r.norm2, r.dot) for r in terms.collect()}
+    assert got == want
+    assert want[10][0] > 1100 * 1100
+    assert any(dot for _, dot in got.values()) == bool(hashing.tokenize(query))
+
+
 def test_blank_predicates_agree(spark):
     """The Spark ``is_blank`` (recall's and validate_overwrites' filter)
     and the Python one (the driver-side compaction's and save's check)
