@@ -7,12 +7,12 @@ parse_args, parse_recall_args, parse_analyze_args, main): ``save``,
 
 Storage layout: ``<base>.yaml`` is the compatibility source of truth
 (S1/S2 adapter) and ``<base>.emb/`` holds the derived embeddings
-parquet (the FAISS ``.memo`` replacement). Recall reuses the derived
-index only when its recorded source fingerprint (``_SOURCE_SHA256``,
-the hash of the YAML it was built from) still matches — any external
-edit to the YAML makes recall fall back to embedding the records on the
-driver as it parses the YAML, so the reference's save-only-index desync
-quirk (M6) STILL cannot occur; ``reindex`` rewrites both canonically.
+parquet (the FAISS ``.memo`` counterpart), which ``save`` and
+``reindex`` write with the fingerprint of the YAML it derives from
+(``_SOURCE_SHA256``). No verb reads it: a recall parses the whole YAML
+anyway and scores the parsed records against its query on the driver,
+so an index that disagrees with the YAML cannot change an answer and the
+reference's save-only-index desync quirk (M6) cannot occur.
 
 A verb that launches its own driver JVM starts it with a short-lived
 process's profile (``CLI_JAVA_OPTIONS``, ``CLI_CONF``) and maps Spark's
@@ -41,7 +41,6 @@ from .model import (
     DEFAULT_LIMIT,
     DEFAULT_OFFSET,
     DIM,
-    EMBEDDINGS_SCHEMA,
     RECORDS_SCHEMA,
     STATS_TOP_N,
 )
@@ -146,37 +145,30 @@ def _jvm_flags(spark) -> str:
 
 
 def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
-    yaml_path, emb_path = _db_paths(base)
+    yaml_path, _ = _db_paths(base)
     k = R.clamp_k(k)
     rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
     records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
-    embeddings = _read_index(spark, emb_path, yaml_path)
-    if embeddings is None:
-        # no valid index: score the parsed bodies against the query
-        # here, on the driver, so the recall runs the same join as with
-        # one, boots no Python worker and hands Spark two integers per
-        # record
-        t = time.perf_counter()
-        embeddings = recall_terms(spark, [row[:2] for row in rows], query)
-        _log(
-            verbose,
-            f"recall: no valid index; scored {len(rows)} records on the "
-            f"driver in {time.perf_counter() - t:.2f} s",
-        )
-    else:
-        _log(verbose, f"recall: index {emb_path}")
+    # score the parsed bodies against the query here, on the driver:
+    # the recall boots no Python worker and hands Spark two integers per
+    # record
+    t = time.perf_counter()
+    embeddings = recall_terms(spark, [row[:2] for row in rows], query)
+    # R4: diagnostics to stderr only — stdout is the result contract
+    # (memo_cli.py:38-40)
+    _log(
+        verbose,
+        f"recall: scored {len(rows)} records on the driver in "
+        f"{time.perf_counter() - t:.2f} s",
+    )
+    _log(verbose, f"loaded {len(rows)} records from {yaml_path}")
+    _log(verbose, f"recall k={k} filter={'yes' if filter_expr else 'no'}")
+    _hint_native_migration(verbose, yaml_path)
     # the frames now hold what the recall reads; the parsed rows, as
     # large as the store, need not live through its Spark job
     del rows
-    # R4: diagnostics to stderr only — stdout is the result contract
-    # (memo_cli.py:38-40). The count is a full Spark job, so it only
-    # runs when -v is actually on.
-    if verbose:
-        _log(verbose, f"loaded {records.count()} records from {yaml_path}")
-        _log(verbose, f"recall k={k} filter={'yes' if filter_expr else 'no'}")
-        _hint_native_migration(verbose, yaml_path)
     if not as_yaml:
         print(fmt.recall_header(k))
     fcol = None
@@ -392,35 +384,13 @@ def cmd_save(spark, base, save_path, verbose) -> int:
     return 0
 
 
-def _read_index(spark, emb_path: str, yaml_path: str):
-    """The prebuilt index when present AND still derived from this exact
-    YAML (fingerprint check), else None — the reference's recall reads
-    its .memo index rather than re-embedding the corpus per query
-    (memo_cli.py:470-479). A missing or stale index self-heals to
-    embedding on the driver (S3 semantics, memo_cli.py:251-262), which is
-    how the M6 desync quirk stays impossible here. recall() joins
-    embeddings back to the filtered record set, so results are
-    identical either way. The read carries its schema: inferring it
-    would cost a Spark job."""
-    try:
-        with open(os.path.join(emb_path, "_SOURCE_SHA256")) as f:
-            recorded = f.read().strip()
-    except OSError:
-        return None
-    if not recorded or recorded != _yaml_sha256(yaml_path):
-        return None
-    return spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
-
-
 def _write_embeddings(spark, rows, emb_path: str, yaml_path: str) -> None:
-    # blank records are not indexed (memo_cli.py:278-280). One file: a
-    # recall then scans the index in one task; written as the frame's
-    # four slices, it cost a cold 5k-record recall about 1 CPU-s more
-    # (4 cores). The index
-    # records which YAML it derives from (an underscore-prefixed
-    # sidecar, invisible to Spark's parquet reader, committed by the
-    # same rename as the table); recall only trusts the index while the
-    # fingerprint still matches
+    # the index is the reference's .memo counterpart: written and
+    # fingerprinted, but read by no verb. Blank records are not indexed
+    # (memo_cli.py:278-280). One file, as the reference's index is one.
+    # The index records which YAML it derives from (an
+    # underscore-prefixed sidecar, invisible to Spark's parquet reader,
+    # committed by the same rename as the table)
     pairs = [(rid, body) for rid, body, *_ in rows if not hashing.is_blank(body)]
     _swap_write(
         embed_rows(spark, pairs).coalesce(1),

@@ -21,7 +21,7 @@ Two implementations with identical integer results, run in three places:
      Python, so no CLI verb starts a Python worker: ``embed_rows``
      builds the dense index that ``save`` and ``reindex`` write, and
      ``recall_terms`` reduces each record to the two integers a recall
-     without a valid index scores it by.
+     scores it by (no verb reads that index).
 
 All produce exact integer count vectors (ARRAY<BIGINT>), or integers
 derived from them; the L2-normalized float view is a derived expression

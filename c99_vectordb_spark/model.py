@@ -89,9 +89,9 @@ EMBEDDINGS_SCHEMA = T.StructType(
     ]
 )
 
-#: What a recall without a valid index scores each record by: its
-#: embedding's squared norm and its dot product with the query's
-#: (functions/embed.recall_terms, operators/recall.recall).
+#: What a CLI recall scores each record by: its embedding's squared
+#: norm and its dot product with the query's (functions/embed.recall_terms,
+#: operators/recall.recall).
 RECALL_TERMS_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType(), False),

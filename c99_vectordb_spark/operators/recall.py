@@ -23,12 +23,12 @@ Embeddings: ``recall`` scores each record from two integers, its
 embedding's squared norm and its dot product with the query's. It joins
 the records to a frame that carries either them (``norm2``, ``dot``) or
 the embedding (``vec``), from which it derives them after the join
-(``vec_norm2``, ``sparse_dot``). The CLI passes the store's index
-(``<base>.emb``, an (id, vec) frame) or, without a valid one, the
-(id, norm2, dot) frame it computed on the driver from the parsed YAML
-rows (``functions.embed.recall_terms``), so no DIM-wide array enters
-the JVM on that path. Either way the plan is records ⋈ embeddings →
-TakeOrderedAndProject with no Python UDF. With ``embeddings=None``
+(``vec_norm2``, ``sparse_dot``). The CLI passes the (id, norm2, dot)
+frame it computed on the driver from the parsed YAML rows
+(``functions.embed.recall_terms``), so no DIM-wide array enters the
+JVM and the plan is records ⋈ terms → TakeOrderedAndProject with no
+Python UDF; the native store (``tools/headtohead.py``) passes its
+(id, vec) embeddings. With ``embeddings=None``
 (``__spark_entry__.entry``, the tests) recall embeds the filtered
 records in flight with the pandas UDF, in the executors' Python
 workers.

@@ -25,12 +25,12 @@ The CLI's verbs work on the parsed rows (``read_records_yaml``) in this
 (the driver's) process: ``save`` applies its batch to them and
 ``reindex`` compacts them (``compact_records``), both dump them back
 (``save_records_yaml``) and embed them for the index
-(``functions.embed.embed_rows``); a recall without a valid index scores
-them against its query (``functions.embed.recall_terms``); ``analyze``
-renders its cells from them. The Spark columns come from one place, ``rows_to_df``:
-it derives RECORDS_SCHEMA's string triple (``convert.record_row``) for
-a recall's or an analyze's query and hands it over as Arrow; no verb
-ships a body to a Python worker.
+(``functions.embed.embed_rows``); a recall scores them against its
+query (``functions.embed.recall_terms``) and never reads that index;
+``analyze`` renders its cells from them. The Spark columns come from
+one place, ``rows_to_df``: it derives RECORDS_SCHEMA's string triple
+(``convert.record_row``) for a recall's or an analyze's query and hands
+it over as Arrow; no verb ships a body to a Python worker.
 """
 
 from __future__ import annotations
@@ -65,8 +65,8 @@ _C_SAFE_LOADER = getattr(yaml, "CSafeLoader", None)
 _C_SAFE_DUMPER = getattr(yaml, "CSafeDumper", None)
 
 
-def fast_safe_load(text: str):
-    # Accepted asymmetry (r7 advice): the fallback only covers the
+def fast_safe_load_all(text: str) -> list:
+    # Accepted asymmetry: the fallback only covers the
     # direction where the C scanner is STRICTER (YAMLError -> retry
     # pure-Python, preserving golden accepts/error texts). If libyaml
     # ever accepted input the Python loader rejects, or resolved a
@@ -76,21 +76,12 @@ def fast_safe_load(text: str):
     # grow alongside any new metadata form the store starts accepting.
     # No such divergence is known for SafeLoader-resolvable YAML 1.1.
     if _C_SAFE_LOADER is None:
-        return yaml.safe_load(text)
-    try:
-        return yaml.load(text, Loader=_C_SAFE_LOADER)
-    except yaml.YAMLError:
-        # pure-python pass: exact golden error text (or, if the C
-        # scanner was stricter, the reference-matching accept)
-        return yaml.safe_load(text)
-
-
-def fast_safe_load_all(text: str) -> list:
-    if _C_SAFE_LOADER is None:
         return list(yaml.safe_load_all(text))
     try:
         return list(yaml.load_all(text, Loader=_C_SAFE_LOADER))
     except yaml.YAMLError:
+        # pure-python pass: exact golden error text (or, if the C
+        # scanner was stricter, the reference-matching accept)
         return list(yaml.safe_load_all(text))
 
 

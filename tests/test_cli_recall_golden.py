@@ -238,8 +238,7 @@ def test_rank_structure_matches_reference(spark, reference, golden_db):
 
 def test_recall_prebuilt_index_matches_inflight(spark, tmp_path):
     """cmd_recall must produce identical output with and without the
-    prebuilt <base>.emb index (reindex derives it; recall self-heals to
-    in-flight embedding when it's absent)."""
+    <base>.emb index that reindex writes (recall never reads it)."""
     base = str(tmp_path / "db")
     # no blank bodies: reindex compaction must be an id-stable no-op so
     # the only variable between the two recalls is the index source
@@ -264,9 +263,9 @@ def test_recall_prebuilt_index_matches_inflight(spark, tmp_path):
 
 
 def test_recall_ignores_stale_index(spark, tmp_path):
-    """Externally editing the YAML after reindex must invalidate the
-    derived index (fingerprint mismatch) — recall re-embeds in flight
-    and reflects the edit, so M6-style desync cannot occur."""
+    """Externally editing the YAML after reindex leaves the derived
+    index stale; recall scores the edited YAML and reflects the edit,
+    so M6-style desync cannot occur."""
     base = str(tmp_path / "db")
     docs = [
         {"id": i, "metadata": {}, "body": LiteralStr(body)}
@@ -292,7 +291,7 @@ def test_recall_ignores_stale_index(spark, tmp_path):
     out2, rc2 = _cap(cli.main, ["-f", base, "recall", "-k", "2", "note coffee grind"])
     assert rc2 == 0
     assert "coffee brewing" not in out2  # edited body cannot appear
-    # the stale-index-bypassing result must equal a fresh rebuild's
+    # the result with a stale index must equal a fresh rebuild's
     out3, rc3 = _cap(cli.main, ["-f", base, "reindex"])
     assert rc3 == 0, out3
     out4, rc4 = _cap(cli.main, ["-f", base, "recall", "-k", "2", "note coffee grind"])

@@ -1,14 +1,17 @@
-"""Recall with and without the store's index: without one, the records
-are scored on the driver while the YAML is parsed, so the plan runs no
-Python UDF and reads no vector; with one, the answer is the same to the
-byte."""
+"""Recall scores the parsed YAML records on the driver, with or without
+the index ``save``/``reindex`` write: the plan runs no Python UDF and
+reads no vector, and the index, even a corrupt one, never changes the
+answer."""
 
 from __future__ import annotations
 
 import contextlib
+import glob
+import hashlib
 import io
 import os
 import re
+import uuid
 
 import yaml
 
@@ -96,28 +99,26 @@ def test_unindexed_recall_plan_runs_no_python_udf(spark, tmp_path, monkeypatch):
 
 
 def test_unindexed_recall_reads_no_vector(spark, tmp_path, monkeypatch):
-    """Without an index the records reach Spark as (id, norm2, dot): the
-    plan scans no array column and folds none with an ``aggregate``
-    lambda, as the indexed plan does over ``vec``."""
+    """The records reach Spark as (id, norm2, dot), also once a reindex
+    has written ``<base>.emb``: the plan scans no array column and no
+    parquet file, and folds nothing with an ``aggregate`` lambda."""
     base = _store(tmp_path)
-    frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
-    assert emb.columns == ["id", "norm2", "dot"]
-    assert "array" not in emb.schema.simpleString()
-    plan = _plan(frame)
-    assert "vec#" not in plan
-    assert "aggregate(" not in plan and "lambdafunction" not in plan
-    _stdout(["-f", base, "reindex"])
-    frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
-    assert emb.columns == ["id", "vec"]
-    plan = _plan(frame)
-    assert "vec#" in plan and "aggregate(" in plan
+    for step in ("before", "after"):
+        if step == "after":
+            _stdout(["-f", base, "reindex"])
+            assert os.path.isdir(base + ".emb")
+        frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
+        assert emb.columns == ["id", "norm2", "dot"], step
+        assert "array" not in emb.schema.simpleString()
+        plan = _plan(frame)
+        assert "vec#" not in plan and "FileScan" not in plan, step
+        assert "aggregate(" not in plan and "lambdafunction" not in plan
 
 
 def test_recall_stdout_same_before_and_after_reindex(spark, tmp_path):
     base = _store(tmp_path)
     inflight = [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS]
     assert _stdout(["-f", base, "reindex"]).startswith("Rebuilt index")
-    assert cli._read_index(spark, base + ".emb", base + ".yaml") is not None
     indexed = [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS]
     assert indexed == inflight
     assert "id: 3" in inflight[0]
@@ -133,23 +134,52 @@ def test_recall_stdout_same_before_and_after_reindex(spark, tmp_path):
     assert 7 not in {h["id"] for h in yaml.safe_load(inflight[4])["results"]}
 
 
+def test_recall_ignores_a_corrupt_index(spark, tmp_path):
+    """No recall reads ``<base>.emb``: with its parquet part overwritten
+    by junk and its fingerprint still the YAML's, the answers are the
+    ones from before the reindex."""
+    base = _store(tmp_path)
+    before = [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS]
+    _stdout(["-f", base, "reindex"])
+    (part,) = glob.glob(os.path.join(base + ".emb", "part-*.parquet"))
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    with open(base + ".yaml", "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    with open(os.path.join(base + ".emb", "_SOURCE_SHA256")) as f:
+        assert f.read().strip() == digest
+    assert [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS] == before
+
+
+def _jobs(spark, argv: list[str]) -> tuple[str, str, int]:
+    """stdout, stderr and the number of Spark jobs of one CLI run."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, " ".join(argv))
+    try:
+        out, err = _run(argv)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, err, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_verbose_recall_names_its_embedding_source(spark, tmp_path):
-    """``-v`` reports on stderr whether the recall read the index or
-    scored the records on the driver; stdout is the same as without it."""
+    """``-v`` reports on stderr how many records the recall scored on
+    the driver, before and after a reindex, and runs no Spark job of
+    its own; stdout is the same as without it."""
     base = _store(tmp_path)
     argv = ["recall", *_RECALLS[0]]
-    plain = _stdout(["-f", base, *argv])
-    out, err = _run(["-f", base, "-v", *argv])
-    assert out == plain
-    notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
-    assert len(notes) == 1, err
-    assert re.fullmatch(
-        r"recall: no valid index; scored 10 records on the driver in \d+\.\d\d s",
-        notes[0],
-    ), notes
-    _stdout(["-f", base, "reindex"])
-    plain = _stdout(["-f", base, *argv])
-    out, err = _run(["-f", base, "-v", *argv])
-    assert out == plain
-    notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
-    assert notes == [f"recall: index {base}.emb"], err
+    for n in (10, 8):
+        if n == 8:
+            _stdout(["-f", base, "reindex"])
+        plain, _, jobs = _jobs(spark, ["-f", base, *argv])
+        out, err, verbose_jobs = _jobs(spark, ["-f", base, "-v", *argv])
+        assert out == plain
+        assert verbose_jobs == jobs > 0
+        notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
+        assert len(notes) == 1, err
+        assert re.fullmatch(
+            rf"recall: scored {n} records on the driver in \d+\.\d\d s",
+            notes[0],
+        ), notes
+        assert f"loaded {n} records from {base}.yaml" in err.splitlines()

