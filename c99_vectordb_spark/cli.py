@@ -14,12 +14,16 @@ anyway and scores the parsed records against its query on the driver,
 so an index that disagrees with the YAML cannot change an answer and the
 reference's save-only-index desync quirk (M6) cannot occur.
 
-A verb that launches its own driver JVM starts it with a short-lived
-process's profile (``CLI_JAVA_OPTIONS``, ``CLI_CONF``) and maps Spark's
-classes from a per-user class-data archive (``class_archive``), which
-the first such verb writes; ``-v`` reports the archive as used, created
-or off on stderr. A verb run in a process with an active session uses
-that session as it is.
+Only ``recall`` and ``analyze`` use Spark. ``save``, ``reindex`` and
+``clean`` run in this process alone: the two writers apply their change
+to the parsed rows, embed them and write ``<base>.emb`` with pyarrow, and
+touch no session, not even a caller's active one. A verb that launches
+its own driver JVM starts it with a short-lived process's profile
+(``CLI_JAVA_OPTIONS``, ``CLI_CONF``) and maps Spark's classes from a
+per-user class-data archive (``class_archive``), which the first such
+verb writes; ``-v`` reports the archive as used, created or off on
+stderr. A verb run in a process with an active session uses that session
+as it is.
 
 Usage: ``python -m c99_vectordb_spark.cli [-f base] [-v] <verb> ...``
 """
@@ -47,7 +51,7 @@ from .model import (
 from .operators import analyze as A, filters as Flt, recall as R
 from .session import driver_memory
 from .sources import yaml_io
-from .sources.store import _swap_write
+from .sources.store import swap_write
 
 
 def _log(verbose: bool, msg: str) -> None:
@@ -164,7 +168,7 @@ def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
         f"{time.perf_counter() - t:.2f} s",
     )
     _log(verbose, f"loaded {len(rows)} records from {yaml_path}")
-    _log(verbose, f"recall k={k} filter={'yes' if filter_expr else 'no'}")
+    _log(verbose, f"recall k={k} filter={'no' if filter_expr is None else 'yes'}")
     _hint_native_migration(verbose, yaml_path)
     # the frames now hold what the recall reads; the parsed rows, as
     # large as the store, need not live through its Spark job
@@ -348,7 +352,7 @@ def _value_stats(matches, key: str, rows):
     return rendered, numeric, date_range
 
 
-def cmd_save(spark, base, save_path, verbose) -> int:
+def cmd_save(base, save_path, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     try:
         with open(save_path, encoding="utf-8") as f:
@@ -380,26 +384,42 @@ def cmd_save(spark, base, save_path, verbose) -> int:
         print(fmt.memorized(entry[0], rid))
     _log(verbose, f"save: {len(batch)} entries applied onto max_id={max_id}")
     yaml_io.save_records_yaml(rows, yaml_path)
-    _write_embeddings(spark, rows, emb_path, yaml_path)
+    _write_index(verbose, rows, emb_path, yaml_path)
     return 0
 
 
-def _write_embeddings(spark, rows, emb_path: str, yaml_path: str) -> None:
-    # the index is the reference's .memo counterpart: written and
-    # fingerprinted, but read by no verb. Blank records are not indexed
-    # (memo_cli.py:278-280). One file, as the reference's index is one.
-    # The index records which YAML it derives from (an
-    # underscore-prefixed sidecar, invisible to Spark's parquet reader,
-    # committed by the same rename as the table)
-    pairs = [(rid, body) for rid, body, *_ in rows if not hashing.is_blank(body)]
-    _swap_write(
-        embed_rows(spark, pairs).coalesce(1),
-        emb_path,
-        marker=("_SOURCE_SHA256", _yaml_sha256(yaml_path)),
+def _write_index(verbose: bool, rows, emb_path: str, yaml_path: str) -> None:
+    t = time.perf_counter()
+    n = _write_embeddings(rows, emb_path, yaml_path)
+    _log(
+        verbose,
+        f"index: wrote {n} vectors to {emb_path} in {time.perf_counter() - t:.2f} s",
     )
 
 
-def cmd_reindex(spark, base, verbose) -> int:
+def _write_embeddings(rows, emb_path: str, yaml_path: str) -> int:
+    """Write the index of ``rows`` as ``emb_path``; the number of
+    vectors. The index is the reference's .memo counterpart: written
+    and fingerprinted, but read by no verb. Blank records are not
+    indexed (memo_cli.py:278-280). One part file, as the reference's
+    index is one, written by pyarrow: no JVM starts. The index records
+    which YAML it derives from (an underscore-prefixed sidecar,
+    invisible to parquet readers, committed by the same rename as the
+    table)."""
+    import pyarrow.parquet as pq
+
+    pairs = [(rid, body) for rid, body, *_ in rows if not hashing.is_blank(body)]
+    table = embed_rows(pairs)
+
+    def write(tmp: str) -> None:
+        os.mkdir(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+
+    swap_write(emb_path, write, marker=("_SOURCE_SHA256", _yaml_sha256(yaml_path)))
+    return table.num_rows
+
+
+def cmd_reindex(base, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     _hint_native_migration(verbose, yaml_path)
     rows, rc = _read_rows_or_error(yaml_path)
@@ -407,7 +427,7 @@ def cmd_reindex(spark, base, verbose) -> int:
         return rc
     kept = yaml_io.compact_records(rows)
     yaml_io.save_records_yaml(kept, yaml_path)
-    _write_embeddings(spark, kept, emb_path, yaml_path)
+    _write_index(verbose, kept, emb_path, yaml_path)
     print(f"Rebuilt index from {os.path.basename(yaml_path)}")
     print(f"Wrote index: {os.path.basename(emb_path)}")
     if len(rows) > len(kept):
@@ -600,34 +620,35 @@ def main(argv: list[str] | None = None) -> int:
         print_help()
         return 1
 
+    # the verbs that need no Spark run before any session is looked up
     if verb == "clean":
         if rest:
             print("Error: clean does not accept extra arguments", file=sys.stderr)
             return 1
         return cmd_clean(base)
-    if verb not in ("save", "recall", "analyze", "reindex"):
-        print(f"Error: unknown command '{verb}'", file=sys.stderr)
-        print_help()
-        return 1
-
-    # validate the whole argv BEFORE booting Spark — a pure parse error
-    # (recall -k abc) shouldn't pay a JVM start to print one line
-    parsed = None
     if verb == "save":
         if len(rest) != 1:
             print("Error: save requires exactly one <yaml_file>", file=sys.stderr)
             return 1
-    elif verb == "recall":
+        return cmd_save(base, rest[0], verbose)
+    if verb == "reindex":
+        if rest:
+            print("Error: reindex does not accept extra arguments", file=sys.stderr)
+            return 1
+        return cmd_reindex(base, verbose)
+
+    # validate the whole argv BEFORE booting Spark — a pure parse error
+    # (recall -k abc) shouldn't pay a JVM start to print one line
+    if verb == "recall":
         parsed, rc = _parse_recall_args(rest)
-        if rc != 0:
-            return rc
     elif verb == "analyze":
         parsed, rc = _parse_analyze_args(rest)
-        if rc != 0:
-            return rc
-    elif rest:
-        print("Error: reindex does not accept extra arguments", file=sys.stderr)
+    else:
+        print(f"Error: unknown command '{verb}'", file=sys.stderr)
+        print_help()
         return 1
+    if rc != 0:
+        return rc
 
     # an in-process caller's session is used as it is: re-running the
     # builder on it would overwrite the caller's runtime confs
@@ -646,19 +667,15 @@ def main(argv: list[str] | None = None) -> int:
                 f"{'' if owns_session else ' (active session reused)'}; "
                 f"JVM options: {_jvm_flags(spark)}",
             )
-        if verb == "save":
-            return cmd_save(spark, base, rest[0], verbose)
         if verb == "recall":
             return cmd_recall(
                 spark, base, parsed["query"], parsed["k"],
                 parsed["filter_expr"], parsed["as_yaml"], verbose,
             )
-        if verb == "analyze":
-            return cmd_analyze(
-                spark, base, parsed["filter_expr"], parsed["fields"],
-                parsed["stats_key"], parsed["limit"], parsed["offset"],
-            )
-        return cmd_reindex(spark, base, verbose)
+        return cmd_analyze(
+            spark, base, parsed["filter_expr"], parsed["fields"],
+            parsed["stats_key"], parsed["limit"], parsed["offset"],
+        )
     finally:
         if owns_session:
             spark.stop()

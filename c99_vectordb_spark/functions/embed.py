@@ -19,9 +19,10 @@ Two implementations with identical integer results, run in three places:
      narrow stage over the documents table, no wide exchange anywhere;
    - on the driver, over the rows the YAML parse already holds in
      Python, so no CLI verb starts a Python worker: ``embed_rows``
-     builds the dense index that ``save`` and ``reindex`` write, and
-     ``recall_terms`` reduces each record to the two integers a recall
-     scores it by (no verb reads that index).
+     builds the dense Arrow table that ``save`` and ``reindex`` write
+     with pyarrow (neither starts a JVM), and ``recall_terms`` reduces
+     each record to the two integers a recall scores it by (no verb
+     reads that index).
 
 All produce exact integer count vectors (ARRAY<BIGINT>), or integers
 derived from them; the L2-normalized float view is a derived expression
@@ -77,22 +78,21 @@ def embed_pandas_udf(dim: int = DIM):
     return _embed
 
 
-def embed_rows(spark: SparkSession, pairs: list[tuple[int, str]]) -> DataFrame:
-    """The (id, vec) EMBEDDINGS_SCHEMA frame of ``(id, body)`` pairs,
-    embedded in this (the driver's) process by
+def embed_rows(pairs: list[tuple[int, str]]) -> "pa.Table":
+    """The (id, vec) Arrow table of ``(id, body)`` pairs, with
+    EMBEDDINGS_SCHEMA's Arrow schema (``id int64 not null``, ``vec
+    list<int64> not null``), embedded in this (the driver's) process by
     ``hashing.embed_text_sparse`` — the same integers as
-    ``build_embeddings`` without a Python worker. Every pair is
+    ``build_embeddings`` without a Python worker or a JVM. Every pair is
     embedded, a blank body to the zero vector; ``save``/``reindex``
-    pass only the non-blank records, which makes the frame
-    ``build_embeddings``' rows.
+    pass only the non-blank records, which makes the table
+    ``build_embeddings``' rows, and write it with pyarrow.
 
-    The vectors reach the JVM as one Arrow table; its scan runs no
-    Python. The frame is dense: 8·DIM bytes (3 KiB) per record here,
-    and about twice that in the JVM, which ships it inside the scan's
-    task binaries — a cost only the index write pays (a recall scores
-    from ``recall_terms``)."""
+    The table is dense: 8·DIM bytes (3 KiB) per record, built as one
+    int64 block that the list column wraps without a copy."""
     import numpy as np
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     cache: dict[str, tuple[int, int]] = {}
     ids = np.empty(len(pairs), dtype=np.int64)
@@ -107,10 +107,10 @@ def embed_rows(spark: SparkSession, pairs: list[tuple[int, str]]) -> DataFrame:
         counts.extend(sparse.values())
     vecs = np.zeros((len(pairs), DIM), dtype=np.int64)
     vecs[rows, buckets] = counts
-    table = pa.table(
-        {"id": ids, "vec": pa.FixedSizeListArray.from_arrays(vecs.ravel(), DIM)}
-    )
-    return spark.createDataFrame(table, EMBEDDINGS_SCHEMA)
+    schema = to_arrow_schema(EMBEDDINGS_SCHEMA)
+    offsets = np.arange(0, (len(pairs) + 1) * DIM, DIM, dtype=np.int32)
+    vec = pa.ListArray.from_arrays(offsets, vecs.ravel(), type=schema.field("vec").type)
+    return pa.Table.from_arrays([pa.array(ids), vec], schema=schema)
 
 
 def recall_terms(

@@ -12,7 +12,9 @@ Writes are atomic via write-temp-dir + rename swap (SURVEY.md §7 risk
 6): readers never observe a half-written table, and a crashed writer
 leaves only a stale ``.tmp-*`` to garbage-collect. On a real cluster
 this maps to a table-format commit (Delta/Iceberg); plain directory
-swap keeps the dependency surface stock-PySpark.
+swap keeps the dependency surface stock-PySpark. ``swap_write`` is the
+one commit: the store hands it Spark's parquet writer, and the CLI's
+``save``/``reindex`` a pyarrow one that writes ``<base>.emb`` with no JVM.
 """
 
 from __future__ import annotations
@@ -20,24 +22,29 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..model import EMBEDDINGS_SCHEMA, RECORDS_SCHEMA
 
 
-def _swap_write(
-    df: DataFrame, target: str, marker: tuple[str, str] | None = None
+def swap_write(
+    target: str,
+    write: Callable[[str], None],
+    marker: tuple[str, str] | None = None,
 ) -> None:
-    """Atomic-rename parquet swap. ``marker`` = (filename, text) writes
-    an underscore-prefixed sidecar INTO the tmp dir before the rename
-    (the _SOURCE_SHA256 pattern: invisible to Spark's reader, and it
-    commits atomically WITH the table — the property the streaming
-    ingest's exactly-once batch marker needs; a marker written after
-    the rename would leave a crash window where the table reflects a
-    batch the marker doesn't)."""
+    """Atomic-rename directory swap: ``write(tmp)`` fills a fresh
+    temporary directory beside ``target``, which then replaces it.
+    ``marker`` = (filename, text) writes an underscore-prefixed sidecar
+    INTO the tmp dir before the rename (the _SOURCE_SHA256 pattern:
+    invisible to Spark's and pyarrow's readers, and it commits
+    atomically WITH the table — the property the streaming ingest's
+    exactly-once batch marker needs; a marker written after the rename
+    would leave a crash window where the table reflects a batch the
+    marker doesn't)."""
     tmp = f"{target}.tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
+    write(tmp)
     if marker is not None:
         with open(os.path.join(tmp, marker[0]), "w") as f:
             f.write(marker[1])
@@ -77,15 +84,16 @@ class ParquetStore:
     def save_records(
         self, df: DataFrame, marker: tuple[str, str] | None = None
     ) -> None:
-        _swap_write(
-            df.select([f.name for f in RECORDS_SCHEMA.fields]),
+        swap_write(
             self.records_path,
+            df.select([f.name for f in RECORDS_SCHEMA.fields]).write.mode("overwrite").parquet,
             marker=marker,
         )
 
     def save_embeddings(self, df: DataFrame) -> None:
-        _swap_write(
-            df.select([f.name for f in EMBEDDINGS_SCHEMA.fields]), self.embeddings_path
+        swap_write(
+            self.embeddings_path,
+            df.select([f.name for f in EMBEDDINGS_SCHEMA.fields]).write.mode("overwrite").parquet,
         )
 
     def save(self, records: DataFrame, embeddings: DataFrame) -> None:

@@ -14,6 +14,7 @@ import contextlib
 import importlib.util
 import io
 import os
+import re
 import sys
 import types
 
@@ -304,28 +305,61 @@ def test_analyze_releases_caches(spark, db_base, extra):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _write_argv(verb, tmp_path) -> list[str]:
+    if verb == "reindex":
+        return ["reindex"]
+    batch = tmp_path / "batch.yaml"
+    batch.write_text("- body: a new note\n- id: 1\n  body: replaced\n", encoding="utf-8")
+    return ["save", str(batch)]
+
+
 @pytest.mark.parametrize("verb", ["save", "reindex"])
-def test_index_write_runs_no_python(spark, db_base, tmp_path, monkeypatch, verb):
-    """The frame that save and reindex write as ``<base>.emb`` was
-    embedded on the driver: its executed plan evaluates no Python."""
-    frames = []
-    swap_write = cli._swap_write
+def test_index_write_runs_no_spark_job(spark, db_base, tmp_path, verb):
+    """save and reindex embed on the driver and write ``<base>.emb``
+    with pyarrow: in a process with an active session they run no
+    Spark job in it."""
+    import pyarrow.parquet as pq
 
-    def capturing_swap_write(df, *args, **kwargs):
-        frames.append(df)
-        return swap_write(df, *args, **kwargs)
+    sc = spark.sparkContext
+    group = f"index-write-{verb}"
+    sc.setJobGroup(group, "save/reindex under an active session")
+    try:
+        _, rc = _mine(spark, db_base, _write_argv(verb, tmp_path))
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        # the group does count a job this thread runs
+        spark.range(3).count()
+        counted = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert rc == 0 and jobs == [] and counted
+    assert pq.read_table(db_base + ".emb").num_rows == (8 if verb == "save" else 7)
 
-    monkeypatch.setattr(cli, "_swap_write", capturing_swap_write)
-    argv = ["reindex"]
-    if verb == "save":
-        batch = tmp_path / "batch.yaml"
-        batch.write_text("- body: a new note\n- id: 1\n  body: replaced\n", encoding="utf-8")
-        argv = ["save", str(batch)]
-    _, rc = _mine(spark, db_base, argv)
-    assert rc == 0 and len(frames) == 1
-    plan = frames[0]._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
-    assert frames[0].count() == (8 if verb == "save" else 7)
+
+@pytest.mark.parametrize("verb", ["save", "reindex"])
+def test_verbose_index_line_leaves_stdout_unchanged(tmp_path, verb):
+    """``-v`` adds one stderr line with the index write's cost, and
+    changes neither stdout nor the files."""
+    outs = []
+    for flags in ([], ["-v"]):
+        run = tmp_path / ("verbose" if flags else "plain")
+        run.mkdir()
+        base = str(run / "memo")
+        with open(base + ".yaml", "w", encoding="utf-8") as f:
+            f.write(DB_YAML)
+        out, err, rc = _capture_both(cli.main, [*flags, "-f", base, *_write_argv(verb, tmp_path)])
+        assert rc == 0
+        with open(base + ".yaml", "rb") as f:
+            outs.append((out, f.read(), err))
+    (plain_out, plain_yaml, plain_err), (out, yaml_bytes, err) = outs
+    assert out == plain_out and yaml_bytes == plain_yaml and plain_err == ""
+    index = [ln for ln in err.splitlines() if ln.startswith("index: ")]
+    n = 8 if verb == "save" else 7
+    assert len(index) == 1, err
+    assert re.fullmatch(
+        rf"index: wrote {n} vectors to {re.escape(str(tmp_path / 'verbose' / 'memo.emb'))} in \d+\.\d\d s",
+        index[0],
+    ), index
 
 
 def _capture_both(fn, *args) -> tuple[str, str, int]:

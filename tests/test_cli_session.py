@@ -100,6 +100,18 @@ def test_verbose_startup_line_leaves_stdout_unchanged(spark, tmp_path, capsys):
     assert "startup: " not in plain.err
 
 
+def test_verbose_recall_reports_an_empty_filter(spark, tmp_path, capsys):
+    """``--filter ""`` is the empty filter, which applies: ``-v`` says
+    so, and stdout is the plain run's."""
+    argv = ["-f", _store(tmp_path), "recall", "-k", "2", "--filter", "", "vector recall"]
+    assert cli.main(argv) == 0
+    plain = capsys.readouterr()
+    assert cli.main(["-v", *argv]) == 0
+    verbose = capsys.readouterr()
+    assert verbose.out == plain.out and "Top 2 results" in plain.out
+    assert "recall k=2 filter=yes" in verbose.err.splitlines()
+
+
 # runs the CLI as ``python -m c99_vectordb_spark.cli ARGV`` does, then
 # reports on stderr whether PySpark's call-site capture imported IPython
 _COLD_MAIN = textwrap.dedent("""
@@ -216,3 +228,35 @@ def test_archive_key_ignores_per_run_options_and_follows_the_jars(tmp_path, monk
     os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert key() != before
     assert class_archive.archive_key(cli.CLI_JAVA_OPTIONS, "4g", str(spark_home)) != key()
+
+
+def test_cold_reindex_starts_no_jvm(tmp_path):
+    """A cold ``-v reindex`` launches no JVM: it reports no session
+    start-up and no class archive, and writes none to an empty cache."""
+    probe = textwrap.dedent("""
+        import sys
+        from pyspark import SparkContext
+        from c99_vectordb_spark import cli
+        rc = cli.main(sys.argv[1:])
+        print(f"JVM launched: {SparkContext._gateway is not None}", file=sys.stderr)
+        sys.exit(rc)
+    """)
+    base = _store(tmp_path)
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")])),
+        XDG_CACHE_HOME=str(cache),
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", probe, "-v", "-f", base, "reindex"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout == "Rebuilt index from db.yaml\nWrote index: db.emb\n"
+    lines = r.stderr.splitlines()
+    assert "JVM launched: False" in lines, r.stderr
+    assert not [ln for ln in lines if ln.startswith(("startup:", "class archive:"))], r.stderr
+    assert [ln for ln in lines if ln.startswith("index: wrote 3 vectors to ")], r.stderr
+    assert list(cache.iterdir()) == []

@@ -103,28 +103,36 @@ _EDGE_BODIES = {
 }
 
 
-def test_driver_embeddings_match_udf(spark, tmp_path):
-    """The (id, vec) frame embedded on the driver from the parsed YAML
-    rows equals the pandas-UDF build on every non-blank record, and embeds
-    the blank ones (which recall's is_blank filter drops) to zero."""
+def _edge_rows(tmp_path, bodies):
+    """The YAML store of ``bodies`` (id -> body) at ``tmp_path/db.yaml``
+    and its parsed rows."""
     import yaml
 
-    from c99_vectordb_spark.model import DIM as STORE_DIM, RECORDS_SCHEMA
     from c99_vectordb_spark.sources import yaml_io
 
     path = tmp_path / "db.yaml"
     path.write_text(
         yaml.safe_dump_all(
-            [{"id": i, "metadata": {}, "body": b} for i, b in _EDGE_BODIES.items()],
+            [{"id": i, "metadata": {}, "body": b} for i, b in bodies.items()],
             explicit_start=True, allow_unicode=True,
         ),
         encoding="utf-8",
     )
-    rows = yaml_io.read_records_yaml(str(path))
+    return path, yaml_io.read_records_yaml(str(path))
+
+
+def test_driver_embeddings_match_udf(spark, tmp_path):
+    """The (id, vec) table embedded on the driver from the parsed YAML
+    rows equals the pandas-UDF build on every non-blank record, and embeds
+    the blank ones (which recall's is_blank filter drops) to zero."""
+    from c99_vectordb_spark.model import DIM as STORE_DIM, RECORDS_SCHEMA
+    from c99_vectordb_spark.sources import yaml_io
+
+    _, rows = _edge_rows(tmp_path, _EDGE_BODIES)
     records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
-    driver = embed.embed_rows(spark, [row[:2] for row in rows])
+    driver = embed.embed_rows([row[:2] for row in rows])
     udf = embed.build_embeddings(records, dim=STORE_DIM)
-    got = {r.id: list(r.vec) for r in driver.collect()}
+    got = dict(zip(driver["id"].to_pylist(), driver["vec"].to_pylist()))
     want = {r.id: list(r.vec) for r in udf.orderBy("id").collect()}
     assert sorted(got) == list(range(13))
     assert {i: got[i] for i in want} == want
@@ -140,14 +148,15 @@ def test_recall_terms_match_vector_terms(spark, query):
     """The (id, norm2, dot) frame a recall without an index scores by
     holds, as exact int64, what ``vec_norm2`` and ``sparse_dot`` compute
     over ``embed_rows``' vectors of the same bodies."""
-    from c99_vectordb_spark.model import DIM as STORE_DIM
+    from c99_vectordb_spark.model import DIM as STORE_DIM, EMBEDDINGS_SCHEMA
     from c99_vectordb_spark.operators import recall as R
 
     pairs = [(i, _EDGE_BODIES.get(i)) for i in range(13)]
     vec = F.col("vec")
+    frame = spark.createDataFrame(embed.embed_rows(pairs), EMBEDDINGS_SCHEMA)
     want = {
         r.id: (r.norm2, r.dot)
-        for r in embed.embed_rows(spark, pairs).select(
+        for r in frame.select(
             "id",
             R.vec_norm2(vec).alias("norm2"),
             R.sparse_dot(vec, hashing.embed_text_int(query, STORE_DIM)).alias("dot"),
@@ -159,6 +168,64 @@ def test_recall_terms_match_vector_terms(spark, query):
     assert got == want
     assert want[10][0] > 1100 * 1100
     assert any(dot for _, dot in got.values()) == bool(hashing.tokenize(query))
+
+
+def _index_schema_ok(spark, emb_path) -> list:
+    """The rows of the index at ``emb_path`` once its one part file is
+    checked to hold EMBEDDINGS_SCHEMA. Spark's file reader reports every
+    column as nullable, so the nullability is checked on the file's own
+    schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from c99_vectordb_spark.model import EMBEDDINGS_SCHEMA
+
+    parts = [p for p in emb_path.iterdir() if not p.name.startswith(("_", "."))]
+    assert len(parts) == 1, parts
+    assert pq.read_schema(parts[0]) == to_arrow_schema(EMBEDDINGS_SCHEMA)
+    df = spark.read.parquet(str(emb_path))
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in EMBEDDINGS_SCHEMA
+    ]
+    return df.collect()
+
+
+def test_index_file_is_the_udf_build(spark, tmp_path):
+    """``<base>.emb`` is one part file of EMBEDDINGS_SCHEMA whose rows are
+    the pandas-UDF build over the non-blank records of the edge corpus,
+    a zero-token body among them; the blank and NBSP-only ones and the
+    gaps are left out."""
+    from c99_vectordb_spark import cli
+    from c99_vectordb_spark.model import DIM as STORE_DIM, RECORDS_SCHEMA
+    from c99_vectordb_spark.sources import yaml_io
+
+    path, rows = _edge_rows(tmp_path, {**_EDGE_BODIES, 13: "!!! ???"})
+    emb_path = tmp_path / "db.emb"
+    assert cli._write_embeddings(rows, str(emb_path), str(path)) == 7
+    got = {r.id: list(r.vec) for r in _index_schema_ok(spark, emb_path)}
+    records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
+    want = {
+        r.id: list(r.vec)
+        for r in embed.build_embeddings(records, dim=STORE_DIM).collect()
+    }
+    assert got == want and sorted(got) == [7, 8, 9, 10, 11, 12, 13]
+    assert got[13] == [0] * STORE_DIM
+
+
+@pytest.mark.parametrize(
+    "store",
+    [None, "---\nid: 0\nbody: ''\n---\nid: 2\nbody: \"\\xA0\"\n"],
+    ids=["missing", "all_blank"],
+)
+def test_reindex_writes_zero_row_index(spark, tmp_path, store):
+    """A reindex of a missing store, and of one whose every record is
+    blank, writes an index of no rows that reads with EMBEDDINGS_SCHEMA."""
+    from c99_vectordb_spark import cli
+
+    if store is not None:
+        (tmp_path / "db.yaml").write_text(store, encoding="utf-8")
+    assert cli.main(["-f", str(tmp_path / "db"), "reindex"]) == 0
+    assert _index_schema_ok(spark, tmp_path / "db.emb") == []
 
 
 def test_blank_predicates_agree(spark):

@@ -260,8 +260,7 @@ def test_index_read_runs_no_job_and_ignores_stale_index(spark, tmp_path):
     emb_path = tmp_path / "db.emb"
     yaml_path.write_text(_TYPED_YAML, encoding="utf-8")
     cli._write_embeddings(
-        spark, yaml_io.read_records_yaml(str(yaml_path)), str(emb_path),
-        str(yaml_path),
+        yaml_io.read_records_yaml(str(yaml_path)), str(emb_path), str(yaml_path)
     )
     # blank records are not embedded
     got = spark.read.parquet(str(emb_path)).collect()
