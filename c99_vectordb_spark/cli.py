@@ -1,4 +1,4 @@
-"""Argv-compatible CLI shell over the Spark engine (SURVEY §2.9).
+"""Argv-compatible CLI of the reference's ``memo`` verbs (SURVEY §2.9).
 
 Verbs and flags mirror /root/reference/memo_cli.py:696-949 (help text,
 parse_args, parse_recall_args, parse_analyze_args, main): ``save``,
@@ -14,42 +14,32 @@ anyway and scores the parsed records against its query on the driver,
 so an index that disagrees with the YAML cannot change an answer and the
 reference's save-only-index desync quirk (M6) cannot occur.
 
-Only ``recall`` and ``analyze`` use Spark. ``save``, ``reindex`` and
-``clean`` run in this process alone: the two writers apply their change
-to the parsed rows, embed them and write ``<base>.emb`` with pyarrow, and
-touch no session, not even a caller's active one. A verb that launches
-its own driver JVM starts it with a short-lived process's profile
-(``CLI_JAVA_OPTIONS``, ``CLI_CONF``) and maps Spark's classes from a
-per-user class-data archive (``class_archive``), which the first such
-verb writes; ``-v`` reports the archive as used, created or off on
-stderr. A verb run in a process with an active session uses that session
-as it is.
+No verb starts a JVM or touches a Spark session, not even an in-process
+caller's active one: each one runs the reference's loop over the rows
+``yaml_io.read_records_yaml`` parsed, in this process. ``save`` and
+``reindex`` apply their change to the rows, embed them and write
+``<base>.emb`` with pyarrow; ``recall`` filters them with
+``filters.matches_filter`` and ranks them with
+``operators.recall.recall_rows``; ``analyze`` filters, pages and counts
+them. No verb imports pandas either.
 
 Usage: ``python -m c99_vectordb_spark.cli [-f base] [-v] <verb> ...``
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import sys
 import time
-
-from pyspark.sql import SparkSession, functions as F
+from collections import Counter
+from datetime import datetime, timezone
 
 from . import fmt, hashing
-from .class_archive import ClassArchive
-from .functions.embed import embed_rows, recall_terms
-from .model import (
-    DEFAULT_K,
-    DEFAULT_LIMIT,
-    DEFAULT_OFFSET,
-    DIM,
-    RECORDS_SCHEMA,
-    STATS_TOP_N,
-)
-from .operators import analyze as A, filters as Flt, recall as R
-from .session import driver_memory
+from .functions.embed import embed_rows
+from .model import DEFAULT_K, DEFAULT_LIMIT, DEFAULT_OFFSET, STATS_TOP_N
+from .operators import filters as Flt, recall as R
 from .sources import yaml_io
 from .sources.store import swap_write
 
@@ -62,7 +52,7 @@ def _log(verbose: bool, msg: str) -> None:
 def _hint_native_migration(verbose: bool, yaml_path: str) -> None:
     """-v hint once the YAML reaches DISTRIBUTED_PARSE_BYTES:
     the adapter path tracks the reference within ~1.6x (HEADTOHEAD.md)
-    because it pays the YAML parse + JVM round-trips; the native
+    because every verb pays the whole YAML parse; the native
     parquet store measured 2.5-8x FASTER than the reference. Surfaced
     here so the measured caveat reaches users before their store grows
     further."""
@@ -117,84 +107,44 @@ def _yaml_sha256(yaml_path: str) -> str | None:
         return None
 
 
-#: Driver-JVM profile for a verb's short-lived process: it runs a few
-#: small jobs and exits, so C2 compilation (about 11 CPU-s of a 5k-record
-#: cold recall on 4 cores) never pays back, and the parallel GC's worker
-#: threads and heap sizing cost more than they save. The JVM's own log
-#: lines go to stderr, never into the result on stdout (by default its
-#: warnings go to stdout), and the class-data archive's are off.
-#: ``class_archive`` adds the archive's flag.
-CLI_JAVA_OPTIONS = (
-    "-XX:TieredStopAtLevel=1 -XX:+UseSerialGC"
-    " -Xlog:disable -Xlog:all=warning,cds*=off:stderr"
-)
-#: Session confs of the CLI's profile. PySpark's call-site capture, read
-#: once per process, costs each ``pyspark.sql.functions`` call about four
-#: py4j round trips, and the first one imports IPython when it is
-#: installed; a verb's error output does not use the call site.
-CLI_CONF = {"spark.python.sql.dataFrameDebugging.enabled": "false"}
+def _parse_filter_or_error(filter_expr: str):
+    """The parsed ``--filter`` (None for an empty one); a parse error
+    prints one line to stderr and the verb returns 1."""
+    try:
+        return Flt.parse_filter_expr(filter_expr), 0
+    except ValueError as e:
+        print(f"Error: invalid --filter expression: {e}", file=sys.stderr)
+        return None, 1
 
 
-def _get_spark(java_options: str = CLI_JAVA_OPTIONS) -> SparkSession:
-    from .session import get_spark
-
-    return get_spark("memo-spark-cli", java_options=java_options, conf=CLI_CONF)
-
-
-def _jvm_flags(spark) -> str:
-    """The driver JVM's -X/-XX flags, as it was started."""
-    mgmt = spark.sparkContext._jvm.java.lang.management
-    args = mgmt.ManagementFactory.getRuntimeMXBean().getInputArguments()
-    return " ".join(a for a in args if a.startswith("-X"))
-
-
-def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
+def cmd_recall(base, query, k, filter_expr, as_yaml, verbose) -> int:
     yaml_path, _ = _db_paths(base)
     k = R.clamp_k(k)
     rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
-    records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
-    # score the parsed bodies against the query here, on the driver:
-    # the recall boots no Python worker and hands Spark two integers per
-    # record
-    t = time.perf_counter()
-    embeddings = recall_terms(spark, [row[:2] for row in rows], query)
     # R4: diagnostics to stderr only — stdout is the result contract
     # (memo_cli.py:38-40)
-    _log(
-        verbose,
-        f"recall: scored {len(rows)} records on the driver in "
-        f"{time.perf_counter() - t:.2f} s",
-    )
     _log(verbose, f"loaded {len(rows)} records from {yaml_path}")
     _log(verbose, f"recall k={k} filter={'no' if filter_expr is None else 'yes'}")
     _hint_native_migration(verbose, yaml_path)
-    # the frames now hold what the recall reads; the parsed rows, as
-    # large as the store, need not live through its Spark job
-    del rows
     if not as_yaml:
         print(fmt.recall_header(k))
-    fcol = None
-    # `is not None`, not truthiness: --filter "" parses to the EMPTY
-    # map, which still applies the nonempty-metadata gate
-    # (memo_cli.py:483-506) — a falsy check would skip filtering
+    keep = None
+    # `is not None`, not truthiness: --filter "" parses to no condition,
+    # which still applies the nonempty-metadata gate (memo_cli.py:483-506)
     if filter_expr is not None:
-        try:
-            fcol = Flt.compile_filter(
-                filter_expr,
-                Flt.map_resolver(),
-                nonempty=Flt.records_nonempty_metadata(),
-            )
-        except ValueError as e:
-            print(f"Error: invalid --filter expression: {e}", file=sys.stderr)
-            return 1
-    hits = [
-        (r.id, r.score, r.body)
-        for r in R.recall(
-            records, query, k=k, filter_col=fcol, dim=DIM, embeddings=embeddings
-        ).collect()
-    ]
+        parsed, rc = _parse_filter_or_error(filter_expr)
+        if rc:
+            return rc
+        keep = functools.partial(Flt.matches_filter, parsed)
+    t = time.perf_counter()
+    hits = R.recall_rows(rows, query, k, keep)
+    _log(
+        verbose,
+        f"recall: searched {len(rows)} records on the driver in "
+        f"{time.perf_counter() - t:.2f} s",
+    )
     if as_yaml:
         print(fmt.recall_yaml(hits))
     else:
@@ -203,7 +153,7 @@ def cmd_recall(spark, base, query, k, filter_expr, as_yaml, verbose) -> int:
     return 0
 
 
-def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> int:
+def cmd_analyze(base, filter_expr, fields, stats_key, limit, offset) -> int:
     yaml_path, _ = _db_paths(base)
     if not filter_expr or not filter_expr.strip():
         print("Error: analyze requires --filter <expr>", file=sys.stderr)
@@ -217,30 +167,23 @@ def cmd_analyze(spark, base, filter_expr, fields, stats_key, limit, offset) -> i
     rows, rc = _read_rows_or_error(yaml_path)
     if rc:
         return rc
-    try:
-        fcol = Flt.compile_filter(
-            filter_expr, Flt.map_resolver(), nonempty=Flt.records_nonempty_metadata()
-        )
-    except ValueError as e:
-        print(f"Error: invalid --filter expression: {e}", file=sys.stderr)
-        return 1
-    # Spark filters, counts, pages and aggregates; the cells render from
-    # the parsed rows (row i has id i) at the ids it returns
-    matches = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA).filter(fcol).cache()
-    try:
-        print(fmt.matched(matches.count()))
-        if stats_key is not None:
-            return _print_stats(matches, stats_key, rows)
-        # default projection: id + first 3 sorted metadata keys
-        # (memo_cli.py:560-565)
-        selected = fields if fields else ["id", *A.default_fields(matches)]
-        page = matches.orderBy("id").offset(offset).limit(limit).select("id").collect()
-    finally:
-        matches.unpersist()
-    table = []
-    for r in page:
-        md = rows[r.id][2] or {}
-        table.append([_cell(r.id, md, field) for field in selected])
+    parsed, rc = _parse_filter_or_error(filter_expr)
+    if rc:
+        return rc
+    # the records in id order (memo_cli.py:668-674)
+    matches = [(rid, md) for rid, _, md in rows if Flt.matches_filter(parsed, md)]
+    print(fmt.matched(len(matches)))
+    if stats_key is not None:
+        return _print_stats(matches, stats_key)
+    # default projection: id + first 3 sorted metadata keys
+    # (memo_cli.py:560-565)
+    selected = fields or [
+        "id", *sorted({key for _, md in matches for key in yaml_io.str_keys(md)})[:3]
+    ]
+    table = [
+        [_cell(rid, md, field) for field in selected]
+        for rid, md in matches[offset : offset + limit]
+    ]
     headers = ["ID" if f == "id" else f for f in selected]
     out = fmt.table(headers, table)
     if out:
@@ -260,96 +203,63 @@ def _cell(rid: int, md: dict, field: str) -> str:
     return fmt.format_cell(yaml_io.str_keys(md).get(key))
 
 
-def _print_stats(matches, key: str, rows) -> int:
-    """Stats block (memo_cli.py:581-633): the matched values counted by
-    their format_cell rendering (memo_cli.py:588). Top-4 tie-break: the
-    reference's Counter insertion order equals first-occurrence order
-    of an id-ascending scan, so (count desc, min(id) asc) reproduces
-    it exactly."""
-    numeric = date_range = None
-    if key == "metadata":
-        # each matched record counts its WHOLE metadata dict
-        # (memo_cli.py:543-547); a dict is never numeric or date-like
-        # (float(str(dict)) and parse_iso both fail)
-        groups = [
-            (fmt.format_cell(rows[r.id][2] or {}), 1, r.id)
-            for r in matches.select("id").collect()
-        ]
+def _print_stats(matches, key: str) -> int:
+    """Stats block (memo_cli.py:581-633) over the matched records' values
+    of ``key``, nulls dropped (memo_cli.py:583-586): the values counted
+    by their format_cell rendering (memo_cli.py:588) in a Counter, whose
+    most_common breaks a tie by first occurrence, in id order. The
+    ``metadata`` key counts each record's whole dict (memo_cli.py:543-547)."""
+    if key == "id":
+        values = [rid for rid, _ in matches]
+    elif key == "metadata":
+        values = [md for _, md in matches]
     else:
-        groups, numeric, date_range = _value_stats(matches, key, rows)
-    # (count, first id) per rendering
-    counts: dict[str, list[int]] = {}
-    for shown, n, first_id in groups:
-        c = counts.setdefault(shown, [0, first_id])
-        c[0] += n
-        c[1] = min(c[1], first_id)
-    ranked = sorted(counts.items(), key=lambda kv: (-kv[1][0], kv[1][1]))
-    top = [(shown, n) for shown, (n, _) in ranked[:STATS_TOP_N]]
+        k = key[len("metadata.") :] if key.startswith("metadata.") else key
+        values = [yaml_io.str_keys(md).get(k) for _, md in matches]
+        values = [v for v in values if v is not None]
+    ranked = Counter(fmt.format_cell(v) for v in values).most_common()
     other = None
     if len(ranked) > STATS_TOP_N:
-        residual = sum(n for _, (n, _) in ranked[STATS_TOP_N:])
-        other = (len(ranked) - STATS_TOP_N, residual)
-    print(fmt.stats_block(key, len(ranked), top, other, numeric, date_range))
+        rest = ranked[STATS_TOP_N:]
+        other = (len(rest), sum(n for _, n in rest))
+    numeric = _numeric_range(values)
+    date_range = None if numeric else _date_range(values)
+    print(
+        fmt.stats_block(key, len(ranked), ranked[:STATS_TOP_N], other, numeric, date_range)
+    )
     return 0
 
 
-def _value_stats(matches, key: str, rows):
-    """One key's (rendering, count, first id) groups and its numeric or
-    date-like range, aggregated by Spark. A group holds one str() (the
-    filter's, convert.split_metadata) of one type, so its values render
-    alike: as format_cell of the value at its first id. Groups of
-    different types can render alike too (1 and '1', [a] and '[a]');
-    the caller merges them. Nulls are dropped first
-    (memo_cli.py:583-586)."""
-    k = key[len("metadata.") :] if key.startswith("metadata.") else key
-    if key == "id":
-        value = F.col("id").cast("string")
-        numeric_src = F.col("id").cast("double")
-        tag = F.lit("int")
-    else:
-        tag = F.coalesce(F.col("metadata_types").getItem(k), F.lit("str"))
-        value = F.when(tag != "null", F.col("metadata").getItem(k))
-        # reference numeric path: isinstance(v,(int,float)) OR float(str(v));
-        # booleans are ints in python -> True=1.0 (memo_cli.py:601-604)
-        numeric_src = F.when(tag == "bool", (F.col("metadata").getItem(k) == "True").cast("double")).otherwise(
-            F.col("metadata").getItem(k).try_cast("double")
-        )
-    vals = matches.select(
-        F.col("id").alias("rid"), value.alias("v"), numeric_src.alias("num"), tag.alias("tag")
-    ).filter(F.col("v").isNotNull()).cache()
+def _numeric_range(values: list) -> tuple[float, float, float] | None:
+    """(min, max, mean) when every value is a number (a bool counts as
+    one) or ``float(str(v))`` parses it (memo_cli.py:600-609); else
+    None."""
     try:
-        groups = (
-            vals.groupBy("v", "tag")
-            .agg(F.count(F.lit(1)).alias("count"), F.min("rid").alias("first_id"))
-            .collect()
-        )
-        numeric = None
-        date_range = None
-        agg = vals.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bool_and(F.col("num").isNotNull()), F.lit(False)).alias("ok"),
-            F.min("num").alias("mn"),
-            F.max("num").alias("mx"),
-            F.avg("num").alias("av"),
-        ).collect()[0]
-        if agg.n > 0 and agg.ok:
-            numeric = (agg.mn, agg.mx, agg.av)
-        else:
-            d = A.date_stats(vals.filter(F.col("tag") == "str"), F.col("v")).collect()[0]
-            if d.n == agg.n and agg.n > 0 and d.date_ok:
-                date_range = (d.dmin, d.dmax)
-    finally:
-        vals.unpersist()
-    rendered = [
-        (
-            r.v if key == "id"
-            else fmt.format_cell(yaml_io.str_keys(rows[r.first_id][2])[k]),
-            r["count"],
-            r.first_id,
-        )
-        for r in groups
-    ]
-    return rendered, numeric, date_range
+        nums = [float(v) if isinstance(v, (int, float)) else float(str(v)) for v in values]
+    except (ValueError, OverflowError):
+        return None
+    return (min(nums), max(nums), sum(nums) / len(nums)) if nums else None
+
+
+def _date_range(values: list) -> tuple[str, str] | None:
+    """The first and the last date when every value is an ISO-8601
+    string, a trailing ``Z`` read as ``+00:00`` (memo_cli.py:529-539,
+    620-633); else None. A value with an offset counts at its UTC
+    instant and a naive one as UTC, so both compare."""
+    stamps = []
+    for v in values:
+        if not isinstance(v, str):
+            return None
+        try:
+            t = datetime.fromisoformat(v[:-1] + "+00:00" if v.endswith("Z") else v)
+            if t.tzinfo is not None:
+                t = t.astimezone(timezone.utc).replace(tzinfo=None)
+        except (ValueError, OverflowError):  # OverflowError: UTC before year 1
+            return None
+        stamps.append(t)
+    if not stamps:
+        return None
+    return min(stamps).date().isoformat(), max(stamps).date().isoformat()
 
 
 def cmd_save(base, save_path, verbose) -> int:
@@ -620,7 +530,6 @@ def main(argv: list[str] | None = None) -> int:
         print_help()
         return 1
 
-    # the verbs that need no Spark run before any session is looked up
     if verb == "clean":
         if rest:
             print("Error: clean does not accept extra arguments", file=sys.stderr)
@@ -636,51 +545,25 @@ def main(argv: list[str] | None = None) -> int:
             print("Error: reindex does not accept extra arguments", file=sys.stderr)
             return 1
         return cmd_reindex(base, verbose)
-
-    # validate the whole argv BEFORE booting Spark — a pure parse error
-    # (recall -k abc) shouldn't pay a JVM start to print one line
     if verb == "recall":
         parsed, rc = _parse_recall_args(rest)
-    elif verb == "analyze":
-        parsed, rc = _parse_analyze_args(rest)
-    else:
-        print(f"Error: unknown command '{verb}'", file=sys.stderr)
-        print_help()
-        return 1
-    if rc != 0:
-        return rc
-
-    # an in-process caller's session is used as it is: re-running the
-    # builder on it would overwrite the caller's runtime confs
-    t = time.perf_counter()
-    spark = SparkSession.getActiveSession()
-    owns_session = spark is None
-    if owns_session:
-        archive = ClassArchive(CLI_JAVA_OPTIONS, driver_memory())
-        with archive.launch_env():
-            spark = _get_spark(archive.java_options)
-    try:
-        if verbose:
-            _log(
-                verbose,
-                f"startup: get_spark {time.perf_counter() - t:.2f} s"
-                f"{'' if owns_session else ' (active session reused)'}; "
-                f"JVM options: {_jvm_flags(spark)}",
-            )
-        if verb == "recall":
-            return cmd_recall(
-                spark, base, parsed["query"], parsed["k"],
-                parsed["filter_expr"], parsed["as_yaml"], verbose,
-            )
-        return cmd_analyze(
-            spark, base, parsed["filter_expr"], parsed["fields"],
-            parsed["stats_key"], parsed["limit"], parsed["offset"],
+        if rc != 0:
+            return rc
+        return cmd_recall(
+            base, parsed["query"], parsed["k"], parsed["filter_expr"],
+            parsed["as_yaml"], verbose,
         )
-    finally:
-        if owns_session:
-            spark.stop()
-            _log(verbose, f"class archive: {archive.finish()}")
-
+    if verb == "analyze":
+        parsed, rc = _parse_analyze_args(rest)
+        if rc != 0:
+            return rc
+        return cmd_analyze(
+            base, parsed["filter_expr"], parsed["fields"], parsed["stats_key"],
+            parsed["limit"], parsed["offset"],
+        )
+    print(f"Error: unknown command '{verb}'", file=sys.stderr)
+    print_help()
+    return 1
 
 if __name__ == "__main__":
     raise SystemExit(main())

@@ -17,25 +17,26 @@ Two implementations with identical integer results, run in three places:
      ``build_embeddings``: map-only (no shuffle), used for bulk builds
      (the native store, streaming, the registry) — at 100 TB one
      narrow stage over the documents table, no wide exchange anywhere;
-   - on the driver, over the rows the YAML parse already holds in
-     Python, so no CLI verb starts a Python worker: ``embed_rows``
+   - in the CLI's process, over the rows the YAML parse already holds,
+     so no CLI verb starts a JVM or a Python worker: ``embed_rows``
      builds the dense Arrow table that ``save`` and ``reindex`` write
-     with pyarrow (neither starts a JVM), and ``recall_terms`` reduces
-     each record to the two integers a recall scores it by (no verb
-     reads that index).
+     with pyarrow, and ``operators.recall.recall_rows`` reduces each
+     record to the two integers a recall scores it by (no verb reads
+     that index).
 
 All produce exact integer count vectors (ARRAY<BIGINT>), or integers
 derived from them; the L2-normalized float view is a derived expression
 (``normalized``).
 """
 
-from __future__ import annotations
+# No ``from __future__ import annotations``: PySpark reads the pandas
+# UDF's type hints, which must resolve to pandas' classes, and pandas is
+# imported only where the UDF is built (a CLI verb never imports it).
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..hashing import embed_text_int, embed_text_sparse
-from ..model import DIM, EMBEDDINGS_SCHEMA, RECALL_TERMS_SCHEMA
+from ..model import DIM
 from . import text as Ft
 
 
@@ -69,6 +70,7 @@ def embed_pandas_udf(dim: int = DIM):
     ``hashing.embed_text_int`` per body, with one token cache per batch;
     exact integer parity with ``embed_expr`` (tested in tests/test_embed.py).
     """
+    import pandas as pd
 
     @F.pandas_udf("array<long>")
     def _embed(bodies: pd.Series) -> pd.Series:
@@ -89,13 +91,19 @@ def embed_rows(pairs: list[tuple[int, str]]) -> "pa.Table":
     ``build_embeddings``' rows, and write it with pyarrow.
 
     The table is dense: 8·DIM bytes (3 KiB) per record, built as one
-    int64 block that the list column wraps without a copy."""
+    int64 block that the list column wraps without a copy. The columns
+    wrap numpy's buffers: handing pyarrow a numpy array would import
+    pandas, which pyarrow probes for."""
     import numpy as np
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
 
+    schema = pa.schema([
+        pa.field("id", pa.int64(), nullable=False),
+        pa.field("vec", pa.list_(pa.field("element", pa.int64())), nullable=False),
+    ])
+    n = len(pairs)
     cache: dict[str, tuple[int, int]] = {}
-    ids = np.empty(len(pairs), dtype=np.int64)
+    ids = np.empty(n, dtype=np.int64)
     rows: list[int] = []
     buckets: list[int] = []
     counts: list[int] = []
@@ -105,44 +113,15 @@ def embed_rows(pairs: list[tuple[int, str]]) -> "pa.Table":
         rows.extend([i] * len(sparse))
         buckets.extend(sparse)
         counts.extend(sparse.values())
-    vecs = np.zeros((len(pairs), DIM), dtype=np.int64)
+    vecs = np.zeros((n, DIM), dtype=np.int64)
     vecs[rows, buckets] = counts
-    schema = to_arrow_schema(EMBEDDINGS_SCHEMA)
-    offsets = np.arange(0, (len(pairs) + 1) * DIM, DIM, dtype=np.int32)
-    vec = pa.ListArray.from_arrays(offsets, vecs.ravel(), type=schema.field("vec").type)
-    return pa.Table.from_arrays([pa.array(ids), vec], schema=schema)
-
-
-def recall_terms(
-    spark: SparkSession, pairs: list[tuple[int, str]], query_text: str
-) -> DataFrame:
-    """The (id, norm2, dot) RECALL_TERMS_SCHEMA frame of ``(id, body)``
-    pairs: each body's squared norm and its dot product with the
-    embedding of ``query_text``, exact int64 — the integers ``operators.recall.vec_norm2`` and
-    ``sparse_dot`` compute over ``embed_rows``' vector of the body. A
-    blank body scores (0, 0); a recall passes every record and drops the
-    blank ones with the Spark-side ``is_blank`` filter.
-
-    Three int64 columns reach the JVM as one Arrow table (24 bytes per
-    record), where a dense frame would carry 8·DIM."""
-    import pyarrow as pa
-
-    cache: dict[str, tuple[int, int]] = {}
-    ids, norm2, dot = [], [], []
-    q = [(b, w) for b, w in embed_text_sparse(query_text, DIM).items() if w]
-    for rid, body in pairs:
-        sparse = embed_text_sparse(body, DIM, cache)
-        ids.append(rid)
-        norm2.append(sum(c * c for c in sparse.values()))
-        dot.append(sum(w * sparse.get(b, 0) for b, w in q))
-    table = pa.table(
-        {
-            "id": pa.array(ids, pa.int64()),
-            "norm2": pa.array(norm2, pa.int64()),
-            "dot": pa.array(dot, pa.int64()),
-        }
+    offsets = np.arange(0, (n + 1) * DIM, DIM, dtype=np.int32)
+    values = pa.Array.from_buffers(pa.int64(), n * DIM, [None, pa.py_buffer(vecs)])
+    vec = pa.Array.from_buffers(
+        schema.field("vec").type, n, [None, pa.py_buffer(offsets)], children=[values]
     )
-    return spark.createDataFrame(table, RECALL_TERMS_SCHEMA)
+    id_col = pa.Array.from_buffers(pa.int64(), n, [None, pa.py_buffer(ids)])
+    return pa.Table.from_arrays([id_col, vec], schema=schema)
 
 
 def normalized(vec: Column) -> Column:

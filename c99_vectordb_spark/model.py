@@ -88,14 +88,3 @@ EMBEDDINGS_SCHEMA = T.StructType(
         T.StructField("vec", T.ArrayType(T.LongType()), False),
     ]
 )
-
-#: What a CLI recall scores each record by: its embedding's squared
-#: norm and its dot product with the query's (functions/embed.recall_terms,
-#: operators/recall.recall).
-RECALL_TERMS_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("norm2", T.LongType(), False),
-        T.StructField("dot", T.LongType(), False),
-    ]
-)

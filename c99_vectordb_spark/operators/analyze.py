@@ -19,6 +19,12 @@ only referenced columns are read):
 Determinism: the reference's top-4 tie-break is Counter insertion
 order (first-seen id); ours is (count desc, value asc) — documented
 deviation, encoded identically in the oracle SQL (SURVEY.md §7 risk 4).
+
+These serve the registry's queries. The CLI's ``analyze`` runs the
+reference's loop instead, in its own process over the YAML rows it
+parsed (``cli.cmd_analyze``): a ``Counter`` with the reference's
+tie-break, and ``float(str(v))`` and ``datetime.fromisoformat`` for the
+ranges.
 """
 
 from __future__ import annotations
@@ -74,19 +80,6 @@ def profile_table(df: "DataFrame", columns: list[str]) -> "DataFrame":
     return one.select(F.explode(cols).alias("p")).select(
         "p.col_name", "p.n_nulls", "p.n_distinct", "p.min_str", "p.max_str"
     )
-
-
-def default_fields(matches: DataFrame, metadata_col: str = "metadata") -> list[str]:
-    """P3 — union of matched records' metadata keys, sorted, first 3
-    (memo_cli.py:560-565). One tiny aggregate over map_keys."""
-    rows = (
-        matches.select(F.explode(F.map_keys(F.col(metadata_col))).alias("k"))
-        .distinct()
-        .orderBy("k")
-        .limit(3)
-        .collect()
-    )
-    return [r.k for r in rows]
 
 
 def value_counts_with_other(

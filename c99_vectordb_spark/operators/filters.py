@@ -1,10 +1,11 @@
-"""F1-F10 — the filter-expression compiler (SURVEY.md §2.3).
+"""F1-F10 — the filter-expression language (SURVEY.md §2.3), with two
+evaluators.
 
 The reference's query language is a YAML flow map of conditions
 (/root/reference/memo_cli.py:170-241: parse_yaml_flow_map,
-matches_filter, eval_condition, compare_values, bare_equals). This
-module compiles such an expression into a single Spark ``Column``
-predicate, preserving the reference's weakly-typed dynamic semantics:
+matches_filter, eval_condition, compare_values, bare_equals). Both
+evaluators share its parser (:func:`parse_filter_expr`) and keep the
+reference's weakly-typed dynamic semantics:
 
 - F1  bare equality      — ``str(v) == str(x)``; list values: ANY element
 - F2  ``$ne``            — negated F1 (key must still exist)
@@ -21,19 +22,30 @@ predicate, preserving the reference's weakly-typed dynamic semantics:
 - a condition dict must have exactly ONE operator key; unknown ``$op``
   never matches (memo_cli.py:207-208, 220)
 
-Because Catalyst receives one ordinary boolean expression, predicate
-pushdown / partition pruning / column pruning all apply — the compiled
-filter lands in the parquet scan (`PushedFilters`) when it references
-plain columns.
+The evaluators:
 
-Value resolution is pluggable: a ``Resolver`` maps a key name to a
-:class:`FieldRef` (stringified value, existence, type tag, optional
-list value). Two resolvers ship:
+- :func:`matches_filter` — the reference's loop in Python, one record's
+  loaded metadata dict at a time, keyed as ``yaml_io.str_keys`` keys it.
+  The CLI's ``recall`` and ``analyze`` run it over the rows they parsed.
+- :func:`compile_filter`  — the same predicate as ONE Spark ``Column``,
+  for the record tables of the registry, the native store and
+  streaming. Because Catalyst receives one ordinary boolean expression,
+  predicate pushdown / partition pruning / column pruning all apply —
+  the compiled filter lands in the parquet scan (`PushedFilters`) when
+  it references plain columns.
+
+``tests/test_property.py::test_matches_filter_equals_compile_filter``
+pins the two equal over generated metadata and filters.
+
+Value resolution of the compiled filter is pluggable: a ``Resolver``
+maps a key name to a :class:`FieldRef` (stringified value, existence,
+type tag, optional list value). Three resolvers ship:
 
 - :func:`map_resolver`     — record tables with the metadata triple
                              (model.RECORDS_SCHEMA)
 - :func:`columns_resolver` — plain typed DataFrame columns (lets the
                              same language query any table)
+- :func:`variant_resolver` — a ``VariantType`` metadata column
 """
 
 from __future__ import annotations
@@ -45,6 +57,8 @@ from typing import Callable
 import yaml
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
+
+from ..sources.yaml_io import str_keys
 
 
 # ---------------------------------------------------------------------------
@@ -435,6 +449,65 @@ def _fold_or(cols: list[Column]) -> Column:
     for c in cols[1:]:
         out = out | c
     return out
+
+
+# ---------------------------------------------------------------------------
+# evaluation of one loaded record (memo_cli.py:179-241)
+# ---------------------------------------------------------------------------
+
+def matches_filter(parsed: dict | None, metadata: dict | None) -> bool:
+    """Whether a record whose loaded metadata is ``metadata`` matches
+    ``parsed`` (:func:`parse_filter_expr`'s result; None for an empty
+    expression, which matches every record with metadata). The
+    reference's matches_filter over ``yaml_io.str_keys(metadata)``: a
+    filter's int key 7 names the metadata's key 7 or '7', as it does in
+    :func:`compile_filter`'s map."""
+    md = str_keys(metadata)
+    return bool(md) and (parsed is None or _matches(parsed, md))
+
+
+def _matches(node: dict, md: dict) -> bool:
+    for key, cond in node.items():
+        if key == "$and" or key == "$or":
+            if not isinstance(cond, list):
+                return False
+            subs = (isinstance(c, dict) and _matches(c, md) for c in cond)
+            if not (all(subs) if key == "$and" else any(subs)):
+                return False
+        elif str(key) not in md or not _condition(md[str(key)], cond):
+            return False
+    return True
+
+
+def _equals(v, x) -> bool:
+    """F1 (memo_cli.py:195-198)."""
+    if isinstance(v, list):
+        return any(str(e) == str(x) for e in v)
+    return str(v) == str(x)
+
+
+def _condition(v, cond) -> bool:
+    """One condition on a present key's value (memo_cli.py:201-222)."""
+    if not isinstance(cond, dict):
+        return _equals(v, cond)
+    if len(cond) != 1:
+        return False
+    ((op, x),) = cond.items()
+    if op == "$gte" or op == "$lte":
+        # numeric iff both sides are int/float (bool included), else
+        # lexicographic on str() (memo_cli.py:179-192)
+        if isinstance(v, (int, float)) and isinstance(x, (int, float)):
+            a, b = float(v), float(x)
+        else:
+            a, b = str(v), str(x)
+        return a >= b if op == "$gte" else a <= b
+    if op == "$ne":
+        return not _equals(v, x)
+    if op == "$prefix":
+        return isinstance(v, str) and v.startswith(str(x))
+    if op == "$contains":
+        return isinstance(v, list) and _equals(v, x)
+    return False
 
 
 def records_nonempty_metadata(

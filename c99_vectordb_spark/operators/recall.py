@@ -20,18 +20,22 @@ Scoring paths:
   (d² = 2 − 2·cosθ, SURVEY.md §1.4).
 
 Embeddings: ``recall`` scores each record from two integers, its
-embedding's squared norm and its dot product with the query's. It joins
-the records to a frame that carries either them (``norm2``, ``dot``) or
-the embedding (``vec``), from which it derives them after the join
-(``vec_norm2``, ``sparse_dot``). The CLI passes the (id, norm2, dot)
-frame it computed on the driver from the parsed YAML rows
-(``functions.embed.recall_terms``), so no DIM-wide array enters the
-JVM and the plan is records ⋈ terms → TakeOrderedAndProject with no
-Python UDF; the native store (``tools/headtohead.py``) passes its
-(id, vec) embeddings. With ``embeddings=None``
+embedding's squared norm and its dot product with the query's
+(``vec_norm2``, ``sparse_dot``), derived from an (id, vec) embeddings
+frame after the join. The native store (``tools/headtohead.py``) passes
+its (id, vec) embeddings; with ``embeddings=None``
 (``__spark_entry__.entry``, the tests) recall embeds the filtered
 records in flight with the pandas UDF, in the executors' Python
 workers.
+
+``recall_rows`` is the same read path in this process, over the parsed
+YAML rows the CLI holds: the reference's one loop, with no JVM. It
+filters on a predicate over each record's metadata (the CLI's is
+``filters.matches_filter``), computes the same two integers
+per record with the sparse token loop (``hashing.embed_text_sparse``),
+and scores them with the same double operations in the same order as
+``recall``'s plan, so both return the same floats
+(``tests/test_embed.py::test_cli_recall_equals_spark_recall``).
 
 Determinism: ties broken by id ascending (reference leaves FAISS ties
 unspecified; SURVEY.md §7 risk 4).
@@ -39,9 +43,13 @@ unspecified; SURVEY.md §7 risk 4).
 
 from __future__ import annotations
 
+import heapq
+import math
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..hashing import embed_text_int, l2_normalize
+from ..hashing import embed_text_int, embed_text_sparse, is_blank
 from ..model import DEFAULT_K, DIM, MAX_K
 from ..functions import text as Ft
 
@@ -168,14 +176,12 @@ def recall(
     """Full recall read path (memo_cli.py:453-524, SURVEY.md §3.1).
 
     Embeds ``query_text`` driver-side (one string), embeds records
-    in-flight unless an ``embeddings`` DataFrame is given — (id, vec),
-    or (id, norm2, dot) against this query's embedding — applies the
-    compiled metadata filter and the blank-body skip (F12), and returns top-k (id, body, score) by normalized squared-L2
+    in-flight unless an (id, vec) ``embeddings`` DataFrame is given,
+    applies the compiled metadata filter and the blank-body skip (F12),
+    and returns top-k (id, body, score) by normalized squared-L2
     ascending. The reference's score floor (F11, ``score < -0.9``) is
     omitted: the score lies in [0, 4], so it never removes a row.
     """
-    import math
-
     from ..functions.embed import build_embeddings
 
     k = clamp_k(k)
@@ -193,11 +199,9 @@ def recall(
     # sparse integer dot — no per-document normalization pass. Zero
     # vectors (reference zero-guard, memo_cli.py:131-135): distance is
     # the other side's unit norm (1.0) or 0.0 if both are zero.
-    if "vec" in emb.columns:
-        norm2 = vec_norm2(F.col("vec"))
-        dot = sparse_dot(F.col("vec"), qint)
-    else:
-        norm2, dot = F.col("norm2"), F.col("dot")
+    # ``_score`` is the same arithmetic in Python.
+    norm2 = vec_norm2(F.col("vec"))
+    dot = sparse_dot(F.col("vec"), qint)
     if qnorm <= 1e-8:
         score = F.when(norm2 == 0, F.lit(0.0)).otherwise(F.lit(1.0))
     else:
@@ -212,3 +216,39 @@ def recall(
         .select("id", "body", "score")
     )
     return scored.orderBy(F.asc("score"), F.asc("id")).limit(k)
+
+
+def _score(norm2: int, dot: int, qnorm: float) -> float:
+    """``recall``'s score column for one record, in Python: the same
+    double operations, in the same order, on the same integers."""
+    if qnorm <= 1e-8:
+        return 0.0 if norm2 == 0 else 1.0
+    if norm2 == 0:
+        return 1.0
+    return 2.0 - 2 * (dot / (math.sqrt(norm2) * qnorm))
+
+
+def recall_rows(
+    rows: list[tuple],
+    query_text: str,
+    k: int | None = None,
+    keep: Callable[[dict | None], bool] | None = None,
+) -> list[tuple[int, float, str]]:
+    """``recall`` over parsed ``(id, body, metadata)`` rows in this
+    process: the top-k (id, score, body) of the non-blank records (F12)
+    whose metadata ``keep`` accepts (all when None), ranked by (score,
+    id). Each record is embedded sparsely, with one token cache for the
+    batch, into the two integers ``recall`` scores it by."""
+    k = clamp_k(k)
+    query = [(b, w) for b, w in embed_text_sparse(query_text, DIM).items() if w]
+    qnorm = math.sqrt(sum(w * w for _, w in query))
+    cache: dict[str, tuple[int, int]] = {}
+    scored = []
+    for rid, body, md in rows:
+        if is_blank(body) or (keep is not None and not keep(md)):
+            continue
+        vec = embed_text_sparse(body, DIM, cache)
+        norm2 = sum(c * c for c in vec.values())
+        dot = sum(w * vec.get(b, 0) for b, w in query)
+        scored.append((_score(norm2, dot, qnorm), rid, body))
+    return [(rid, score, body) for score, rid, body in heapq.nsmallest(k, scored)]

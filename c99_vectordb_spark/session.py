@@ -7,20 +7,8 @@ and a shuffle-partition count sized for the test machine (on a real
 1000-executor cluster this would be raised or left to AQE's
 coalescing with a high initial value).
 
-``java_options`` starts a NEW driver JVM with extra flags; the CLI
-passes its short-lived-process profile (``cli.CLI_JAVA_OPTIONS``: C1-only
-JIT, serial GC, JVM logging on stderr, plus the flag of its class-data
-archive, ``class_archive``) and its session confs (``conf``:
-``cli.CLI_CONF``), while tests, ``bench.py`` and the registry keep the
-JVM defaults, whose C2 compiler pays off in a long-lived session, and
-never touch the archive cache. The flags
-go through ``spark.driver.defaultJavaOptions``, not ``extraJavaOptions``:
-a user's ``--driver-java-options`` (e.g. in ``PYSPARK_SUBMIT_ARGS``)
-replaces ``spark.driver.extraJavaOptions`` outright, whereas
-``defaultJavaOptions`` is prepended to it, so both survive. A user's own
-``spark.driver.defaultJavaOptions`` is replaced when ``java_options`` is
-given. They reach only a JVM this call launches; an already-running
-one keeps the flags it was started with.
+No CLI verb calls it: each one runs in its own process, on the
+rows it parsed, with no JVM (``cli``).
 """
 
 from __future__ import annotations
@@ -34,8 +22,6 @@ def get_spark(
     app_name: str = "c99_vectordb_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    java_options: str | None = None,
-    conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
@@ -58,10 +44,6 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
-    if java_options:
-        builder = builder.config("spark.driver.defaultJavaOptions", java_options)
-    for k, v in (conf or {}).items():
-        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 

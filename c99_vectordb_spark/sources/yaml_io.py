@@ -21,16 +21,18 @@ absent or empty. This module is the one that knows that row format. The
 parse runs driver-side, as the reference's does: the reference loads its
 YAML store wholesale per command, and error behavior stays
 byte-identical to it. Scale lives in the Parquet store (store.py).
-The CLI's verbs work on the parsed rows (``read_records_yaml``) in this
-(the driver's) process: ``save`` applies its batch to them and
+The CLI's verbs work on the parsed rows (``read_records_yaml``) in their
+own process, with no JVM: ``save`` applies its batch to them and
 ``reindex`` compacts them (``compact_records``), both dump them back
 (``save_records_yaml``) and embed them for the index
-(``functions.embed.embed_rows``); a recall scores them against its
-query (``functions.embed.recall_terms``) and never reads that index;
-``analyze`` renders its cells from them. The Spark columns come from
-one place, ``rows_to_df``: it derives RECORDS_SCHEMA's string triple
-(``convert.record_row``) for a recall's or an analyze's query and hands
-it over as Arrow; no verb ships a body to a Python worker.
+(``functions.embed.embed_rows``); a recall filters and ranks them
+(``filters.matches_filter``, ``operators.recall.recall_rows``) and never
+reads that index; ``analyze`` filters, pages, counts and renders them,
+looking a key up as ``str_keys`` does. The Spark columns come from one
+place, ``rows_to_df``: it derives RECORDS_SCHEMA's string triple
+(``convert.record_row``) and hands it over as Arrow, for the migration
+to the native store, the streaming sources and the tests that check
+the two filter evaluators and the two recalls against each other.
 """
 
 from __future__ import annotations
@@ -208,8 +210,8 @@ def load_records_yaml(spark: SparkSession, path: str) -> DataFrame:
 
 
 def str_keys(metadata: dict | None) -> dict[str, Any]:
-    """A record's metadata as ``analyze`` looks one key up, as the Spark
-    map does: top-level keys through ``str()`` (an int key 7 becomes
+    """A record's metadata as a filter or ``analyze`` looks one key up,
+    as the Spark map does: top-level keys through ``str()`` (an int key 7 becomes
     '7'), values as loaded; ``{}`` for none. The store is written, and a
     whole dict rendered, as loaded."""
     return {str(k): v for k, v in (metadata or {}).items()}

@@ -10,19 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-@pytest.fixture(scope="session", autouse=True)
-def _cache_home(tmp_path_factory):
-    """A CLI process a test starts keeps its class-data archive
-    (``class_archive``) in a temporary cache, not the user's."""
-    old = os.environ.get("XDG_CACHE_HOME")
-    os.environ["XDG_CACHE_HOME"] = str(tmp_path_factory.mktemp("xdg-cache"))
-    yield
-    if old is None:
-        del os.environ["XDG_CACHE_HOME"]
-    else:
-        os.environ["XDG_CACHE_HOME"] = old
-
-
 @pytest.fixture(scope="session")
 def spark():
     from c99_vectordb_spark.session import get_spark

@@ -296,9 +296,8 @@ def test_reindex_failed_count_releases_caches(spark, db_base, monkeypatch):
     "extra", [["--fields", "id,source,tags"], ["--stats", "priority"]]
 )
 def test_analyze_releases_caches(spark, db_base, extra):
-    """analyze caches its matches, and --stats its values, for the Spark
-    jobs it runs over them; an in-process caller's session holds no
-    cached plan once the verb returns."""
+    """analyze, with --fields or --stats, leaves no cached plan in an
+    in-process caller's session."""
     spark.catalog.clearCache()
     out, rc = _mine(spark, db_base, ["analyze", "--filter", "source: user", *extra])
     assert rc == 0 and out.startswith("Matched: "), out
@@ -313,18 +312,25 @@ def _write_argv(verb, tmp_path) -> list[str]:
     return ["save", str(batch)]
 
 
-@pytest.mark.parametrize("verb", ["save", "reindex"])
+_READ_ARGV = {
+    "recall": ["recall", "-k", "3", "--filter", "source: user", "pasta"],
+    "analyze": ["analyze", "--filter", "source: user", "--stats", "priority"],
+}
+
+
+@pytest.mark.parametrize("verb", ["save", "reindex", "recall", "analyze"])
 def test_index_write_runs_no_spark_job(spark, db_base, tmp_path, verb):
-    """save and reindex embed on the driver and write ``<base>.emb``
-    with pyarrow: in a process with an active session they run no
-    Spark job in it."""
+    """No verb runs a Spark job in a process with an active session:
+    save and reindex embed on the driver and write ``<base>.emb`` with
+    pyarrow, and recall and analyze filter, rank and count the parsed
+    rows in this process."""
     import pyarrow.parquet as pq
 
     sc = spark.sparkContext
     group = f"index-write-{verb}"
-    sc.setJobGroup(group, "save/reindex under an active session")
+    sc.setJobGroup(group, "a verb under an active session")
     try:
-        _, rc = _mine(spark, db_base, _write_argv(verb, tmp_path))
+        out, rc = _mine(spark, db_base, _READ_ARGV.get(verb) or _write_argv(verb, tmp_path))
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
         # the group does count a job this thread runs
         spark.range(3).count()
@@ -333,7 +339,10 @@ def test_index_write_runs_no_spark_job(spark, db_base, tmp_path, verb):
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert rc == 0 and jobs == [] and counted
-    assert pq.read_table(db_base + ".emb").num_rows == (8 if verb == "save" else 7)
+    if verb in _READ_ARGV:
+        assert out.startswith(("Top 3 results:\n  [0] ", "Matched: 5\n")), out
+    else:
+        assert pq.read_table(db_base + ".emb").num_rows == (8 if verb == "save" else 7)
 
 
 @pytest.mark.parametrize("verb", ["save", "reindex"])

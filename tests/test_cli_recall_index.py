@@ -1,7 +1,6 @@
-"""Recall scores the parsed YAML records on the driver, with or without
-the index ``save``/``reindex`` write: the plan runs no Python UDF and
-reads no vector, and the index, even a corrupt one, never changes the
-answer."""
+"""Recall scores the parsed YAML records in the CLI's process, with or
+without the index ``save``/``reindex`` write: it runs no Spark job, and
+the index, even a corrupt one, never changes the answer."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ import uuid
 import yaml
 
 from c99_vectordb_spark import cli
-from c99_vectordb_spark.operators import recall as R
 
 #: (metadata, body) by id: after the ordinary records a zero-token one
 #: (not blank, a zero vector), a metadata-less one, and a blank and an
@@ -69,52 +67,6 @@ def _stdout(argv: list[str]) -> str:
     return _run(argv)[0]
 
 
-def _recall_frame(monkeypatch, argv):
-    """The frame and the ``embeddings`` input of one CLI recall."""
-    calls = []
-    recall = R.recall
-
-    def spy(*args, **kwargs):
-        calls.append((recall(*args, **kwargs), kwargs["embeddings"]))
-        return calls[-1][0]
-
-    monkeypatch.setattr(R, "recall", spy)
-    _stdout(argv)
-    monkeypatch.setattr(R, "recall", recall)
-    (call,) = calls
-    return call
-
-
-def _plan(frame) -> str:
-    return frame._jdf.queryExecution().executedPlan().toString()
-
-
-def test_unindexed_recall_plan_runs_no_python_udf(spark, tmp_path, monkeypatch):
-    base = _store(tmp_path)
-    frame, _ = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
-    assert not os.path.exists(base + ".emb")
-    plan = _plan(frame)
-    assert "TakeOrderedAndProject" in plan and "Join" in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_unindexed_recall_reads_no_vector(spark, tmp_path, monkeypatch):
-    """The records reach Spark as (id, norm2, dot), also once a reindex
-    has written ``<base>.emb``: the plan scans no array column and no
-    parquet file, and folds nothing with an ``aggregate`` lambda."""
-    base = _store(tmp_path)
-    for step in ("before", "after"):
-        if step == "after":
-            _stdout(["-f", base, "reindex"])
-            assert os.path.isdir(base + ".emb")
-        frame, emb = _recall_frame(monkeypatch, ["-f", base, "recall", *_RECALLS[0]])
-        assert emb.columns == ["id", "norm2", "dot"], step
-        assert "array" not in emb.schema.simpleString()
-        plan = _plan(frame)
-        assert "vec#" not in plan and "FileScan" not in plan, step
-        assert "aggregate(" not in plan and "lambdafunction" not in plan
-
-
 def test_recall_stdout_same_before_and_after_reindex(spark, tmp_path):
     base = _store(tmp_path)
     inflight = [_stdout(["-f", base, "recall", *argv]) for argv in _RECALLS]
@@ -164,9 +116,10 @@ def _jobs(spark, argv: list[str]) -> tuple[str, str, int]:
 
 
 def test_verbose_recall_names_its_embedding_source(spark, tmp_path):
-    """``-v`` reports on stderr how many records the recall scored on
-    the driver, before and after a reindex, and runs no Spark job of
-    its own; stdout is the same as without it."""
+    """``-v`` reports on stderr how many records the recall searched on
+    the driver, before and after a reindex; neither run starts a Spark
+    job in the caller's active session, and stdout is the same as
+    without it."""
     base = _store(tmp_path)
     argv = ["recall", *_RECALLS[0]]
     for n in (10, 8):
@@ -175,11 +128,11 @@ def test_verbose_recall_names_its_embedding_source(spark, tmp_path):
         plain, _, jobs = _jobs(spark, ["-f", base, *argv])
         out, err, verbose_jobs = _jobs(spark, ["-f", base, "-v", *argv])
         assert out == plain
-        assert verbose_jobs == jobs > 0
+        assert verbose_jobs == jobs == 0
         notes = [ln for ln in err.splitlines() if ln.startswith("recall: ")]
         assert len(notes) == 1, err
         assert re.fullmatch(
-            rf"recall: scored {n} records on the driver in \d+\.\d\d s",
+            rf"recall: searched {n} records on the driver in \d+\.\d\d s",
             notes[0],
         ), notes
         assert f"loaded {n} records from {base}.yaml" in err.splitlines()

@@ -28,6 +28,16 @@ both beside each other). ``int_key_filter`` was recorded when a
 filter's int key (``7: int key``) came to be looked up as the map's
 str() key; it had ended in an AnalysisException.
 
+``filter_errors``, ``recall_filter_operators`` and the two
+``analyze_stats_*_strings`` cases were recorded from the Spark-side
+``recall``/``analyze`` (``filters.compile_filter`` and Spark's casts),
+and every other case passed unchanged when both verbs moved into the
+CLI's process. Two cases were then re-recorded, for four steps where the
+ranges now parse values as the reference does, with ``float(str(v))``
+and ``datetime.fromisoformat`` (SURVEY §1.2, §2.5 A5/A6): ``'1_000'`` is
+a number and ``'1d'`` is not (Spark's cast read them the other way), and
+``'20260115'`` is a date and ``'2026'`` is not (the same).
+
 Re-record cases (all, or the named ones) with the package that
 ``PYTHONPATH`` points at:
 
@@ -229,6 +239,25 @@ _MIXED_STORE = "".join(
     ])
 )
 
+# per key, two string values: the first one is numeric-looking or
+# date-like to one parser and not to another
+_STRING_STATS = {
+    "under": ["'1_000'", "'2'"],
+    "dsuf": ["'1d'", "'2'"],
+    "pad": ["' 7 '", "'3'"],
+    "year": ["'2026'", "'2026-01-02'"],
+    "spaced": ["'2026-01-15 10:00'", "'2026-01-16'"],
+    "tz": ["'2026-01-15T10:00:00+05:00'", "'2026-01-14'"],
+    "tzlate": ["'2026-01-15T02:00:00+05:00'", "'2026-01-16'"],
+    "basic": ["'20260115'", "'2026-01-16'"],
+}
+_STRING_STATS_STORE = "".join(
+    f"---\nid: {i}\nmetadata:\n  source: user\n"
+    + "".join(f"  {k}: {vs[i]}\n" for k, vs in _STRING_STATS.items())
+    + f"body: string values {i}\n"
+    for i in range(2)
+)
+
 
 #: name -> (seed store text or None, steps); a ``save`` step is
 #: ``("save", <batch text>)``, any other step is the verb's argv
@@ -316,6 +345,29 @@ CASES = {
         ("recall", "-k", "2", "--filter", "7: int key", "--yaml", "record"),
         ("recall", "-k", "2", "--filter", "$or: [{7: int key}, {source: chat}]", "record"),
     ]),
+    "filter_errors": (_STORE, [
+        ("recall", "-k", "2", "--filter", "source: [", "pasta"),
+        ("recall", "--filter", "- a", "--yaml", "pasta"),
+        ("analyze", "--filter", "source: ["),
+        ("analyze", "--filter", "[a, b]", "--stats", "source"),
+    ]),
+    "recall_filter_operators": (_ANALYZE_STORE, [
+        ("recall", "-k", "20", "--filter", "n: {$gte: 3}", "--yaml", "record"),
+        ("recall", "-k", "20", "--filter", "n: {$lte: '3'}", "--yaml", "record"),
+        ("recall", "-k", "20", "--filter", "source: {$prefix: us}", "--yaml", "record"),
+        ("recall", "-k", "20", "--filter", "nums: {$contains: 1}", "record"),
+        ("recall", "-k", "20", "--filter",
+         "$and: [{source: user}, {n: {$gte: 2.5}}, {l: {$ne: 1}}]", "--yaml", "record"),
+        ("recall", "-k", "20", "--filter",
+         "$or: [{uni: café}, {l: {$contains: 'true'}}, {a: {$bogus: 1}}]", "--yaml", "record"),
+        ("recall", "-k", "20", "--filter", "$and: {source: user}", "--yaml", "record"),
+    ]),
+    "analyze_stats_numeric_strings": (_STRING_STATS_STORE, [
+        (*_ALL_USER, "--stats", k) for k in ("under", "dsuf", "pad")
+    ]),
+    "analyze_stats_date_strings": (_STRING_STATS_STORE, [
+        (*_ALL_USER, "--stats", k) for k in ("year", "spaced", "tz", "tzlate", "basic")
+    ]),
     "recall_filter_yaml_reindex": (_ANALYZE_STORE, [
         ("recall", "-k", "4", "--filter", "source: user", "--yaml", "record"),
         ("reindex",),
@@ -394,7 +446,7 @@ def test_golden_covers_every_case():
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_transcript_matches_golden(spark, name):
+def test_transcript_matches_golden(name):
     want = _golden()[name]
     got = run_case(name)
     assert len(got) == len(want)
@@ -403,16 +455,10 @@ def test_transcript_matches_golden(spark, name):
 
 
 def _record(names: list[str]) -> None:
-    from c99_vectordb_spark.session import get_spark
-
     golden = _golden() if os.path.exists(GOLDEN) else {}
-    spark = get_spark("record-transcripts", shuffle_partitions=8)
-    try:
-        for name in names or sorted(CASES):
-            golden[name] = run_case(name)
-            print(f"recorded {name}: rc {[s['rc'] for s in golden[name]]}")
-    finally:
-        spark.stop()
+    for name in names or sorted(CASES):
+        golden[name] = run_case(name)
+        print(f"recorded {name}: rc {[s['rc'] for s in golden[name]]}")
     os.makedirs(os.path.dirname(GOLDEN), exist_ok=True)
     with open(GOLDEN, "w", encoding="utf-8") as f:
         json.dump({k: golden[k] for k in sorted(golden)}, f, indent=1, ensure_ascii=True)

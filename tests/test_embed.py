@@ -103,9 +103,10 @@ _EDGE_BODIES = {
 }
 
 
-def _edge_rows(tmp_path, bodies):
-    """The YAML store of ``bodies`` (id -> body) at ``tmp_path/db.yaml``
-    and its parsed rows."""
+def _edge_rows(tmp_path, bodies, metadata=None):
+    """The YAML store of ``bodies`` (id -> body) and ``metadata`` (id ->
+    dict, ``{}`` for an id it lacks) at ``tmp_path/db.yaml`` and its
+    parsed rows."""
     import yaml
 
     from c99_vectordb_spark.sources import yaml_io
@@ -113,7 +114,10 @@ def _edge_rows(tmp_path, bodies):
     path = tmp_path / "db.yaml"
     path.write_text(
         yaml.safe_dump_all(
-            [{"id": i, "metadata": {}, "body": b} for i, b in bodies.items()],
+            [
+                {"id": i, "metadata": (metadata or {}).get(i, {}), "body": b}
+                for i, b in bodies.items()
+            ],
             explicit_start=True, allow_unicode=True,
         ),
         encoding="utf-8",
@@ -142,32 +146,48 @@ def test_driver_embeddings_match_udf(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "query", ["Alpha alpha w7 upper KELVIN astral text 2026 __init__", "!!! ???"]
+    "query",
+    ["Alpha alpha w7 upper KELVIN astral text 2026 __init__", "plain words", "!!! ???"],
 )
-def test_recall_terms_match_vector_terms(spark, query):
-    """The (id, norm2, dot) frame a recall without an index scores by
-    holds, as exact int64, what ``vec_norm2`` and ``sparse_dot`` compute
-    over ``embed_rows``' vectors of the same bodies."""
-    from c99_vectordb_spark.model import DIM as STORE_DIM, EMBEDDINGS_SCHEMA
-    from c99_vectordb_spark.operators import recall as R
+def test_cli_recall_equals_spark_recall(spark, tmp_path, query):
+    """The CLI's in-process recall (``recall.recall_rows``) returns what
+    ``recall.recall``'s Spark plan returns over the same parsed rows,
+    embedded in flight by the pandas UDF: the same ids in the same order
+    with the same floats. The edge corpus holds blank, NBSP-only and
+    zero-token bodies and one without metadata; the queries include a
+    zero-token one; the filters are none, the empty one and a key."""
+    import contextlib
+    import io
 
-    pairs = [(i, _EDGE_BODIES.get(i)) for i in range(13)]
-    vec = F.col("vec")
-    frame = spark.createDataFrame(embed.embed_rows(pairs), EMBEDDINGS_SCHEMA)
-    want = {
-        r.id: (r.norm2, r.dot)
-        for r in frame.select(
-            "id",
-            R.vec_norm2(vec).alias("norm2"),
-            R.sparse_dot(vec, hashing.embed_text_int(query, STORE_DIM)).alias("dot"),
-        ).collect()
-    }
-    terms = embed.recall_terms(spark, pairs, query)
-    assert terms.dtypes == [("id", "bigint"), ("norm2", "bigint"), ("dot", "bigint")]
-    got = {r.id: (r.norm2, r.dot) for r in terms.collect()}
-    assert got == want
-    assert want[10][0] > 1100 * 1100
-    assert any(dot for _, dot in got.values()) == bool(hashing.tokenize(query))
+    import yaml
+
+    from c99_vectordb_spark import cli
+    from c99_vectordb_spark.model import RECORDS_SCHEMA
+    from c99_vectordb_spark.operators import filters as Flt, recall as R
+    from c99_vectordb_spark.sources import yaml_io
+
+    bodies = {**_EDGE_BODIES, 13: "!!! ???"}
+    metadata = {i: {"lang": "en" if i % 3 else "de"} for i in bodies if i != 12}
+    _, rows = _edge_rows(tmp_path, bodies, metadata)
+    records = yaml_io.rows_to_df(spark, rows, RECORDS_SCHEMA)
+    for expr in (None, "", "lang: en"):
+        fcol = None
+        argv = ["-f", str(tmp_path / "db"), "recall", "-k", "20", "--yaml", query]
+        if expr is not None:
+            fcol = Flt.compile_filter(
+                expr, Flt.map_resolver(), nonempty=Flt.records_nonempty_metadata()
+            )
+            argv[3:3] = ["--filter", expr]
+        want = [
+            (r.id, r.score, r.body)
+            for r in R.recall(records, query, k=20, filter_col=fcol, embeddings=None).collect()
+        ]
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            assert cli.main(argv) == 0
+        got = [(h["id"], h["score"], h["body"]) for h in yaml.safe_load(out.getvalue())["results"]]
+        assert got == want, expr
+        assert {12, 13} & {i for i, _, _ in got} == ({12, 13} if expr is None else {13}), expr
 
 
 def _index_schema_ok(spark, emb_path) -> list:

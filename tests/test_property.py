@@ -245,3 +245,79 @@ def test_variant_filter_parity_generated(spark, reference, mds, filt):
     )
     got = {r.id for r in df.filter(col).select("id").collect()}
     assert got == expected, f"filter={filt!r} metadatas={mds!r}"
+
+
+#: int and str keys, YAML nulls and a null key, with filters that name them
+_KEYED_METADATAS = [
+    {7: "int key", "lang": "en"},
+    {"7": "str key"},
+    {7: 3},
+    {7: [1, "x"]},
+    {"a": None},
+    {"a": None, "b": 1},
+    {"a": "None"},
+    {None: "null key"},
+    {},
+]
+_KEYED_FILTERS = [
+    "7: int key",
+    "'7': str key",
+    "7: {$gte: 2}",
+    "7: {$contains: x}",
+    "a: null",
+    "a: None",
+    "a: {$ne: null}",
+    "a: {$gte: null}",
+    "null: null key",
+    "b: {$lte: true}",
+    "",
+]
+
+
+def _leaves(filt: dict):
+    """Each single-key condition of a filter, as a filter of its own."""
+    for key, cond in filt.items():
+        if key in ("$and", "$or"):
+            for sub in cond:
+                yield from _leaves(sub)
+        else:
+            yield {key: cond}
+
+
+def test_matches_filter_equals_compile_filter(spark):
+    """The two filter evaluators agree: ``matches_filter`` (the CLI's,
+    on loaded dicts) and ``compile_filter`` (Spark's, on the record
+    table ``yaml_io.rows_to_df`` builds) decide alike for every metadata
+    dict x filter drawn in 300 derandomized examples of this module's
+    strategies, every single condition of those filters on its own, and
+    the keyed cases above."""
+    cases = []
+
+    @settings(max_examples=300, deadline=None, derandomize=True, database=None)
+    @given(mds=st.lists(metadatas, min_size=1, max_size=8), filt=filters)
+    def draw(mds, filt):
+        cases.append((mds, filt))
+
+    draw()
+    assert len(cases) >= 200
+    mds = [*{repr(md): md for ms, _ in cases for md in ms}.values(), *_KEYED_METADATAS]
+    drawn = [f for _, f in cases]
+    drawn += [leaf for f in drawn for leaf in _leaves(f)]
+    exprs = [*{repr(f): f for f in drawn}.values(), *_KEYED_FILTERS]
+    df = yaml_io.rows_to_df(spark, [(i, "", md) for i, md in enumerate(mds)], RECORDS_SCHEMA)
+    nonempty = Flt.records_nonempty_metadata()
+    matched = 0
+    for start in range(0, len(exprs), 40):
+        chunk = exprs[start : start + 40]
+        cols = [
+            Flt.compile_filter(f, Flt.map_resolver(), nonempty=nonempty).alias(f"f{j}")
+            for j, f in enumerate(chunk)
+        ]
+        for r in df.select("id", *cols).collect():
+            for j, f in enumerate(chunk):
+                want = bool(r[f"f{j}"])
+                assert Flt.matches_filter(Flt.parse_filter_expr(f), mds[r.id]) == want, (
+                    f"filter={f!r} metadata={mds[r.id]!r}"
+                )
+                matched += want
+    assert matched > 0
