@@ -50,12 +50,10 @@ def _log(verbose: bool, msg: str) -> None:
 
 
 def _hint_native_migration(verbose: bool, yaml_path: str) -> None:
-    """-v hint once the YAML reaches DISTRIBUTED_PARSE_BYTES:
-    the adapter path tracks the reference within ~1.6x (HEADTOHEAD.md)
-    because every verb pays the whole YAML parse; the native
-    parquet store measured 2.5-8x FASTER than the reference. Surfaced
-    here so the measured caveat reaches users before their store grows
-    further."""
+    """-v hint once the YAML reaches DISTRIBUTED_PARSE_BYTES: every verb
+    parses the whole store, and the ``parse:`` line of the same run
+    gives what that cost; the native parquet store is not parsed per
+    verb."""
     if not verbose:
         return
     try:
@@ -65,9 +63,9 @@ def _hint_native_migration(verbose: bool, yaml_path: str) -> None:
     if size >= yaml_io.DISTRIBUTED_PARSE_BYTES:
         _log(
             verbose,
-            f"hint: {yaml_path} is {size >> 20} MiB; the YAML adapter "
-            "path costs ~1.6x the native parquet store on reads "
-            "(HEADTOHEAD.md) — consider migrating: save once, then "
+            f"hint: {yaml_path} is {size >> 20} MiB and every verb parses "
+            "all of it (the parse: line gives its seconds) — consider "
+            "migrating to the native parquet store: save once, then "
             "point the tooling at the parquet store directory",
         )
 
@@ -83,18 +81,27 @@ def _db_paths(base: str) -> tuple[str, str]:
     return str(p.with_suffix(".yaml")), str(p.with_suffix(".emb"))
 
 
-def _read_rows_or_error(yaml_path: str):
+def _read_rows_or_error(yaml_path: str, verbose: bool):
     """The parsed rows of the database YAML with the reference's error
     contract (memo_cli.py:338-341 etc): any load failure prints one line
-    to stderr and the verb returns 1 — never a traceback."""
+    to stderr and the verb returns 1 — never a traceback. ``-v`` reports
+    the record count, the read's seconds and the reader that parsed the
+    YAML (``yaml_io.read_store``)."""
+    t = time.perf_counter()
     try:
-        return yaml_io.read_records_yaml(yaml_path), 0
+        rows, reader = yaml_io.read_store(yaml_path)
     except Exception as e:  # noqa: BLE001 — the reference catches Exception
         print(
             f"Error: failed to load database YAML '{yaml_path}': {e}",
             file=sys.stderr,
         )
         return None, 1
+    _log(
+        verbose,
+        f"parse: read {len(rows)} records from {yaml_path} in "
+        f"{time.perf_counter() - t:.2f} s ({reader})",
+    )
+    return rows, 0
 
 
 def _yaml_sha256(yaml_path: str) -> str | None:
@@ -120,12 +127,11 @@ def _parse_filter_or_error(filter_expr: str):
 def cmd_recall(base, query, k, filter_expr, as_yaml, verbose) -> int:
     yaml_path, _ = _db_paths(base)
     k = R.clamp_k(k)
-    rows, rc = _read_rows_or_error(yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path, verbose)
     if rc:
         return rc
     # R4: diagnostics to stderr only — stdout is the result contract
     # (memo_cli.py:38-40)
-    _log(verbose, f"loaded {len(rows)} records from {yaml_path}")
     _log(verbose, f"recall k={k} filter={'no' if filter_expr is None else 'yes'}")
     _hint_native_migration(verbose, yaml_path)
     if not as_yaml:
@@ -153,7 +159,7 @@ def cmd_recall(base, query, k, filter_expr, as_yaml, verbose) -> int:
     return 0
 
 
-def cmd_analyze(base, filter_expr, fields, stats_key, limit, offset) -> int:
+def cmd_analyze(base, filter_expr, fields, stats_key, limit, offset, verbose) -> int:
     yaml_path, _ = _db_paths(base)
     if not filter_expr or not filter_expr.strip():
         print("Error: analyze requires --filter <expr>", file=sys.stderr)
@@ -164,7 +170,7 @@ def cmd_analyze(base, filter_expr, fields, stats_key, limit, offset) -> int:
     if offset < 0:
         print("Error: --offset must be >= 0", file=sys.stderr)
         return 1
-    rows, rc = _read_rows_or_error(yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path, verbose)
     if rc:
         return rc
     parsed, rc = _parse_filter_or_error(filter_expr)
@@ -270,7 +276,7 @@ def cmd_save(base, save_path, verbose) -> int:
     except (OSError, yaml_io.YamlValidationError) as e:
         print(f"Error: {e}", file=sys.stderr)
         return 1
-    rows, rc = _read_rows_or_error(yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path, verbose)
     if rc:
         return rc
     # an overwrite must name a non-blank record of the store AS LOADED
@@ -332,7 +338,7 @@ def _write_embeddings(rows, emb_path: str, yaml_path: str) -> int:
 def cmd_reindex(base, verbose) -> int:
     yaml_path, emb_path = _db_paths(base)
     _hint_native_migration(verbose, yaml_path)
-    rows, rc = _read_rows_or_error(yaml_path)
+    rows, rc = _read_rows_or_error(yaml_path, verbose)
     if rc:
         return rc
     kept = yaml_io.compact_records(rows)
@@ -559,7 +565,7 @@ def main(argv: list[str] | None = None) -> int:
             return rc
         return cmd_analyze(
             base, parsed["filter_expr"], parsed["fields"], parsed["stats_key"],
-            parsed["limit"], parsed["offset"],
+            parsed["limit"], parsed["offset"], verbose,
         )
     print(f"Error: unknown command '{verb}'", file=sys.stderr)
     print_help()

@@ -64,6 +64,9 @@ def split_metadata(
             scalars[key] = str(v)
         else:
             scalars[key] = str(v)
+            # a later key that prints the same (7, then '7') replaces
+            # an earlier one's list, as str_keys replaces its value
+            lists.pop(key, None)
     return scalars, tags, lists
 
 

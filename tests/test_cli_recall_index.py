@@ -135,4 +135,7 @@ def test_verbose_recall_names_its_embedding_source(spark, tmp_path):
             rf"recall: searched {n} records on the driver in \d+\.\d\d s",
             notes[0],
         ), notes
-        assert f"loaded {n} records from {base}.yaml" in err.splitlines()
+        assert re.search(
+            rf"^parse: read {n} records from {re.escape(base)}\.yaml in ",
+            err, re.M,
+        ), err

@@ -253,6 +253,7 @@ _KEYED_METADATAS = [
     {"7": "str key"},
     {7: 3},
     {7: [1, "x"]},
+    {7: ["x"], "7": "y"},
     {"a": None},
     {"a": None, "b": 1},
     {"a": "None"},
@@ -264,6 +265,7 @@ _KEYED_FILTERS = [
     "'7': str key",
     "7: {$gte: 2}",
     "7: {$contains: x}",
+    "7: y",
     "a: null",
     "a: None",
     "a: {$ne: null}",
